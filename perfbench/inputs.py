@@ -8,8 +8,9 @@ pyarrow instead of inside Spark, because ``generate_tokens`` hashes every
 token element in the JVM, which costs more per seed than a benchmark run
 can spend on preparation.
 
-A cache entry is reused only when its completion marker exists and the
-parquet row count matches.
+A cache entry holds one seed's table, its oracle and, for a resuming
+workload, the seed ledger. It is reused only when its completion marker
+exists and the parquet row count matches.
 """
 
 from __future__ import annotations
@@ -37,6 +38,7 @@ from workloads import N_BUCKETS, RESUME_SPLIT, SUITE
 N_FILES = 8
 CACHE_KEEP = 3
 DONE = "_DONE"
+SEED_LEDGER = "seed_ledger"
 
 SCHEMA = pa.schema(
     [
@@ -105,17 +107,20 @@ def dir_bytes(path: Path) -> int:
 
 @dataclass
 class Inputs:
-    """One seed's files: ``table`` is what the workload validates."""
+    """One seed's files: ``table`` is what the workload validates, and
+    ``seed_ledger`` the ledger a resuming workload starts from."""
 
     table: Path
     oracle: dict
+    seed_ledger: Path | None = None
 
 
-def _entry_ok(entry: Path, n_rows: int, table: str) -> bool:
+def _entry_ok(entry: Path, n_rows: int, table: str, resume: bool) -> bool:
     return (
         (entry / DONE).exists()
         and (entry / table / "_SUCCESS").exists()
         and parquet_rows(entry / table) == n_rows
+        and (not resume or (entry / SEED_LEDGER).is_dir())
     )
 
 
@@ -132,13 +137,14 @@ def _evict(cache: Path, keep: Path) -> None:
 def prepare(cache: Path, workload, n_rows: int, seed: int, spark_factory) -> Inputs:
     """Return the workload's inputs for ``seed``, building them when the
     cache has no complete entry. ``spark_factory()`` is called only when
-    the bucket-partitioned layout must be written."""
+    the bucket-partitioned layout or the seed ledger must be written."""
     from oracle import build_oracle
 
     kind = "dirty" if workload.plant else "clean"
+    resume = workload.ledger == "resume"
     entry = cache / f"{kind}-{workload.layout}-{n_rows}-s{seed}"
     table = "bucketed" if workload.layout == "bucketed" else "flat"
-    if not _entry_ok(entry, n_rows, table):
+    if not _entry_ok(entry, n_rows, table, resume):
         shutil.rmtree(entry, ignore_errors=True)
         cache.mkdir(parents=True, exist_ok=True)
         _evict(cache, entry)
@@ -147,9 +153,15 @@ def prepare(cache: Path, workload, n_rows: int, seed: int, spark_factory) -> Inp
         if workload.layout == "bucketed":
             _write_bucketed(spark_factory(), entry / "flat", entry / "bucketed")
             shutil.rmtree(entry / "flat")
+        if resume:
+            write_seed_ledger(spark_factory(), entry / table, entry / SEED_LEDGER)
         (entry / DONE).touch()
     os.utime(entry)
-    return Inputs(entry / table, json.loads((entry / "oracle.json").read_text()))
+    return Inputs(
+        entry / table,
+        json.loads((entry / "oracle.json").read_text()),
+        entry / SEED_LEDGER if resume else None,
+    )
 
 
 def _write_bucketed(spark, flat: Path, out: Path) -> None:

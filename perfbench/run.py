@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Layered benchmark of ``kglids_spark.operators.validate.validate``.
 
-    python3 perfbench/run.py --workload clean_gate --seed 1 --seconds 10 --trace 0
+    python3 perfbench/run.py --workload clean_gate --seed 1 --seconds 11 --trace 0
 
 Run from anywhere inside a checkout of the repository; everything the
 run writes goes under ``.perfbench_work/`` at the checkout root.
@@ -13,9 +13,9 @@ defines every metric. The last line of stdout is one JSON object:
 
 A run: prepare the seed's inputs and oracle (cached per seed), start a
 priming session (JVM launch, and the Spark part of input preparation),
-then ``ROUNDS`` set-ups, each a fresh SparkContext and one warm-up pass,
+then ``ROUNDS`` set-ups, each a fresh SparkContext and its first pass,
 and timed passes for ``seconds`` in the last session. Every pass,
-warm-up included, is checked against the oracle.
+untimed ones included, is checked against the oracle.
 """
 
 from __future__ import annotations
@@ -39,17 +39,18 @@ ROUNDS = 2
 LAYER_REPS = 3
 MB = 1e6
 T0 = time.perf_counter()
-SEED_LEDGER = WORK / "seed_ledger"
 
 
 def host_settings() -> tuple[int, int]:
-    """(local[N] cores, driver heap MiB) sized to this host. N leaves one
-    core to the Spark driver, the Python workers and GC, at most 3: on a
-    4-core host local[4] measured a run-to-run spread five times that
-    of local[3] at the same median. The heap is a sixth of physical
-    memory within [1, 3] GiB (the package default of 16g can exceed a
-    small host's memory)."""
-    cpus = max(1, min(3, len(os.sched_getaffinity(0)) - 1))
+    """(local[N] cores, driver heap MiB) sized to this host. N is half the
+    cores, at most 2; the rest go to the Spark driver thread, the JIT
+    compiler, GC and the Python workers. On a 4-core shared host local[4]
+    measured a run-to-run spread five times that of local[3], and
+    local[2] passes were no slower than local[3] ones while its first
+    pass was faster. The heap is a sixth of physical memory within
+    [1, 3] GiB (the package default of 16g can exceed a small host's
+    memory)."""
+    cpus = max(1, min(2, len(os.sched_getaffinity(0)) // 2))
     try:
         with open("/proc/meminfo") as f:
             total_kb = int(next(line for line in f if line.startswith("MemTotal")).split()[1])
@@ -60,7 +61,8 @@ def host_settings() -> tuple[int, int]:
 
 def configure_env(heap_mb: int) -> None:
     """Must run before pyspark starts a JVM. Python workers need the
-    repository root on PYTHONPATH to unpickle kglids_spark functions."""
+    repository root on PYTHONPATH to unpickle kglids_spark functions;
+    cputime.py needs the JVM's compiler threads to live as long as the JVM."""
     tmp = WORK / "tmp"
     tmp.mkdir(parents=True, exist_ok=True)
     os.environ["SPARK_GRAFT_DRIVER_MEM"] = f"{heap_mb}m"
@@ -71,7 +73,7 @@ def configure_env(heap_mb: int) -> None:
     os.environ["TMPDIR"] = str(tmp)
     os.environ["JAVA_TOOL_OPTIONS"] = " ".join(
         p for p in (os.environ.get("JAVA_TOOL_OPTIONS"), f"-Djava.io.tmpdir={tmp}",
-                    "-XX:-UsePerfData") if p
+                    "-XX:-UsePerfData", "-XX:-UseDynamicNumberOfCompilerThreads") if p
     )
     os.environ["PYSPARK_PYTHON"] = sys.executable
     tempfile.tempdir = None
@@ -117,6 +119,7 @@ class Pass:
     ledger_bytes: int
     span: object | None = None  # tracing.Span, traced passes only
     error: str | None = None
+    cpu_s: float | None = None
 
     @property
     def ok(self) -> bool:
@@ -128,6 +131,7 @@ def run_pass(spark, wl, inputs, tracer=None) -> Pass:
     and violations are materialized, then checked against the oracle."""
     from contextlib import nullcontext
 
+    from cputime import cpu_seconds
     from inputs import dir_bytes, restore_ledger
     from kglids_spark.operators.validate import validate
     from kglids_spark.sources.tables import TableStore
@@ -139,7 +143,7 @@ def run_pass(spark, wl, inputs, tracer=None) -> Pass:
     shutil.rmtree(ledger_dir, ignore_errors=True)
     ledger, before = None, 0
     if wl.ledger == "resume":
-        restore_ledger(SEED_LEDGER, ledger_dir)
+        restore_ledger(inputs.seed_ledger, ledger_dir)
         before = dir_bytes(ledger_dir)
     if wl.ledger:
         ledger = (TracedTableStore(spark, str(ledger_dir), tracer) if tracer
@@ -147,11 +151,12 @@ def run_pass(spark, wl, inputs, tracer=None) -> Pass:
     df = spark.read.parquet(str(inputs.table))
     try:
         with tracer.span("validate") if tracer else nullcontext() as span:
-            t0 = time.perf_counter()
+            c0, t0 = cpu_seconds(), time.perf_counter()
             r = validate(df, SUITE, n_buckets=N_BUCKETS, ledger=ledger)
             r.verdicts.count()
             r.violations.count()
             seconds = time.perf_counter() - t0
+            cpu_s = cpu_seconds() - c0
         chk = check(r, inputs.oracle)
     except Exception as exc:  # a failed pass is counted, and the run goes on
         traceback.print_exc()
@@ -160,7 +165,7 @@ def run_pass(spark, wl, inputs, tracer=None) -> Pass:
     shutil.rmtree(ledger_dir, ignore_errors=True)
     for problem in chk.problems:
         print(f"oracle mismatch: {problem}", file=sys.stderr)
-    return Pass(seconds, chk, written, span)
+    return Pass(seconds, chk, written, span, cpu_s=cpu_s)
 
 
 def timed_passes(spark, wl, inputs, seconds: float, tracer=None) -> list[Pass]:
@@ -180,16 +185,10 @@ def median(values):
     return statistics.median(values) if values else None
 
 
-def warm_up(spark, wl, inputs) -> list[Pass]:
-    """The first ``validate()`` of a session. On ``resume_half`` it is the
-    interrupted run whose ledger every later pass of the session resumes
-    from; elsewhere it is an ordinary, checked pass."""
-    from inputs import write_seed_ledger
-
-    if wl.ledger == "resume":
-        write_seed_ledger(spark, inputs.table, SEED_LEDGER)
-        return []
-    return [run_pass(spark, wl, inputs)]
+def least(values):
+    """The smallest value: of the few passes a run fits, the one a shared
+    host's load (which only ever adds) disturbed least."""
+    return min((v for v in values if v is not None), default=None)
 
 
 def end_to_end(wl, inputs, cpus, seconds) -> tuple[list[Pass], dict]:
@@ -197,20 +196,21 @@ def end_to_end(wl, inputs, cpus, seconds) -> tuple[list[Pass], dict]:
     for k in range(ROUNDS):
         t0 = time.perf_counter()
         spark = start_spark(cpus)
-        passes += warm_up(spark, wl, inputs)
+        passes.append(run_pass(spark, wl, inputs))
         setups.append(time.perf_counter() - t0)
         log(f"set-up {setups[-1]:.2f}s")
         if k < ROUNDS - 1:
             spark.stop()
     timed = timed_passes(spark, wl, inputs, seconds)
-    log(f"passes {[round(p.seconds or 0, 2) for p in timed]}")
     spark.stop()
     passes += timed
-    validate_s = median(p.seconds for p in timed)
+    cpu_s = least(p.cpu_s for p in timed)
+    log(f"passes wall {[round(p.seconds or 0, 2) for p in timed]} "
+        f"cpu {[round(p.cpu_s or 0, 2) for p in timed]}")
     ok = [p for p in passes if p.ok]
     return passes, {
-        "validate_s": (validate_s, "s"),
-        "seq_per_s": (inputs.oracle["n_rows"] / validate_s if validate_s else None, "1/s"),
+        "validate_cpu_s": (cpu_s, "s"),
+        "seq_per_cpu_s": (inputs.oracle["n_rows"] / cpu_s if cpu_s else None, "1/s"),
         "setup_s": (median(setups), "s"),
         "ok_rate": (len(ok) / len(passes), "ratio"),
         "hll_rel_err": (median(p.check.hll_rel_err for p in ok), "ratio"),
@@ -235,7 +235,7 @@ def per_layer(wl, inputs, cpus, seconds, session_start_s) -> tuple[list[Pass], d
     # traced one sits between two untraced ones
     for traced_round in (False, True, False):
         spark = start_spark(cpus, event_dir if traced_round else None)
-        warm += warm_up(spark, wl, inputs)
+        warm.append(run_pass(spark, wl, inputs))
         if not traced_round:
             untraced += timed_passes(spark, wl, inputs, seconds / 3)
             spark.stop()
@@ -267,8 +267,8 @@ def per_layer(wl, inputs, cpus, seconds, session_start_s) -> tuple[list[Pass], d
                 total += c.wall - covered(maps, c.start, c.end)
         return total
 
-    traced_s = median(p.seconds for p in traced)
-    untraced_s = median(p.seconds for p in untraced)
+    traced_s = least(p.seconds for p in traced)
+    untraced_s = least(p.seconds for p in untraced)
     scan_s = wall("sources.scan")
     input_rows = per_pass(lambda s, t: t.input_rows)
     m = {
@@ -311,6 +311,7 @@ def per_layer(wl, inputs, cpus, seconds, session_start_s) -> tuple[list[Pass], d
         "validate.input_rows": (input_rows, "count"),
         "validate.scan_amplification": (input_rows / inputs.oracle["n_rows"], "ratio"),
         "validate.cache_peak_mb": (per_pass(lambda s, t: t.cache_peak_bytes / MB), "MB"),
+        "validate.wall_s": (untraced_s, "s"),
         "validate.driver_s": (per_pass(
             lambda s, t: s.wall - covered(t.job_intervals, s.start, s.end)), "s"),
         "trace_overhead": (traced_s / untraced_s, "ratio"),

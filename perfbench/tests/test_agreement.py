@@ -19,7 +19,6 @@ N_ROWS = 25_000
 @pytest.fixture
 def work(tmp_path, monkeypatch):
     monkeypatch.setattr(run, "WORK", tmp_path)
-    monkeypatch.setattr(run, "SEED_LEDGER", tmp_path / "seed_ledger")
     return tmp_path
 
 
@@ -34,7 +33,7 @@ def test_pass_agrees_with_oracle(spark, work, name):
     else:
         assert not any(counts.values())
 
-    passes = run.warm_up(spark, wl, inputs) + [run.run_pass(spark, wl, inputs)]
+    passes = [run.run_pass(spark, wl, inputs) for _ in range(2)]
     for p in passes:
         assert p.ok, p.error or p.check.problems
     assert (passes[-1].ledger_bytes > 0) == (wl.ledger is not None)
