@@ -37,12 +37,19 @@ class Constraint:
         return f"{self.cid}:{self.kind}:{self.column}:{items}"
 
 
+# Format of the sketch bytes in bucket_stats rows. It leads the suite
+# signature, so a ledger holding another format (the earlier pure-numpy
+# KLL) never resumes or merges into a run of this one.
+SKETCH_FORMAT = "sketches=datasketches-kll-doubles"
+
+
 def constraint_set_hash(constraints: list[Constraint]) -> str:
-    """Stable hash of the constraint suite — part of checkpoint lineage
-    so a resumed run refuses to merge sketches from a different suite."""
+    """Stable hash of the sketch format and the constraint suite — part
+    of checkpoint lineage so a resumed run refuses to merge sketches
+    from a different suite or format."""
     import hashlib
 
-    sig = "|".join(sorted(c.signature() for c in constraints))
+    sig = "|".join([SKETCH_FORMAT, *sorted(c.signature() for c in constraints)])
     return hashlib.md5(sig.encode()).hexdigest()
 
 

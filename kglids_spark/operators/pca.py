@@ -12,9 +12,8 @@ missing linear-algebra layer, Spark-first.
 Scale shape (the only one that survives 10^12 rows):
 - the sufficient statistics (n, sum vector, sum of outer products)
   are MAP-SIDE per-partition numpy folds over Arrow batches
-  (mapInPandas), emitting ONE (d + d^2)-float row per partition — the
-  arrow_stats two-phase collector discipline. The driver combines
-  <= n_partitions rows; the corpus never shuffles.
+  (mapInPandas), emitting ONE (d + d^2)-float row per partition. The
+  driver combines <= n_partitions rows; the corpus never shuffles.
 - the eigendecomposition is a d x d driver-side numpy step (the model
   is dictionary-sized; d <= ~2000 keeps the partial rows < ~32 MB);
 - projection/whitening broadcasts the (k x d) model inside an

@@ -10,9 +10,10 @@ become transactional appends of mergeable sketch rows.
 Scale design (10^12 rows, 1000 executors):
 - ONE main scan per run computes, per logical bucket: row count, every
   row-level violation count, an HLL++ sketch of doc_id
-  (hll_sketch_agg — binary, mergeable), and an exact fixed-width
-  histogram of the drift column. All are algebraic aggregates with
-  map-side partials; the shuffle moves only n_buckets tiny rows.
+  (hll_sketch_agg — binary, mergeable), an exact fixed-width histogram
+  of the drift column, and a KLL quantile sketch with min/max of the
+  KLL column (kll_sketch_agg_double). All are JVM aggregates with
+  map-side partials; the shuffle moves only n_buckets small rows.
 - Uniqueness adds the one unavoidable key shuffle (groupBy doc_id),
   bucket-local because buckets hash the same key.
 - Resume: completed bucket ids are read from the ledger; on an Iceberg
@@ -28,11 +29,14 @@ Scale design (10^12 rows, 1000 executors):
 from __future__ import annotations
 
 import json
+import logging
 import math
+import struct
 import time
 import uuid
 from dataclasses import dataclass
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -58,9 +62,13 @@ GLOBAL_BUCKET = -1  # verdict rows for table-level constraints
 # Above this bucket count the merged-sketch collect switches from the
 # single-action global aggregate to a two-level aggregation, so no
 # single task ever materializes all buckets (VERDICT r2 "What's wrong
-# #2"). At or below it, one final task holding n_buckets × ~5 KB sketch
-# rows (≤ ~5 MB at 1024) is cheaper than an extra job.
+# #2"). At or below it, one final task holding n_buckets × ~3 KB sketch
+# rows (≤ ~3 MB at 1024) is cheaper than an extra job.
 MERGE_COLLECT_MAX = 1024
+
+_KLL_FAMILY = 15  # DataSketches family id of a KLL sketch
+
+log = logging.getLogger(__name__)
 
 
 @dataclass
@@ -87,11 +95,11 @@ def _stats_pass(
     the persisted (bucket, key, count>1) frame shared with violation
     extraction so the uniqueness shuffle runs exactly once.
 
-    ``kll_col``: also attach a mergeable KLL quantile sketch of that
-    column per bucket (north-star stats-collector mechanism:
-    groupBy(bucket).applyInPandas over Arrow batches — the one
-    statistic JVM aggregates can't express mergeably). Sketch bytes
-    ride the same bucket_stats row, so resume/merge semantics are
+    ``kll_col``: also attach min, max and a KLL quantile sketch
+    (Spark's native ``kll_sketch_agg_double``, k=200) of that column,
+    cast with try_cast so a non-numeric value counts as NULL. They are
+    aggregates of the same groupBy as the HLL sketch, and the sketch
+    bytes ride the same bucket_stats row, so resume semantics are
     identical to the histogram and HLL sketches."""
     viol_sums = [
         F.sum(C.violation_expr(c, df_b).cast("long")).alias(f"v_{i}")
@@ -99,6 +107,13 @@ def _stats_pass(
     ]
     aggs = [F.count(F.lit(1)).alias("n_rows"), F.hll_sketch_agg(F.col(key)).alias("hll_key")]
     aggs += viol_sums
+    if kll_col is not None:
+        v = F.col(kll_col).try_cast("double")
+        aggs += [
+            F.min(v).alias("v_min"),
+            F.max(v).alias("v_max"),
+            F.kll_sketch_agg_double(v).alias("kll"),
+        ]
     if drift_spec is not None:
         aggs.append(D.histogram_array_expr(drift_spec).alias("hist"))
     # metric constraints: mergeable per-bucket sums — the cross-bucket
@@ -150,25 +165,65 @@ def _stats_pass(
         ).drop(f"u_{uc.cid}")
     if drift_spec is None:
         stats = stats.withColumn("hist", F.lit(None).cast("array<long>"))
-    if kll_col is not None:
-        from kglids_spark.operators.arrow_stats import bucket_sketches_prebucketed
-
-        kll = bucket_sketches_prebucketed(
-            df_b.select(BUCKET_COL, kll_col), kll_col
-        ).select(
-            BUCKET_COL,
-            F.col("min_value").alias("v_min"),
-            F.col("max_value").alias("v_max"),
-            "kll",
-        )
-        stats = stats.join(kll, BUCKET_COL, "left")
-    else:
+    if kll_col is None:
         stats = (
             stats.withColumn("v_min", F.lit(None).cast("double"))
             .withColumn("v_max", F.lit(None).cast("double"))
             .withColumn("kll", F.lit(None).cast("binary"))
         )
     return stats
+
+
+def _kll_items(blob: bytes) -> tuple[np.ndarray, np.ndarray]:
+    """(items, weights) of one DataSketches compact KLL-doubles sketch,
+    the bytes ``kll_sketch_agg_double`` returns. An 8-byte header
+    (preamble ints, serial version, family id, flags, k, m) is the
+    whole empty form, and the single-item form adds one double. The
+    full form continues to a 20-byte preamble (n: int64, min k: uint16,
+    level count L: uint8, pad), then L int32 level offsets (the top
+    level ends with the blob), min, max, and the retained items, level
+    0 first. A level-i item stands for 2^i rows. Raises ValueError on
+    bytes that are not such a sketch."""
+    if len(blob) < 8 or blob[2] != _KLL_FAMILY:
+        raise ValueError("not a DataSketches KLL sketch")
+    flags = blob[3]
+    if flags & 1 and len(blob) == 8:  # empty
+        return np.empty(0), np.empty(0, np.int64)
+    if flags & 4 and len(blob) == 16:  # single item
+        return np.frombuffer(blob, "<f8", 1, 8), np.ones(1, np.int64)
+    if flags & 5 or len(blob) < 20 or blob[:2] != b"\x05\x01":
+        raise ValueError("malformed KLL-doubles sketch header")
+    n, n_levels = struct.unpack_from("<q2xB", blob, 8)
+    data = 20 + 4 * n_levels + 16
+    n_items, rem = divmod(len(blob) - data, 8)
+    if n_levels == 0 or n_items < 0 or rem:
+        raise ValueError("KLL-doubles sketch length does not match its levels")
+    offsets = np.frombuffer(blob, "<i4", n_levels, 20)
+    sizes = np.diff(np.append(offsets - offsets[0], n_items))
+    level_weight = np.left_shift(1, np.arange(n_levels, dtype=np.int64))
+    if (sizes < 0).any() or sizes @ level_weight != n:
+        raise ValueError("KLL-doubles sketch levels do not add up to its n")
+    return np.frombuffer(blob, "<f8", n_items, data), np.repeat(level_weight, sizes)
+
+
+def _kll_union_quantiles(blobs: list[bytes], qs: list[float]) -> list[float | None]:
+    """Quantiles of the union of per-bucket KLL sketches, computed on
+    the driver: every retained item of every sketch with its weight,
+    pooled and sorted; the q-quantile is the smallest item whose
+    cumulative weight reaches ceil(q·n) (DataSketches' inclusive rule,
+    so one blob reproduces ``kll_sketch_get_quantile_double`` for
+    0 < q < 1). DataSketches' own merge is randomized; this union is a
+    pure function of the set of blobs, so a resumed run and both merge
+    paths report bit-identical quantiles. None when every sketch is
+    empty."""
+    parts = [_kll_items(b) for b in blobs]
+    items = np.concatenate([np.empty(0)] + [p[0] for p in parts])
+    if items.size == 0:
+        return [None for _ in qs]
+    order = np.argsort(items, kind="stable")
+    items = items[order]
+    cum = np.cumsum(np.concatenate([p[1] for p in parts])[order])
+    return [float(items[np.searchsorted(cum, math.ceil(q * cum[-1]))]) for q in qs]
 
 
 def _dedupe_earliest(stats: DataFrame) -> DataFrame:
@@ -373,13 +428,18 @@ def _validate_impl(
         # On Iceberg: bucket partition pruning turns this into file skips.
         remaining_df = df_b.filter(~F.col(BUCKET_COL).isin(list(completed)))
 
+    if kll_col == "auto":
+        # default: sketch the drift column (n_tok in the north-star
+        # suite) so quantiles ship with every run's bucket_stats
+        kll_col = drift_spec.column if drift_spec is not None else None
+
     # ---- slim projection: decode wide arrays once ----------------------
     # (size(tokens) is materialized here; stats + violation extraction
     # both read the persisted slim frame, so the heavy parquet scan of
     # the token arrays happens exactly once per run)
     slim_df, row_cs = _slim_projection(
         remaining_df, row_cs, key, drift_spec, [uc.column for uc in unique_cs],
-        metric_cols,
+        metric_cols if kll_col is None else [*metric_cols, kll_col],
     )
     if extract_violation_rows:
         slim_df = slim_df.persist()
@@ -395,10 +455,6 @@ def _validate_impl(
             .filter(F.col("count") > 1)
             .persist()
         )
-    if kll_col == "auto":
-        # default: sketch the drift column (n_tok in the north-star
-        # suite) so quantiles ship with every run's bucket_stats
-        kll_col = drift_spec.column if drift_spec is not None else None
     new_stats = _stats_pass(
         slim_df, row_cs, unique_cs, drift_spec, key, dup_counts, kll_col=kll_col,
         metric_cols=metric_cols,
@@ -524,20 +580,18 @@ def _validate_impl(
         verdict_rows.append((GLOBAL_BUCKET, c.cid, n_rows_total, nv, bool(ok)))
 
     sketch_metrics = {}
-    if kll_col is not None and merged_rows:
-        from kglids_spark.operators.sketches import merge_serialized
-
-        blobs = [bytes(r.kll) for r in merged_rows if getattr(r, "kll", None) is not None]
-        if blobs:
-            q25, q50, q75 = merge_serialized(blobs).quantiles([0.25, 0.5, 0.75])
-            mins = [r.v_min for r in merged_rows if r.v_min is not None]
-            maxs = [r.v_max for r in merged_rows if r.v_max is not None]
-            sketch_metrics = {
-                f"{kll_col}_min": min(mins) if mins else None,
-                f"{kll_col}_max": max(maxs) if maxs else None,
-                f"{kll_col}_median_kll": q50,
-                f"{kll_col}_iqr_kll": (q75 - q25) if q25 is not None else None,
-            }
+    if kll_col is not None:
+        q25, q50, q75 = _kll_union_quantiles(
+            [bytes(r.kll) for r in merged_rows if r.kll is not None], [0.25, 0.5, 0.75]
+        )
+        mins = [r.v_min for r in merged_rows if r.v_min is not None]
+        maxs = [r.v_max for r in merged_rows if r.v_max is not None]
+        sketch_metrics = {
+            f"{kll_col}_min": min(mins) if mins else None,
+            f"{kll_col}_max": max(maxs) if maxs else None,
+            f"{kll_col}_median_kll": q50,
+            f"{kll_col}_iqr_kll": (q75 - q25) if q25 is not None else None,
+        }
 
     metric_values: dict = {}
     if metric_cs:
@@ -763,7 +817,7 @@ def _validate_impl(
             "master": sc.master,
         }
     except Exception:  # pragma: no cover
-        pass
+        log.warning("run %s: executor metrics unavailable", run_id, exc_info=True)
     metrics = {
         "run_id": run_id,
         "constraint_hash": chash,

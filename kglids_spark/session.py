@@ -47,18 +47,39 @@ def scoped_sql_conf(spark: SparkSession, confs: dict[str, str]):
                 spark.conf.set(k, v)
 
 
+_MAX_DEFAULT_HEAP_MB = 16 * 1024
+
+
+def _default_driver_mem(meminfo: str = "/proc/meminfo") -> str:
+    """The driver heap when SPARK_GRAFT_DRIVER_MEM is unset: half of
+    physical memory, at most 16 GiB (16g when ``meminfo`` is
+    unreadable). -Xms pins the whole heap, so a fixed 16g got a test
+    JVM OOM-killed at 13 GB RSS on a 15 GB host."""
+    try:
+        with open(meminfo) as f:
+            total_kb = int(next(line for line in f if line.startswith("MemTotal:")).split()[1])
+    except (OSError, StopIteration, IndexError, ValueError):
+        return f"{_MAX_DEFAULT_HEAP_MB}m"
+    return f"{min(_MAX_DEFAULT_HEAP_MB, total_kb // 2048)}m"
+
+
+def _driver_mem() -> str:
+    return os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem()
+
+
 def _mem_mb() -> int:
-    """Parse SPARK_GRAFT_DRIVER_MEM as a JVM-style size string into MiB.
+    """Parse the driver heap (``_driver_mem``) as a JVM-style size
+    string into MiB.
 
     Unit-aware (``512m`` is 512 MiB, not 512 GiB): the -Xms/-Xmn GC
     flags derived from this must never exceed the -Xmx that Spark sets
     from the same string, or the JVM refuses to start. A bare number is
     MiB (Spark's default unit for memory confs); unparseable values
     fall back to 16g."""
-    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g").strip().lower()
+    mem = _driver_mem().strip().lower()
     m = re.fullmatch(r"(\d+)\s*([kmgt]?)b?", mem)
     if not m:
-        return 16 * 1024
+        return _MAX_DEFAULT_HEAP_MB
     n, unit = int(m.group(1)), m.group(2)
     mb = {
         "k": n // 1024,
@@ -109,7 +130,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", _driver_mem())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # GC profile for scan-heavy validation (measured on the 15 GB

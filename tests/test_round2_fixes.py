@@ -1,6 +1,5 @@
 """Round-2 regression tests: the ADVICE/VERDICT r1 defect fixes.
 
-- arrow_stats.make_partials survives zero-row Arrow batches
 - pipelines.search_classifier matches (call_name, module) pairwise
 - profiler.profile_table(exact=True) never mixes count_distinct with
   exact percentile in one aggregation (two lean scans)
@@ -12,33 +11,15 @@
 
 import time
 
-import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
 from kglids_spark.operators import constraints as C
-from kglids_spark.operators.arrow_stats import make_partials
 from kglids_spark.operators.pipelines import search_classifier
 from kglids_spark.operators.profiler import profile_table
 from kglids_spark.operators.similarity import k_hop_paths
 from kglids_spark.operators.validate import GLOBAL_BUCKET, validate
-from kglids_spark.plans.buckets import BUCKET_COL
 from kglids_spark.sources.tokens import generate_tokens
-
-
-def test_partials_zero_row_batches():
-    """A mapInPandas iterator can legally yield only zero-row Arrow
-    batches (e.g. a fully filtered partition): the collector must yield
-    nothing rather than IndexError on the empty concatenation."""
-    fn = make_partials("v")
-    empty = pd.DataFrame({BUCKET_COL: pd.Series([], dtype="int64"), "v": []})
-    assert list(fn(iter([empty]))) == []
-    assert list(fn(iter([empty, empty]))) == []
-    # and a mix of empty + non-empty batches still aggregates correctly
-    some = pd.DataFrame({BUCKET_COL: [3, 3, 5], "v": [1.0, 2.0, 7.0]})
-    (out,) = list(fn(iter([empty, some, empty])))
-    assert sorted(out["bucket_id"]) == [3, 5]
-    assert out.loc[out.bucket_id == 3, "sum_value"].iloc[0] == 3.0
 
 
 def test_search_classifier_pairwise_match(spark):

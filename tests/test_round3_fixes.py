@@ -42,6 +42,23 @@ def test_mem_mb_parsing(monkeypatch, env_val, expect_mb):
     assert session._mem_mb() == expect_mb
 
 
+def test_default_heap_is_half_of_host_memory_capped(monkeypatch, tmp_path):
+    """Unset SPARK_GRAFT_DRIVER_MEM: the heap is MemTotal/2, at most
+    16 GiB, and 16g when /proc/meminfo cannot be read."""
+    from kglids_spark import session
+
+    info = tmp_path / "meminfo"
+    info.write_text("MemTotal:       15728640 kB\nMemFree:        1024 kB\n")  # 15 GiB
+    assert session._default_driver_mem(str(info)) == "7680m"
+    info.write_text("MemTotal:       67108864 kB\n")  # 64 GiB
+    assert session._default_driver_mem(str(info)) == "16384m"
+    assert session._default_driver_mem(str(tmp_path / "absent")) == "16384m"
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+    assert f"{session._mem_mb()}m" == session._driver_mem() == session._default_driver_mem()
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "3g")
+    assert session._driver_mem() == "3g"
+
+
 def test_gc_opts_never_exceed_heap(monkeypatch):
     """-Xms/-Xmn derived from the driver-mem string must stay inside
     the -Xmx Spark sets from the same string."""
@@ -118,11 +135,14 @@ def test_tablestore_roundtrips_bucket_count(spark, tokens_df, tmp_path):
 # tiered merge collect (VERDICT r2 "What's wrong #2")
 
 
-def test_tiered_merge_matches_single_level(spark, tokens_df, monkeypatch):
+def test_tiered_merge_matches_single_level(spark, tokens_df, monkeypatch, tmp_path):
     import kglids_spark.operators.validate as V
 
     suite = C.default_suite(SOURCES)
-    base = validate(tokens_df, suite, n_buckets=N_BUCKETS, extract_violation_rows=False)
+    store = TableStore(spark, str(tmp_path / "tiered_ledger"))
+    base = validate(
+        tokens_df, suite, n_buckets=N_BUCKETS, ledger=store, extract_violation_rows=False
+    )
     monkeypatch.setattr(V, "MERGE_COLLECT_MAX", 4)  # force the tiered path
     tiered = validate(tokens_df, suite, n_buckets=N_BUCKETS, extract_violation_rows=False)
     assert sorted(map(tuple, tiered.verdicts.collect())) == sorted(
@@ -130,6 +150,15 @@ def test_tiered_merge_matches_single_level(spark, tokens_df, monkeypatch):
     )
     assert tiered.metrics["distinct_key_estimate"] == base.metrics["distinct_key_estimate"]
     assert tiered.metrics["rows_validated"] == base.metrics["rows_validated"]
+    # native KLL bytes differ between rebuilds of the same rows, so the
+    # quantiles are compared over the same stored sketches: the tiered
+    # run resumes every bucket of base's ledger
+    resumed = validate(
+        tokens_df, suite, n_buckets=N_BUCKETS, ledger=store, extract_violation_rows=False
+    )
+    assert resumed.metrics["buckets_completed_prior"] == N_BUCKETS
+    for k in ("n_tok_median_kll", "n_tok_iqr_kll"):
+        assert resumed.metrics[k] == base.metrics[k] is not None
 
 
 def test_merge_at_4096_buckets_bounded(spark):

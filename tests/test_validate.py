@@ -209,6 +209,117 @@ def test_kll_merge_stable_across_resume(spark, tokens_df, tmp_path):
     assert again.metrics["n_tok_iqr_kll"] == first.metrics["n_tok_iqr_kll"]
 
 
+def test_kll_decoder_matches_native_quantiles(spark):
+    """The driver-side decoder reads DataSketches' compact KLL-doubles
+    bytes exactly: on a multi-level sketch and on the single-item form
+    it reproduces kll_sketch_get_quantile_double; on the empty form (an
+    all-NULL bucket), where the native call raises, it returns None."""
+    import numpy as np
+
+    from kglids_spark.operators.validate import _kll_items, _kll_union_quantiles
+
+    rng = np.random.default_rng(3)
+    rows = [(0, float(v)) for v in np.round(rng.lognormal(6.0, 1.0, 20000))]
+    rows += [(1, 7.0), (2, None), (2, None)]
+    sketches = (
+        spark.createDataFrame(rows, "b int, v double")
+        .groupBy("b")
+        .agg(F.kll_sketch_agg_double("v").alias("s"))
+        .collect()
+    )
+    blobs = {r.b: bytes(r.s) for r in sketches}
+    # compacted: fewer items than rows, each standing for several rows
+    # (how many levels keep items varies, as DataSketches compacts at random)
+    weights = _kll_items(blobs[0])[1]
+    assert weights.size < 20000 and weights.max() > 1
+    qs = [0.01, 0.25, 0.5, 0.75, 0.99]
+
+    def native(blob):
+        return list(
+            spark.createDataFrame([(blob,)], "s binary")
+            .select(*[F.kll_sketch_get_quantile_double("s", F.lit(q)) for q in qs])
+            .first()
+        )
+
+    assert _kll_union_quantiles([blobs[0]], qs) == native(blobs[0])
+    assert _kll_union_quantiles([blobs[1]], qs) == native(blobs[1]) == [7.0] * len(qs)
+    assert _kll_union_quantiles([blobs[2]], qs) == [None] * len(qs)
+    with pytest.raises(Exception, match="KLL"):
+        native(blobs[2])
+
+
+def test_kll_decoder_rejects_foreign_bytes(spark):
+    """Bytes that are not a KLL-doubles sketch raise instead of being
+    read as one: the earlier pure-numpy KLL layout (k, n, compactions,
+    levels; then per level its length and float64 items) and a native
+    sketch whose length no longer matches its levels."""
+    import struct
+
+    import numpy as np
+
+    from kglids_spark.operators.validate import _kll_items
+
+    numpy_kll = (
+        struct.pack("<iqii", 256, 3, 0, 1)
+        + struct.pack("<i", 3)
+        + np.array([1.0, 2.0, 3.0]).tobytes()
+    )
+    full = bytes(
+        spark.range(1000).agg(F.kll_sketch_agg_double(F.col("id").cast("double"))).first()[0]
+    )
+    assert _kll_items(full)[1].sum() == 1000
+    for bad in (numpy_kll, full[:-8], full + bytes(8), full + bytes(4), full[:12]):
+        with pytest.raises(ValueError):
+            _kll_items(bad)
+
+
+def test_kll_col_all_null_or_non_numeric_gives_none(spark, monkeypatch):
+    """An all-NULL or non-numeric kll_col yields None quantiles and
+    bounds instead of raising (try_cast nulls non-numeric values), and
+    the sketch is a JVM aggregate of the stats pass: no pandas stage in
+    its plan."""
+    import kglids_spark.operators.validate as V
+
+    df = spark.createDataFrame(
+        [(f"d{i}", "web", None) for i in range(50)],
+        "doc_id string, source string, x double",
+    )
+    plans = []
+    stats_pass = V._stats_pass
+
+    def spy(*args, **kwargs):
+        out = stats_pass(*args, **kwargs)
+        plans.append(out._jdf.queryExecution().executedPlan().toString())
+        return out
+
+    monkeypatch.setattr(V, "_stats_pass", spy)
+    for col in ("x", "source"):
+        res = V.validate(
+            df, [C.not_null("doc_id")], n_buckets=4, extract_violation_rows=False, kll_col=col
+        )
+        for stat in ("min", "max", "median_kll", "iqr_kll"):
+            assert res.metrics[f"{col}_{stat}"] is None
+    assert all("kll_sketch_agg" in p and "InPandas" not in p for p in plans)
+
+
+def test_pre_format_tag_ledger_is_not_resumed(spark, tokens_df, tmp_path, monkeypatch):
+    """A ledger row written under the hash formula that predates the
+    sketch-format tag (its KLL bytes are the numpy format) is never
+    resumed or merged."""
+    import hashlib
+
+    suite = [C.not_null("doc_id"), C.drift_ks("n_tok")]
+    old_hash = hashlib.md5("|".join(sorted(c.signature() for c in suite)).encode()).hexdigest()
+    ledger = TableStore(spark, str(tmp_path / "old_ledger"))
+    with monkeypatch.context() as m:
+        m.setattr(C, "constraint_set_hash", lambda cs: old_hash)
+        validate(tokens_df, suite, n_buckets=4, ledger=ledger, extract_violation_rows=False)
+    res = validate(tokens_df, suite, n_buckets=4, ledger=ledger, extract_violation_rows=False)
+    assert res.metrics["constraint_hash"] != old_hash
+    assert res.metrics["buckets_completed_prior"] == 0
+    assert res.metrics["rows_validated"] == tokens_df.count()
+
+
 def test_bucket_partitioned_store_prunes_files(spark, tokens_df, tmp_path):
     """A tokens table written PARTITIONED BY (bucket_id) — the Iceberg
     ``bucket(N, doc_id)`` emulation — must give real file pruning for
