@@ -907,10 +907,12 @@ def dedup_minhash_lsh(spark, sf_dir):
     dedup.minhash_lsh_pairs_md5_oracle_sql(num_perm=8, bands=4, threshold=0.5),
 )
 def dedup_minhash_lsh_md5(spark, sf_dir):
-    """Same MinHash-LSH pipeline with the portable md5 hash — the
-    value-exact oracle twin of dedup_minhash_lsh."""
+    """The dedup_minhash_lsh operator with hasher="md5" — the same
+    pipeline, value-exact against the DuckDB oracle."""
     d = _t(spark, sf_dir, "documents")
-    return dedup.minhash_lsh_pairs_md5(d, num_perm=8, bands=4, threshold=0.5)
+    return dedup.minhash_lsh_pairs(
+        d, num_perm=8, bands=4, threshold=0.5, hasher="md5"
+    )
 
 
 @register("incremental_minhash_dedup")  # xxhash64 signatures: rows-only
@@ -970,10 +972,10 @@ def cross_source_dup_matrix(spark, sf_dir):
     """Cross-source near-dup matrix (dedup.near_dup_group_matrix):
     MinHash-LSH pairs rolled up by the unordered source pair — the
     which-feeds-duplicate-each-other audit a mixture plan consults.
-    Portable md5 variant for the value-exact oracle."""
+    hasher="md5" for the value-exact oracle."""
     d = _t(spark, sf_dir, "documents")
     return dedup.near_dup_group_matrix(
-        d, portable_hash=True, num_perm=8, bands=4, threshold=0.5
+        d, hasher="md5", num_perm=8, bands=4, threshold=0.5
     )
 
 
@@ -985,12 +987,11 @@ def split_leakage_pairs(spark, sf_dir):
     """Cross-split near-dup leakage audit (dedup.split_leakage_pairs):
     MinHash-LSH pairs straddling the deterministic train/val/test
     split — the eval-contamination check run before any corpus
-    release. Portable md5 variant for the value-exact oracle; the
-    xxhash64 production path is lockstep-pinned by
-    tests/test_eda_twins.py."""
+    release. hasher="md5" for the value-exact oracle; the xxhash64
+    production hasher is pinned by tests/test_eda_twins.py."""
     d = _t(spark, sf_dir, "documents")
     return dedup.split_leakage_pairs(
-        d, portable_hash=True, num_perm=8, bands=4, threshold=0.5
+        d, hasher="md5", num_perm=8, bands=4, threshold=0.5
     )
 
 
@@ -1002,10 +1003,10 @@ def dedup_simhash(spark, sf_dir):
 
 @register("dedup_simhash_md5", dedup.simhash_pairs_md5_oracle_sql(max_hamming=3))
 def dedup_simhash_md5(spark, sf_dir):
-    """Portable 16-bit md5 SimHash — the value-exact oracle twin of
-    dedup_simhash."""
+    """The dedup_simhash operator with hasher="md5" (16-bit SimHash) —
+    value-exact against the DuckDB oracle."""
     d = _t(spark, sf_dir, "documents")
-    return dedup.simhash_pairs_md5(d, max_hamming=3)
+    return dedup.simhash_pairs(d, max_hamming=3, hasher="md5")
 
 
 @register(
@@ -1774,10 +1775,12 @@ def doc_fingerprint(spark, sf_dir):
     """,
 )
 def doc_fingerprint_md5(spark, sf_dir):
-    """Portable one-permutation-MinHash fingerprint (min md5 over word
-    3-shingles) — the value-exact oracle twin of doc_fingerprint."""
+    """The doc_fingerprint expression with hasher="md5" (min md5 over
+    word 3-shingles) — value-exact against the DuckDB oracle."""
     d = _t(spark, sf_dir, "documents")
-    return d.select("doc_id", text.fingerprint_md5_expr("text").alias("fingerprint"))
+    return d.select(
+        "doc_id", text.fingerprint_expr("text", hasher="md5").alias("fingerprint")
+    )
 
 
 # =====================================================================
@@ -1838,16 +1841,19 @@ def ann_lsh_topk(spark, sf_dir):
 
 @register(
     "ann_lsh_topk_md5",
-    ann.lsh_knn_join_md5_oracle_sql(k=3, n_planes=8, dim=64, query_pred="vec_id < 5"),
+    ann.lsh_knn_join_oracle_sql(k=3, n_planes=8, dim=64, query_pred="vec_id < 5"),
 )
 def ann_lsh_topk_md5(spark, sf_dir):
-    """LSH kNN with portable md5-derived hyperplanes — the value-exact
-    oracle twin of ann_lsh_topk (bucket join + multiprobe + re-rank)."""
+    """The ann_lsh_topk operator on its bit-reproducible expression
+    path (method="expr"; the hyperplanes are md5-derived literals) —
+    value-exact against the DuckDB oracle (bucket join + multiprobe +
+    re-rank)."""
     e = _t(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
     )
-    return ann.lsh_knn_join_md5(q, e, k=3, n_planes=8, dim=64)
+    out = ann.lsh_knn_join(q, e, k=3, n_planes=8, dim=64, method="expr")
+    return out.select("q_id", "c_id", F.round("cosine", 5).alias("cosine"), "rank")
 
 
 @register(

@@ -211,23 +211,6 @@ def lsh_knn_join(
     return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 
 
-def md5_sign_planes(n_planes: int, dim: int, seed: int = 42) -> list[list[float]]:
-    """Deterministic ±1 hyperplanes: sign(p, d) = +1 iff the first hex
-    digit of md5("lshm:{seed}:{p}:{d}") is even. Reproducible in any
-    engine with an md5 function (or, as here, precomputed and inlined
-    as literals), so the LSH bucketing is portable bit-for-bit."""
-    import hashlib
-
-    planes = []
-    for p in range(n_planes):
-        row = []
-        for d in range(dim):
-            h = hashlib.md5(f"lshm:{seed}:{p}:{d}".encode()).hexdigest()
-            row.append(1.0 if h[0] in "02468ace" else -1.0)
-        planes.append(row)
-    return planes
-
-
 def lsh_bucket_planes_expr(vec_col, planes: list[list[float]]) -> F.Column:
     """Bucket id from explicit hyperplane literals: sign bit per plane,
     each dot product an unrolled codegen-able scalar chain (identical
@@ -241,56 +224,7 @@ def lsh_bucket_planes_expr(vec_col, planes: list[list[float]]) -> F.Column:
     return bucket
 
 
-def lsh_knn_join_md5(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int = 10,
-    n_planes: int = 8,
-    seed: int = 42,
-    dim: int = 64,
-    q_id: str = "q_id",
-    q_vec: str = "q_vec",
-    c_id: str = "vec_id",
-    c_vec: str = "embedding",
-    multiprobe: bool = True,
-) -> DataFrame:
-    """lsh_knn_join with portable md5-derived hyperplanes — same
-    bucket-local join + multiprobe + exact re-rank, reproducible in
-    DuckDB for the exact oracle cross-check. Cosine is rounded to 5dp
-    BEFORE ranking so rank order is FP-portable across engines."""
-    planes = md5_sign_planes(n_planes, dim, seed)
-    cc = corpus.select(
-        F.col(c_id).alias("c_id"),
-        F.col(c_vec).alias("c_vec"),
-        lsh_bucket_planes_expr(c_vec, planes).alias("bucket"),
-    )
-    qb = queries.select(
-        F.col(q_id).alias("q_id"),
-        F.col(q_vec).alias("q_vec"),
-        lsh_bucket_planes_expr(q_vec, planes).alias("b0"),
-    )
-    if multiprobe:
-        probes = F.array(
-            F.col("b0"), *[F.col("b0").bitwiseXOR(F.lit(1 << p)) for p in range(n_planes)]
-        )
-    else:
-        probes = F.array(F.col("b0"))
-    qq = qb.select("q_id", "q_vec", F.explode(probes).alias("bucket"))
-    scored = (
-        qq.join(cc, "bucket")
-        .filter(F.col("q_id") != F.col("c_id"))
-        .select(
-            "q_id",
-            "c_id",
-            F.round(cosine_similarity(F.col("q_vec"), F.col("c_vec")), 5).alias("cosine"),
-        )
-        .distinct()
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.col("c_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
-
-
-def lsh_knn_join_md5_oracle_sql(
+def lsh_knn_join_oracle_sql(
     k: int = 10,
     n_planes: int = 8,
     seed: int = 42,
@@ -298,9 +232,11 @@ def lsh_knn_join_md5_oracle_sql(
     query_pred: str = "vec_id < 5",
     table: str = "embeddings",
 ) -> str:
-    """DuckDB SQL equivalent of lsh_knn_join_md5 (same inlined
-    hyperplane literals, same multiprobe + 5dp-rounded re-rank)."""
-    planes = md5_sign_planes(n_planes, dim, seed)
+    """DuckDB SQL equivalent of lsh_knn_join(method="expr"): the same
+    gaussian_planes literals inlined, the same multiprobe, and the
+    re-rank on the unrounded cosine; only the output cosine is rounded
+    to 5 dp."""
+    planes = gaussian_planes(n_planes, dim, seed)
 
     def bucket_sql(col: str) -> str:
         terms = []
@@ -326,9 +262,9 @@ def lsh_knn_join_md5_oracle_sql(
     probes AS ({probe_selects}),
     scored AS (
       SELECT DISTINCT q.q_id, c.c_id,
-             round(list_cosine_similarity(q.q_vec::DOUBLE[], c.c_vec::DOUBLE[]), 5) AS cosine
+             list_cosine_similarity(q.q_vec::DOUBLE[], c.c_vec::DOUBLE[]) AS cosine
       FROM probes q JOIN corpus c ON q.bucket = c.bucket AND q.q_id != c.c_id)
-    SELECT q_id, c_id, cosine, rank FROM (
+    SELECT q_id, c_id, round(cosine, 5) AS cosine, rank FROM (
       SELECT q_id, c_id, cosine,
              row_number() OVER (PARTITION BY q_id ORDER BY cosine DESC, c_id) AS rank
       FROM scored)

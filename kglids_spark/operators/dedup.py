@@ -11,16 +11,22 @@ training-pipeline use case. Five families, all shuffle-conscious:
                   so hot shingles are pruned by a document-frequency
                   cap before the join (stopword shingles would
                   otherwise quadratically blow up the shuffle).
-- MinHash + LSH:  k independent min-hashes per doc computed with ONE
-                  explode + k min() aggregates (no per-row Python);
-                  signatures sliced into bands, candidates = docs
-                  sharing a (band_idx, band_hash) bucket — the classic
-                  shuffle-light near-dup path at scale.
-- SimHash:        per-token 64-bit hashes, bit-majority via 64 sum
-                  aggregates; near-dups blocked on 16-bit chunks
-                  (Hamming ≤ 3 ⟹ some chunk equal, pigeonhole).
+- MinHash + LSH:  k independent min-hashes per doc computed map-side
+                  as k array_min(transform(shingles, hash)) — no
+                  explode, no shuffle; signatures sliced into bands,
+                  candidates = docs sharing a (band_idx, band_hash)
+                  bucket — the classic shuffle-light near-dup path at
+                  scale.
+- SimHash:        per-token hashes, bit-majority via one sum aggregate
+                  per bit; near-dups blocked on pigeonhole chunks
+                  (Hamming ≤ 3 ⟹ one of 4 chunks equal).
 - embedding:      cosine ≥ threshold near-dup pairs; see ann.py for
                   the blocked/LSH variant.
+
+MinHash, SimHash and their audits take ``hasher``: ``"xxhash64"`` (the
+production path: int64 keys through the shuffle) or ``"md5"`` (the
+same pipeline with a hash every SQL engine has — what the value-exact
+DuckDB oracle rows run). Any other name raises ValueError.
 """
 
 from __future__ import annotations
@@ -320,6 +326,22 @@ def ngram_containment_pairs(
     return finalize(result)
 
 
+def _check_hasher(hasher: str) -> None:
+    if hasher not in ("xxhash64", "md5"):
+        raise ValueError(f"unknown hasher {hasher!r} (use 'xxhash64' or 'md5')")
+
+
+def _perm_hash(hasher: str, seed: int, p: int):
+    """Permutation ``p``'s one-argument shingle hash. Built here, not as
+    a ``lambda x, p=p: ...`` in a loop: F.transform picks its (x) or
+    (x, index) form from the lambda's arity, so a defaulted second
+    parameter would silently turn every permutation into the indexed
+    form."""
+    if hasher == "md5":
+        return lambda x: F.md5(F.concat(F.lit(f"{p}:"), x))
+    return lambda x: F.xxhash64(F.lit(f"{seed}:{p}"), x)
+
+
 def minhash_signatures(
     df: DataFrame,
     text_col: str = "text",
@@ -327,20 +349,26 @@ def minhash_signatures(
     num_perm: int = 64,
     shingle_n: int = 3,
     seed: int = 42,
+    hasher: str = "xxhash64",
 ) -> DataFrame:
-    """(id, sig:array<long>) — num_perm min-hashes per doc, computed
-    entirely MAP-SIDE as ``array_min(transform(shingles, xxhash64))``
-    per permutation over the per-doc shingle array: no explode, no
-    aggregation hash table, no shuffle at all (the earlier
-    explode + num_perm min() aggregates pushed every shingle row
-    through a groupBy). Shingles are int64 hashes
-    (hashed_words_shingles), so each of the num_perm re-hashes runs
-    over an 8-byte input instead of a ~25-char string — measured 1.7×
-    on the signature stage at 500k docs. The shingle array is
+    """(id, sig) — num_perm min-hashes per doc, computed entirely
+    MAP-SIDE as ``array_min(transform(shingles, hash))`` per
+    permutation over the per-doc shingle array: no explode, no
+    aggregation hash table, no shuffle at all. The shingle array is
     materialized in its own projection so the num_perm transforms
     reference an attribute, not num_perm copies of the builder.
-    Duplicate structure (same doc sets bucketed together) is pinned to
-    the md5 string twin by test_minhash_twin_lockstep."""
+
+    ``hasher="xxhash64"`` (production): shingles are int64 hashes
+    (hashed_words_shingles), permutation p hashes ``("{seed}:{p}", x)``
+    and ``sig`` is array<long> — each re-hash runs over an 8-byte input
+    instead of a ~25-char string, measured 1.7× on the signature stage
+    at 500k docs. ``hasher="md5"``: shingles are strings
+    (words_shingles), permutation p is ``md5("{p}:" || shingle)`` and
+    ``sig`` is array<string> — reproducible in any SQL engine
+    (minhash_lsh_pairs_md5_oracle_sql). ``seed`` salts only xxhash64;
+    the md5 inputs are fixed so the oracle SQL needs no seed."""
+    _check_hasher(hasher)
+    shingles = hashed_words_shingles if hasher == "xxhash64" else words_shingles
     # null/too-short text yields a null or empty shingle array -> a
     # NULL signature; xxhash64 SKIPS null inputs, so in the banding
     # stage every all-null signature would share one constant band
@@ -349,14 +377,12 @@ def minhash_signatures(
     # here (the old explode-based path dropped them implicitly).
     docs = (
         df.select(F.col(id_col).alias("id"), split_words(text_col).alias("_ws"))
-        .select("id", hashed_words_shingles(F.col("_ws"), shingle_n).alias("_sh"))
+        .select("id", shingles(F.col("_ws"), shingle_n).alias("_sh"))
         .where(F.col("_sh").isNotNull() & (F.size("_sh") > 0))
     )
     sig = F.array(
         *[
-            F.array_min(
-                F.transform(F.col("_sh"), lambda x: F.xxhash64(F.lit(f"{seed}:{i}"), x))
-            )
+            F.array_min(F.transform(F.col("_sh"), _perm_hash(hasher, seed, i)))
             for i in range(num_perm)
         ]
     )
@@ -372,16 +398,23 @@ def minhash_lsh_pairs(
     shingle_n: int = 3,
     threshold: float = 0.5,
     seed: int = 42,
+    hasher: str = "xxhash64",
 ) -> DataFrame:
     """MinHash-LSH candidate generation + exact-Jaccard-estimate verify.
 
     Docs sharing any of ``bands`` band-hashes become candidates (join on
     (band, band_hash) — LSH turns the O(n²) pair space into bucket-local
     joins). Candidates are verified with the signature-estimated
-    Jaccard (fraction of matching min-hashes) ≥ threshold."""
+    Jaccard (fraction of matching min-hashes) ≥ threshold.
+    ``hasher`` picks every hash in the pipeline (minhash_signatures,
+    _band_bucket_expr): ``xxhash64`` is the production path (8-byte
+    keys through the shuffle), ``md5`` the value-exact twin of
+    minhash_lsh_pairs_md5_oracle_sql."""
     assert num_perm % bands == 0
-    sigs = minhash_signatures(df, text_col, id_col, num_perm, shingle_n, seed).cache()
-    band_cols = _band_bucket_expr(num_perm, bands)
+    sigs = minhash_signatures(
+        df, text_col, id_col, num_perm, shingle_n, seed, hasher
+    ).cache()
+    band_cols = _band_bucket_expr(num_perm, bands, hasher)
     buckets = sigs.select("id", band_cols.alias("b")).select(
         "id", F.col("b.band").alias("band"), F.col("b.bh").alias("bh")
     )
@@ -411,81 +444,6 @@ def minhash_lsh_pairs(
     )
 
 
-def minhash_lsh_pairs_md5(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_perm: int = 8,
-    bands: int = 4,
-    shingle_n: int = 3,
-    threshold: float = 0.5,
-) -> DataFrame:
-    """Portable-hash MinHash-LSH: identical pipeline to
-    ``minhash_lsh_pairs`` but every hash is ``md5`` (a cross-engine
-    standard), so the whole operator is reproducible bit-for-bit in any
-    SQL engine — used for the exact DuckDB oracle cross-check. The
-    xxhash64 variant remains the production path (8 bytes vs 32-char
-    hex strings through the shuffle)."""
-    assert num_perm % bands == 0
-    rows_per_band = num_perm // bands
-    # map-side per-doc min-hashes over the shingle array (same strategy
-    # as the production minhash_signatures — no explode, no shuffle)
-    docs = df.select(
-        F.col(id_col).alias("id"), split_words(text_col).alias("_ws")
-    ).select("id", words_shingles(F.col("_ws"), shingle_n).alias("_sh"))
-    sigs = docs.select(
-        "id",
-        *[
-            F.array_min(
-                F.transform(
-                    F.col("_sh"), lambda x: F.md5(F.concat(F.lit(f"{p}:"), x))
-                )
-            ).alias(f"h{p}")
-            for p in range(num_perm)
-        ],
-    ).cache()
-    band_cols = F.explode(
-        F.array(
-            *[
-                F.struct(
-                    F.lit(b).alias("band"),
-                    F.md5(
-                        F.concat(*[F.col(f"h{b * rows_per_band + j}") for j in range(rows_per_band)])
-                    ).alias("bh"),
-                )
-                for b in range(bands)
-            ]
-        )
-    )
-    buckets = sigs.select("id", band_cols.alias("b")).select(
-        "id", F.col("b.band").alias("band"), F.col("b.bh").alias("bh")
-    )
-    a = buckets.alias("a")
-    b = buckets.alias("b")
-    cands = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bh") == F.col("b.bh"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(F.col("a.id").alias("id1"), F.col("b.id").alias("id2"))
-        .distinct()
-    )
-    sa = sigs.select(F.col("id").alias("id1"), *[F.col(f"h{p}").alias(f"x{p}") for p in range(num_perm)])
-    sb = sigs.select(F.col("id").alias("id2"), *[F.col(f"h{p}").alias(f"y{p}") for p in range(num_perm)])
-    matches = sum(
-        F.when(F.col(f"x{p}") == F.col(f"y{p}"), 1).otherwise(0) for p in range(num_perm)
-    )
-    return (
-        cands.join(sa, "id1")
-        .join(sb, "id2")
-        .withColumn("est_jaccard", matches / F.lit(float(num_perm)))
-        .filter(F.col("est_jaccard") >= threshold)
-        .select("id1", "id2", "est_jaccard")
-    )
-
-
 def minhash_lsh_pairs_md5_oracle_sql(
     num_perm: int = 8,
     bands: int = 4,
@@ -495,8 +453,8 @@ def minhash_lsh_pairs_md5_oracle_sql(
     text_col: str = "text",
     id_col: str = "doc_id",
 ) -> str:
-    """The DuckDB SQL equivalent of ``minhash_lsh_pairs_md5`` — same
-    md5 permutation hashes, band hashes, candidate join, and signature
+    """The DuckDB SQL equivalent of ``minhash_lsh_pairs(hasher="md5")``
+    — same md5 permutation hashes, band hashes, candidate join, and signature
     Jaccard estimate, generated for the given parameters."""
     rows_per_band = num_perm // bands
     band_selects = " UNION ALL ".join(
@@ -544,7 +502,7 @@ def split_leakage_pairs(
     shingle_n: int = 3,
     threshold: float = 0.5,
     seed: int = 42,
-    portable_hash: bool = False,
+    hasher: str = "xxhash64",
 ) -> DataFrame:
     """Cross-split near-duplicate LEAKAGE audit: MinHash-LSH near-dup
     pairs whose two members land in DIFFERENT deterministic
@@ -558,13 +516,11 @@ def split_leakage_pairs(
     (sampling.split_case_expr), so both sides classify map-side on the
     pair stream — zero joins and zero shuffles beyond the LSH pair
     generation itself, vs. the naive two joins against a corpus-sized
-    assignment table. ``portable_hash`` switches every hash to md5
-    (the cross-engine twin, bit-portable to split_leakage_oracle_sql);
-    xxhash64 remains the production path."""
-    pair_fn = minhash_lsh_pairs_md5 if portable_hash else minhash_lsh_pairs
-    kwargs = {} if portable_hash else {"seed": seed}
-    pairs = pair_fn(
-        df, text_col, id_col, num_perm, bands, shingle_n, threshold, **kwargs
+    assignment table. ``hasher="md5"`` is bit-portable to
+    split_leakage_oracle_sql; xxhash64 is the production path (see
+    minhash_lsh_pairs)."""
+    pairs = minhash_lsh_pairs(
+        df, text_col, id_col, num_perm, bands, shingle_n, threshold, seed, hasher
     )
     from kglids_spark.operators.sampling import split_case_expr
 
@@ -593,7 +549,7 @@ def near_dup_group_matrix(
     shingle_n: int = 3,
     threshold: float = 0.5,
     seed: int = 42,
-    portable_hash: bool = False,
+    hasher: str = "xxhash64",
 ) -> DataFrame:
     """Cross-GROUP near-duplicate matrix: MinHash-LSH pairs rolled up
     by the (unordered) group pair of their two members — the "which
@@ -606,11 +562,10 @@ def near_dup_group_matrix(
     so each pair side looks up its group — but the lookup table is a
     2-column (id, group) projection and the pair set is tiny relative
     to the corpus, so AQE broadcasts the pair side into both joins;
-    the matrix aggregation is dictionary-sized (|groups|²/2 rows)."""
-    pair_fn = minhash_lsh_pairs_md5 if portable_hash else minhash_lsh_pairs
-    kwargs = {} if portable_hash else {"seed": seed}
-    pairs = pair_fn(
-        df, text_col, id_col, num_perm, bands, shingle_n, threshold, **kwargs
+    the matrix aggregation is dictionary-sized (|groups|²/2 rows).
+    ``hasher`` as in minhash_lsh_pairs."""
+    pairs = minhash_lsh_pairs(
+        df, text_col, id_col, num_perm, bands, shingle_n, threshold, seed, hasher
     )
     g = df.select(F.col(id_col).alias("id"), F.col(group_col).alias("g"))
     joined = (
@@ -636,8 +591,8 @@ def near_dup_group_matrix_oracle_sql(
     text_col: str = "text",
     id_col: str = "doc_id",
 ) -> str:
-    """DuckDB SQL equivalent of near_dup_group_matrix(portable_hash=
-    True): the md5 pair query joined to the group projection on both
+    """DuckDB SQL equivalent of near_dup_group_matrix(hasher="md5"):
+    the md5 pair query joined to the group projection on both
     sides and rolled up by the canonicalized group pair."""
     pair_sql = minhash_lsh_pairs_md5_oracle_sql(
         num_perm, bands, shingle_n, threshold, table, text_col, id_col
@@ -681,8 +636,8 @@ def split_leakage_oracle_sql(
     text_col: str = "text",
     id_col: str = "doc_id",
 ) -> str:
-    """DuckDB SQL equivalent of split_leakage_pairs(portable_hash=True):
-    the md5 MinHash-LSH pair query wrapped with the split CASE on each
+    """DuckDB SQL equivalent of split_leakage_pairs(hasher="md5"): the
+    md5 MinHash-LSH pair query wrapped with the split CASE on each
     side and the straddle filter."""
     pair_sql = minhash_lsh_pairs_md5_oracle_sql(
         num_perm, bands, shingle_n, threshold, table, text_col, id_col
@@ -696,15 +651,31 @@ def split_leakage_oracle_sql(
     """
 
 
+_SIMHASH_BITS = {"xxhash64": 64, "md5": 16}
+
+
 def simhash_signatures(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", bits: int = 64
+    df: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    hasher: str = "xxhash64",
 ) -> DataFrame:
-    """(id, simhash:long) — bit-majority of per-word 64-bit hashes,
-    as ``bits`` conditional sums in one aggregation."""
+    """(id, simhash:long) — bit-majority of per-word hashes, as one
+    conditional sum per bit in one aggregation. ``hasher`` fixes the
+    word-hash width: ``xxhash64`` (production) votes 64 bits;
+    ``md5`` votes the 16 bits of the first 4 hex digits of md5(word),
+    reproducible in any SQL engine (simhash_pairs_md5_oracle_sql)."""
+    _check_hasher(hasher)
+    bits = _SIMHASH_BITS[hasher]
+    h = (
+        F.xxhash64("w")
+        if hasher == "xxhash64"
+        else F.conv(F.substring(F.md5("w"), 1, 4), 16, 10).cast("long")
+    )
     ex = df.select(
         F.col(id_col).alias("id"),
         F.explode(F.split(normalize_text(text_col), " ")).alias("w"),
-    ).withColumn("h", F.xxhash64("w"))
+    ).withColumn("h", h)
     votes = [
         F.sum(
             F.when(F.shiftright(F.col("h"), i).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
@@ -719,15 +690,17 @@ def simhash_pairs(
     text_col: str = "text",
     id_col: str = "doc_id",
     max_hamming: int = 3,
-    bits: int = 64,
+    hasher: str = "xxhash64",
 ) -> DataFrame:
     """Near-dup pairs with Hamming(simhash) ≤ max_hamming, blocked on
     (max_hamming+1) bit-chunks: by pigeonhole, any pair within the
     Hamming radius agrees exactly on at least one chunk, so the join is
-    chunk-bucket-local instead of all-pairs."""
-    sigs = simhash_signatures(df, text_col, id_col, bits)
+    chunk-bucket-local instead of all-pairs. ``hasher`` as in
+    simhash_signatures; the radius must leave every chunk ≥ 1 bit wide
+    (max_hamming < 64 for xxhash64, < 16 for md5)."""
+    sigs = simhash_signatures(df, text_col, id_col, hasher)
     return hamming_near_dup_pairs(
-        sigs, sig_col="simhash", max_hamming=max_hamming, bits=bits
+        sigs, sig_col="simhash", max_hamming=max_hamming, bits=_SIMHASH_BITS[hasher]
     )
 
 
@@ -809,86 +782,13 @@ def _simhash_assemble(agg: DataFrame, bits: int) -> DataFrame:
     return agg.select("id", sim.alias("simhash"))
 
 
-def simhash_signatures_md5(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Portable 16-bit SimHash: the per-word hash is the first 4 hex
-    digits of md5(word) (cross-engine reproducible), the rest of the
-    pipeline is identical to ``simhash_signatures``. Used for the
-    exact DuckDB oracle; the 64-bit xxhash64 variant is the
-    production path."""
-    bits = 16
-    ex = df.select(
-        F.col(id_col).alias("id"),
-        F.explode(F.split(normalize_text(text_col), " ")).alias("w"),
-    ).withColumn("h", F.conv(F.substring(F.md5("w"), 1, 4), 16, 10).cast("long"))
-    votes = [
-        F.sum(
-            F.when(F.shiftright(F.col("h"), i).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
-        ).alias(f"b{i}")
-        for i in range(bits)
-    ]
-    return _simhash_assemble(ex.groupBy("id").agg(*votes), bits)
-
-
-def simhash_pairs_md5(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_hamming: int = 3,
-) -> DataFrame:
-    """Near-dup pairs on the portable 16-bit simhash, chunk-blocked
-    exactly like ``simhash_pairs`` (pigeonhole over max_hamming+1
-    chunks)."""
-    bits = 16
-    n_chunks = max_hamming + 1
-    chunk_bits = bits // n_chunks
-    sigs = simhash_signatures_md5(df, text_col, id_col)
-    mask = (1 << chunk_bits) - 1
-    chunks = sigs.select(
-        "id",
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("ci"),
-                        F.shiftright("simhash", i * chunk_bits)
-                        .bitwiseAND(F.lit(mask))
-                        .alias("cv"),
-                    )
-                    for i in range(n_chunks)
-                ]
-            )
-        ).alias("c"),
-    ).select("id", "simhash", F.col("c.ci").alias("ci"), F.col("c.cv").alias("cv"))
-    a = chunks.alias("a")
-    b = chunks.alias("b")
-    hamming = F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash")))
-    return (
-        a.join(
-            b,
-            (F.col("a.ci") == F.col("b.ci"))
-            & (F.col("a.cv") == F.col("b.cv"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(
-            F.col("a.id").alias("id1"),
-            F.col("b.id").alias("id2"),
-            hamming.alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .distinct()
-    )
-
-
 def simhash_pairs_md5_oracle_sql(
     max_hamming: int = 3,
     table: str = "documents",
     text_col: str = "text",
     id_col: str = "doc_id",
 ) -> str:
-    """DuckDB SQL equivalent of ``simhash_pairs_md5``."""
+    """DuckDB SQL equivalent of ``simhash_pairs(hasher="md5")``."""
     bits = 16
     n_chunks = max_hamming + 1
     chunk_bits = bits // n_chunks
@@ -1063,19 +963,26 @@ def exact_dedup_ledger(
     )
 
 
-def _band_bucket_expr(num_perm: int, bands: int):
+def _band_bucket_expr(num_perm: int, bands: int, hasher: str = "xxhash64"):
     """explode(array<struct(band, bh)>) over a ``sig`` column — the
     banding expression minhash_lsh_pairs uses, shared with the
-    incremental path so both bucket identically."""
+    incremental path so both bucket identically. The band hash is
+    xxhash64 over the band's min-hashes, or md5 over their
+    concatenation for ``hasher="md5"``."""
     assert num_perm % bands == 0
+    _check_hasher(hasher)
     rows_per_band = num_perm // bands
+
+    def band_hash(cols):
+        return F.md5(F.concat(*cols)) if hasher == "md5" else F.xxhash64(*cols)
+
     return F.explode(
         F.array(
             *[
                 F.struct(
                     F.lit(i).alias("band"),
-                    F.xxhash64(
-                        *[F.col("sig")[i * rows_per_band + j] for j in range(rows_per_band)]
+                    band_hash(
+                        [F.col("sig")[i * rows_per_band + j] for j in range(rows_per_band)]
                     ).alias("bh"),
                 )
                 for i in range(bands)

@@ -16,7 +16,7 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from kglids_spark.operators.dedup import normalize_text, word_shingles
+from kglids_spark.operators.dedup import _check_hasher, normalize_text, word_shingles
 
 # tiny high-frequency stopword lists per language (public knowledge)
 LANG_STOPWORDS: dict[str, list[str]] = {
@@ -302,23 +302,15 @@ def extract_html_text(
     return df.select(*keep, strip_html(html_col).alias(out_col))
 
 
-def fingerprint_expr(col, shingle_n: int = 3) -> F.Column:
-    """64-bit document fingerprint: min xxhash64 over word shingles
-    (one-permutation MinHash) — robust to reordering of rare edits,
-    deterministic, mergeable (min)."""
-    return F.array_min(
-        F.transform(word_shingles(col, shingle_n), lambda s: F.xxhash64(s))
-    )
-
-
-def fingerprint_md5_expr(col, shingle_n: int = 3) -> F.Column:
-    """Portable fingerprint: lexicographic-min md5 over word shingles
-    (one-permutation MinHash with a cross-engine hash) — identical in
-    any SQL engine, used for the exact DuckDB oracle. The xxhash64
-    variant is the production path (8-byte longs vs 32-char hex)."""
-    return F.array_min(
-        F.transform(word_shingles(col, shingle_n), lambda s: F.md5(s))
-    )
+def fingerprint_expr(col, shingle_n: int = 3, hasher: str = "xxhash64") -> F.Column:
+    """Document fingerprint: min hash over word shingles (one-permutation
+    MinHash) — robust to reordering of rare edits, deterministic,
+    mergeable (min). ``hasher="xxhash64"`` (production) gives a 64-bit
+    long; ``"md5"`` gives the lexicographic-min 32-char hex digest,
+    identical in any SQL engine (the doc_fingerprint_md5 oracle row)."""
+    _check_hasher(hasher)
+    h = F.xxhash64 if hasher == "xxhash64" else F.md5
+    return F.array_min(F.transform(word_shingles(col, shingle_n), lambda s: h(s)))
 
 
 def content_digest_expr(col) -> F.Column:
@@ -500,6 +492,9 @@ def gopher_filter(
     )
 
 
+_JAVA_REGEX_META = frozenset("\\^$.|?*+()[]{}<>-=!&")
+
+
 def corpus_line_dedup(
     df: DataFrame,
     text_col: str = "text",
@@ -532,12 +527,14 @@ def corpus_line_dedup(
     ``delimiter`` changes the dedup granularity: the default "\\n"
     dedups lines; "\\n\\n" dedups PARAGRAPHS (the other standard
     boilerplate unit — repeated license blocks, cookie banners). It is
-    a Java regex (F.split semantics) used for splitting and reused
-    literally for the rebuild join, so it must be a literal separator
-    (no regex metacharacters beyond what also reads as the joiner)."""
+    a literal separator: regex metacharacters are escaped for the
+    split, and the rebuild joins on it as written."""
+    # F.split takes a Java regex; a backslash before any non-alphabetic
+    # character is a literal in Java regex
+    pattern = "".join("\\" + c if c in _JAVA_REGEX_META else c for c in delimiter)
     lines = df.select(
         F.col(id_col).alias("id"),
-        F.posexplode(F.split(F.col(text_col), delimiter)).alias("pos", "line"),
+        F.posexplode(F.split(F.col(text_col), pattern)).alias("pos", "line"),
     ).withColumn(
         # int64 digests shuffle 8-byte keys (production); the string
         # twin is bit-portable to the SQL oracle, differing only on

@@ -699,9 +699,10 @@ def compliance_monitor_stream(
             # ONLY the first epoch's missing output table is benign; a
             # torn footer / listing failure must raise — swallowing it
             # would silently reset the cumulative totals and let a
-            # failing stream report passed=True (review r5)
-            msg = str(ex)
-            if "PATH_NOT_FOUND" not in msg and "Path does not exist" not in msg:
+            # failing stream report passed=True. getCondition is Spark 4's
+            # name (getErrorClass its deprecated alias); matching message
+            # text would break on any rewording between versions.
+            if ex.getCondition() != "PATH_NOT_FOUND":
                 raise
         out_rows = []
         n = int(row["_n"] or 0)

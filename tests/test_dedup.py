@@ -1,8 +1,9 @@
-"""Dedup operator semantics: production (xxhash64) and portable (md5)
-variants must agree on what a duplicate is — exact dups always fall in
-the same bucket / signature, distinct texts (almost surely) don't.
+"""Dedup operator semantics: the production (xxhash64) and portable
+(md5) hashers must agree on what a duplicate is — exact dups always
+fall in the same bucket / signature, distinct texts (almost surely)
+don't.
 
-The portable variants' value-exactness vs DuckDB is covered by
+The md5 hasher's value-exactness vs DuckDB is covered by
 tests/test_entry.py (dedup_*_md5 oracle queries); these tests pin the
 operator-level invariants on hand-built corpora.
 """
@@ -38,7 +39,11 @@ def _pairs(df):
 
 def test_minhash_md5_matches_production_on_dups(docs):
     prod = _pairs(dedup.minhash_lsh_pairs(docs, threshold=0.99))
-    port = _pairs(dedup.minhash_lsh_pairs_md5(docs, threshold=0.99))
+    port = _pairs(
+        dedup.minhash_lsh_pairs(
+            docs, threshold=0.99, hasher="md5", num_perm=8, bands=4
+        )
+    )
     # exact duplicates have identical shingle sets -> identical signatures
     # under ANY hash function; distinct texts share no full signature
     expected = {(1, 2), (1, 3), (2, 3)}
@@ -49,7 +54,9 @@ def test_minhash_md5_matches_production_on_dups(docs):
 def test_minhash_md5_near_dup_scores(docs):
     pairs = {
         (r["id1"], r["id2"]): r["est_jaccard"]
-        for r in dedup.minhash_lsh_pairs_md5(docs, threshold=0.0).collect()
+        for r in dedup.minhash_lsh_pairs(
+            docs, threshold=0.0, hasher="md5", num_perm=8, bands=4
+        ).collect()
     }
     assert pairs[(1, 2)] == 1.0
     # the one-word-off near dup shares most shingles: estimate strictly
@@ -62,7 +69,7 @@ def test_minhash_md5_near_dup_scores(docs):
 def test_simhash_md5_exact_dups_hamming_zero(docs):
     pairs = {
         (r["id1"], r["id2"]): r["hamming"]
-        for r in dedup.simhash_pairs_md5(docs, max_hamming=3).collect()
+        for r in dedup.simhash_pairs(docs, max_hamming=3, hasher="md5").collect()
     }
     assert pairs[(1, 2)] == 0
     assert pairs[(1, 3)] == 0
@@ -81,7 +88,7 @@ def test_fingerprint_md5_dup_invariance(docs):
     fps = {
         r["doc_id"]: r["fp"]
         for r in docs.select(
-            "doc_id", text.fingerprint_md5_expr("text").alias("fp")
+            "doc_id", text.fingerprint_expr("text", hasher="md5").alias("fp")
         ).collect()
     }
     assert fps[1] == fps[2] == fps[3]
@@ -470,3 +477,10 @@ def test_hamming_near_dup_pairs_rejects_degenerate_radius(spark):
         dedup.hamming_near_dup_pairs(sdf, max_hamming=64)
     # 63 is the widest legal radius: 64 one-bit chunks
     assert dedup.hamming_near_dup_pairs(sdf, max_hamming=63).count() == 0
+    # the md5 SimHash votes 16 bits: 15 is its widest legal radius
+    docs = spark.createDataFrame([(1, "a b"), (2, "a b")], "doc_id long, text string")
+    for m in (-1, 16):
+        with pytest.raises(ValueError, match="max_hamming"):
+            dedup.simhash_pairs(docs, max_hamming=m, hasher="md5")
+    got = dedup.simhash_pairs(docs, max_hamming=15, hasher="md5").collect()
+    assert [(r.id1, r.id2, r.hamming) for r in got] == [(1, 2, 0)]

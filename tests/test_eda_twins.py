@@ -1,7 +1,8 @@
 """Round-2 additions: EDA-operation recommendation, popular-parameters
-with registry defaults, and twin-lockstep pins for the four md5-twin /
-xxhash64-production operator pairs (VERDICT r1 #9: the no_oracle
-production paths stay pinned to their value-verified twins)."""
+with registry defaults, and lockstep pins for the hash-based operators
+under both hashers (VERDICT r1 #9: the xxhash64 production hasher,
+which no SQL oracle can reproduce, stays pinned to the md5 hasher that
+the value-exact oracle rows run)."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -89,7 +90,7 @@ def test_most_popular_parameters_unregistered_call(spark):
 
 
 # ---------------------------------------------------------------------------
-# twin lockstep: md5 twins vs xxhash64 production paths
+# hasher lockstep: xxhash64 (production) and md5 (oracle-exact)
 
 @pytest.fixture(scope="module")
 def clone_docs(spark):
@@ -109,33 +110,39 @@ def clone_docs(spark):
 CLONE_PAIRS = {(0, 100), (1, 101), (2, 102)}
 
 
-def test_minhash_twin_lockstep(clone_docs):
-    prod = dedup.minhash_lsh_pairs(clone_docs, num_perm=8, bands=4, threshold=0.5)
-    twin = dedup.minhash_lsh_pairs_md5(clone_docs, num_perm=8, bands=4, threshold=0.5)
-    prod_pairs = {(r.id1, r.id2): r.est_jaccard for r in prod.collect()}
-    twin_pairs = {(r.id1, r.id2): r.est_jaccard for r in twin.collect()}
-    assert set(prod_pairs) == CLONE_PAIRS
-    assert set(twin_pairs) == CLONE_PAIRS
-    assert all(v == 1.0 for v in prod_pairs.values())
-    assert all(v == 1.0 for v in twin_pairs.values())
-    # structural lockstep: same join count in both optimized plans
-    def joins(df):
-        return df._jdf.queryExecution().optimizedPlan().toString().count("Join")
-    assert joins(prod) == joins(twin)
+HASHERS = ["xxhash64", "md5"]
+
+
+@pytest.mark.parametrize("hasher", HASHERS)
+def test_minhash_twin_lockstep(clone_docs, hasher):
+    got = dedup.minhash_lsh_pairs(
+        clone_docs, num_perm=8, bands=4, threshold=0.5, hasher=hasher
+    )
+    assert {(r.id1, r.id2): r.est_jaccard for r in got.collect()} == {
+        p: 1.0 for p in CLONE_PAIRS
+    }
+
+
+def test_hash_operators_reject_unknown_hasher(clone_docs):
+    with pytest.raises(ValueError, match="hasher"):
+        dedup.minhash_lsh_pairs(clone_docs, num_perm=8, bands=4, hasher="sha1")
+    with pytest.raises(ValueError, match="hasher"):
+        dedup.simhash_pairs(clone_docs, hasher="sha1")
+    with pytest.raises(ValueError, match="hasher"):
+        text.fingerprint_expr("text", hasher="sha1")
 
 
 def test_split_leakage_twin_lockstep(clone_docs):
     """Under split seed 0, clone pair (0, 100) straddles val/train
     while (1, 101) and (2, 102) are train/train — the audit must keep
-    exactly the straddler and drop same-split near-dups, in BOTH hash
-    families, with splits matching sampling.split_assignment."""
+    exactly the straddler and drop same-split near-dups, under BOTH
+    hashers, with splits matching sampling.split_assignment."""
     from kglids_spark.operators.sampling import split_assignment
 
-    prod = dedup.split_leakage_pairs(clone_docs, num_perm=8, bands=4, threshold=0.5)
-    twin = dedup.split_leakage_pairs(
-        clone_docs, num_perm=8, bands=4, threshold=0.5, portable_hash=True
-    )
-    for got in (prod.collect(), twin.collect()):
+    for hasher in HASHERS:
+        got = dedup.split_leakage_pairs(
+            clone_docs, num_perm=8, bands=4, threshold=0.5, hasher=hasher
+        ).collect()
         assert {(r.id1, r.id2) for r in got} == {(0, 100)}
         (r,) = got
         assert (r.split1, r.split2, r.est_jaccard) == ("val", "train", 1.0)
@@ -151,18 +158,17 @@ def test_split_leakage_twin_lockstep(clone_docs):
 def test_near_dup_group_matrix(clone_docs):
     """The source matrix counts each clone pair under its unordered
     source pair: ids 0/1/2 -> srcA, clones 100/101 -> srcB, 102 ->
-    srcA, giving {(srcA, srcB): 2, (srcA, srcA): 1} in both hash
-    families."""
+    srcA, giving {(srcA, srcB): 2, (srcA, srcA): 1} under both
+    hashers."""
     withsrc = clone_docs.withColumn(
         "source",
         F.when(F.col("doc_id").isin(100, 101), "srcB").otherwise("srcA"),
     )
-    for portable in (False, True):
+    for hasher in HASHERS:
         got = {
             (r.group_a, r.group_b): r.n_pairs
             for r in dedup.near_dup_group_matrix(
-                withsrc, num_perm=8, bands=4, threshold=0.5,
-                portable_hash=portable,
+                withsrc, num_perm=8, bands=4, threshold=0.5, hasher=hasher
             ).collect()
         }
         assert got == {("srcA", "srcB"): 2, ("srcA", "srcA"): 1}
@@ -201,42 +207,41 @@ def test_cli_leakage_gate(clone_docs, tmp_path, capsys):
         main(["leakage", "--input", src, "--num-perm", "10", "--bands", "4"])
 
 
-def test_simhash_twin_lockstep(clone_docs):
-    prod_pairs = {
-        (r.id1, r.id2) for r in dedup.simhash_pairs(clone_docs, max_hamming=3).collect()
+@pytest.mark.parametrize("hasher", HASHERS)
+def test_simhash_twin_lockstep(clone_docs, hasher):
+    got = {
+        (r.id1, r.id2): r.hamming
+        for r in dedup.simhash_pairs(
+            clone_docs, max_hamming=3, hasher=hasher
+        ).collect()
     }
-    twin_pairs = {
-        (r.id1, r.id2) for r in dedup.simhash_pairs_md5(clone_docs, max_hamming=3).collect()
+    assert all(got[p] == 0 for p in CLONE_PAIRS)
+    if hasher == "xxhash64":
+        # 64 bits: disjoint vocabularies can't land within Hamming 3,
+        # so the result is EXACTLY the clones
+        assert set(got) == CLONE_PAIRS
+    # md5 votes 16 bits: random collisions are possible by design
+
+
+@pytest.mark.parametrize("hasher", HASHERS)
+def test_fingerprint_twin_lockstep(clone_docs, hasher):
+    fps = {
+        r.doc_id: r.fp
+        for r in clone_docs.select(
+            "doc_id", text.fingerprint_expr("text", hasher=hasher).alias("fp")
+        ).collect()
     }
-    # 64-bit production: disjoint vocabularies can't land within
-    # Hamming 3, so the result is EXACTLY the clones
-    assert prod_pairs == CLONE_PAIRS
-    # 16-bit portable twin: all clones found (Hamming 0); random
-    # collisions are possible by design at 16 bits
-    assert CLONE_PAIRS <= twin_pairs
+    # grouping by fingerprint yields exactly the clone groups
+    by_fp = {}
+    for k, v in fps.items():
+        by_fp.setdefault(v, set()).add(k)
+    assert {frozenset(g) for g in by_fp.values() if len(g) > 1} == {
+        frozenset(p) for p in CLONE_PAIRS
+    }
 
 
-def test_fingerprint_twin_lockstep(clone_docs):
-    both = clone_docs.select(
-        "doc_id",
-        text.fingerprint_expr("text").alias("fp_prod"),
-        text.fingerprint_md5_expr("text").alias("fp_twin"),
-    ).collect()
-    prod = {r.doc_id: r.fp_prod for r in both}
-    twin = {r.doc_id: r.fp_twin for r in both}
-    for a, b in CLONE_PAIRS:
-        assert prod[a] == prod[b]
-        assert twin[a] == twin[b]
-    # grouping by fingerprint yields the same duplicate groups
-    def groups(fps):
-        by_fp = {}
-        for k, v in fps.items():
-            by_fp.setdefault(v, set()).add(k)
-        return {frozenset(g) for g in by_fp.values() if len(g) > 1}
-    assert groups(prod) == groups(twin)
-
-
-def test_ann_lsh_twin_lockstep(spark):
+@pytest.mark.parametrize("method", ["expr", "pandas"])
+def test_ann_lsh_twin_lockstep(spark, method):
     import math
 
     dim = 8
@@ -248,17 +253,12 @@ def test_ann_lsh_twin_lockstep(spark):
     queries = corpus.filter(F.col("vec_id").isin(5, 999)).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
     )
-    prod = ann.lsh_knn_join(queries, corpus, k=3, n_planes=4, dim=dim)
-    twin = ann.lsh_knn_join_md5(queries, corpus, k=3, n_planes=4, dim=dim)
-    for df in (prod, twin):
-        top1 = {r.q_id: (r.c_id, r.cosine) for r in df.filter(F.col("rank") == 1).collect()}
-        # the planted duplicate is each other's nearest neighbour at
-        # cosine 1.0 in BOTH hash families (same bucket, same re-rank)
-        assert top1[5][0] == 999 and top1[5][1] == pytest.approx(1.0)
-        assert top1[999][0] == 5 and top1[999][1] == pytest.approx(1.0)
-    def joins(df):
-        return df._jdf.queryExecution().optimizedPlan().toString().count("Join")
-    assert joins(prod) == joins(twin)
+    df = ann.lsh_knn_join(queries, corpus, k=3, n_planes=4, dim=dim, method=method)
+    top1 = {r.q_id: (r.c_id, r.cosine) for r in df.filter(F.col("rank") == 1).collect()}
+    # the planted duplicate is each other's nearest neighbour at cosine
+    # 1.0 on both bucket paths (same bucket, same re-rank)
+    assert top1[5][0] == 999 and top1[5][1] == pytest.approx(1.0)
+    assert top1[999][0] == 5 and top1[999][1] == pytest.approx(1.0)
 
 
 def test_ivf_assign_pandas_matches_expr(spark):

@@ -173,6 +173,14 @@ def test_corpus_line_dedup_keeps_first_occurrence(spark):
     # empty doc: one empty line, kept (it is that line's first and only
     # occurrence), so nothing is removed
     assert got["d"] == ("", 1, 0)
+    # the delimiter is a literal, not a Java regex: "|" must not split
+    # between every character
+    piped = spark.createDataFrame([(1, "a|b|a"), (2, "b|c")], "doc_id long, text string")
+    got = {
+        r.doc_id: r.text_clean
+        for r in text.corpus_line_dedup(piped, delimiter="|").collect()
+    }
+    assert got == {1: "a|b", 2: "c"}
 
 
 def test_corpus_line_dedup_hashed_twin_lockstep(spark):
