@@ -206,7 +206,8 @@ def main(argv: list[str] | None = None) -> int:
         help="Tukey-fence outlier verdict, e.g. 'n_tok 1.5 0.01': fail "
         "when the fraction outside [Q1-K*IQR, Q3+K*IQR] exceeds "
         "MAXRATE — the data-derived sibling of a fixed range bound "
-        "(costs one extra quantile+count pass per column; repeatable)",
+        "(costs one extra quantile+count pass per column; repeatable, "
+        "one spec per column; an empty or all-NULL column fails)",
     )
     v.add_argument(
         "--drift-by",
@@ -832,6 +833,13 @@ def main(argv: list[str] | None = None) -> int:
                     "(e.g. 'n_tok 1.5 0.01')"
                 )
             col, k_s, rate_s = parts
+            if any(col == seen for seen, _, _ in fence_specs):
+                # one verdict key per column: a second spec would
+                # silently overwrite the first
+                raise SystemExit(
+                    f"--outlier-fence {spec!r}: {col!r} already has a "
+                    "fence spec (one per column)"
+                )
             try:
                 fence_specs.append((col, float(k_s), float(rate_s)))
             except ValueError:
@@ -889,7 +897,9 @@ def main(argv: list[str] | None = None) -> int:
             rate = float(row.outlier_rate or 0.0)
             summary[f"outlier_fence({col})"] = {
                 "violations": int(row.n_below + row.n_above),
-                "passed": rate <= rate_f,
+                # an empty or all-NULL column fails: a rate over
+                # nothing asserts nothing (the metric_range contract)
+                "passed": row.n_checked > 0 and rate <= rate_f,
             }
             res.metrics[f"outlier_rate({col})"] = round(rate, 6)
             res.metrics[f"outlier_fence_lo({col})"] = row.lo_fence

@@ -10,10 +10,12 @@ row-level compiles to a single Spark Column expression so the whole
 suite evaluates in ONE scan with whole-stage codegen — no per-row
 Python anywhere.
 
-Uniqueness is the one constraint that needs a shuffle: rows are
-bucketed by xxhash64(doc_id) (plans/buckets.py), so all copies of a
-doc_id land in the same logical bucket and per-bucket duplicate
-detection is globally exact *and* mergeable across resumed runs.
+Uniqueness is the one constraint that needs a shuffle. validate()
+checks ``unique`` on the bucketing key only: rows are bucketed by
+xxhash64(key) (plans/buckets.py), so all copies of a key land in the
+same logical bucket and per-bucket duplicate detection is globally
+exact *and* mergeable across resumed runs. Any other column's copies
+span buckets, so validate() refuses it.
 """
 
 from __future__ import annotations
@@ -28,7 +30,7 @@ from pyspark.sql import functions as F
 @dataclass(frozen=True)
 class Constraint:
     cid: str
-    kind: str  # not_null|unique|range|tok_len_consistency|referential|drift_ks|drift_psi|schema_type
+    kind: str  # one of KNOWN_KINDS
     column: str | None = None
     params: dict = field(default_factory=dict)
 
@@ -92,7 +94,7 @@ def element_range(
     inside the same single stats scan as every other row constraint,
     and validate's slim projection materializes it ONCE so the wide
     token array — the bulk of the bytes at 10^12 rows — is decoded
-    exactly once per run (the tok_len_consistency discipline). A NULL
+    exactly once per run, like every row constraint's input. A NULL
     array itself does not violate; that is ``not_null``'s job."""
     return Constraint(
         cid or f"element_range({array_col})",
@@ -140,8 +142,8 @@ def vector_sanity(
 
 
 def vector_sanity_probe(c: Constraint) -> Column:
-    """Column<boolean>: true iff the row violates ``c`` (vector_sanity).
-    Shared by violation_expr and validate's slim projection."""
+    """Column<boolean>: true iff the row violates ``c`` (vector_sanity);
+    what violation_expr returns for that kind."""
     arr = F.col(c.column)
     inf = F.lit(float("inf"))
     bad = arr.isNotNull() & F.exists(
@@ -210,12 +212,12 @@ def expression(
     so a NULL predicate result counts as a violation — wrap the
     predicate in coalesce(...) to opt out.
 
-    ``columns`` declares which columns the predicate reads; validate's
-    slim projection keeps exactly those, so an expression constraint
-    never silently forces a full-width scan of a 10^12-row table
-    (validate raises if the declaration is missing). The predicate
-    text and column list enter the constraint signature, so checkpoint
-    lineage distinguishes suites that differ only in an expression."""
+    ``columns`` declares which columns the predicate reads (validate
+    raises if the declaration is missing); validate evaluates the
+    predicate in its slim projection, so only its one violation flag
+    rides the persisted slim frame. The predicate text and column list
+    enter the constraint signature, so checkpoint lineage distinguishes
+    suites that differ only in an expression."""
     return Constraint(
         cid or f"expression({predicate})",
         "expression",
@@ -246,7 +248,7 @@ def compliance(
     Empty input fails (a ratio over nothing asserts nothing — the
     metric_range contract). NULL predicate results count as
     non-compliant, like ``expression``; ``columns`` must declare what
-    the predicate reads so the slim scan stays slim."""
+    the predicate reads, as for ``expression``."""
     r = float(min_ratio)
     if not (0.0 <= r <= 1.0):
         raise ValueError(f"min_ratio must be within [0, 1], got {min_ratio}")
@@ -270,6 +272,15 @@ def compliance_fraction(c: Constraint) -> tuple[int, int]:
 
     f = Fraction(str(c.params["min_ratio"]))
     return f.numerator, f.denominator
+
+
+def compliance_passed(c: Constraint, n_rows: int, n_violations: int) -> bool:
+    """The compliance verdict over ``n_rows`` validated rows of which
+    ``n_violations`` do not comply: the exact integer rule of
+    compliance_fraction. Empty input fails (a ratio over nothing
+    asserts nothing — the metric_range contract)."""
+    num, den = compliance_fraction(c)
+    return n_rows > 0 and (n_rows - n_violations) * den >= num * n_rows
 
 
 METRIC_STATS = ("null_rate", "mean", "stddev", "min", "max")
@@ -457,13 +468,10 @@ ROW_LEVEL_KINDS = {
     "not_null",
     "range",
     "tok_len_consistency",
-    "tok_len_precomputed",
     "referential",
-    "referential_flag",
     "expression",
     "compliance",
     "element_range",
-    "element_precomputed",
     "vector_sanity",
 }
 
@@ -514,20 +522,12 @@ def violation_expr(c: Constraint, df: DataFrame) -> Column:
     if c.kind == "tok_len_consistency":
         arr, n = F.col(c.params["array_col"]), F.col(c.column)
         return n.isNotNull() & (F.size(arr) != n)
-    if c.kind == "tok_len_precomputed":
-        # size(array) materialized once by validate.py's slim projection
-        # so the wide array column is scanned exactly once per run
-        n = F.col(c.column)
-        return n.isNotNull() & (F.col(c.params["size_col"]) != n)
     if c.kind == "referential":
         col = F.col(c.column)
         vals = c.params.get("valid_values")
         if vals is None:
             raise ValueError(f"{c.cid}: dim-table RI is resolved in validate.py, not here")
         return col.isNotNull() & ~col.isin(list(vals))
-    if c.kind == "referential_flag":
-        # dim membership pre-joined as a boolean flag (validate.py)
-        return F.col(c.column).isNotNull() & F.col(c.params["flag"]).isNull()
     if c.kind in ("expression", "compliance"):
         # violation iff the predicate is not TRUE (NULL -> violation);
         # compliance counts identically — only its VERDICT differs
@@ -541,10 +541,6 @@ def violation_expr(c: Constraint, df: DataFrame) -> Column:
         return arr.isNotNull() & F.exists(
             arr, lambda x: x.isNull() | (x < lo) | (x > hi)
         )
-    if c.kind == "element_precomputed":
-        # the exists-probe materialized once by validate.py's slim
-        # projection so the wide token array is decoded exactly once
-        return F.coalesce(F.col(c.params["flag"]), F.lit(False))
     if c.kind == "vector_sanity":
         return vector_sanity_probe(c)
     raise ValueError(f"{c.cid}: kind {c.kind} is not row-level")
@@ -618,10 +614,20 @@ def grouped_verdicts(
     )
 
 
-def fd_violating_groups(df: DataFrame, c: Constraint) -> DataFrame:
-    """Determinant groups violating FD constraint ``c``: one row per
-    determinant-value combination with >=2 distinct non-null dependent
-    values, plus the group's row count.
+def fd_scope(df: DataFrame, c: Constraint) -> DataFrame:
+    """The rows FD constraint ``c`` speaks about: all of ``df``, or for
+    a conditional FD only the rows satisfying its ``where`` predicate
+    (it filters before grouping and pushes into the pruned scan)."""
+    where = c.params.get("where")
+    return df.filter(F.expr(where)) if where else df
+
+
+def fd_groups(df: DataFrame, c: Constraint) -> DataFrame:
+    """Every evidence group of FD constraint ``c``: one row per
+    determinant-value combination of the in-scope rows with a non-null
+    dependent, with the group's row count (``n_rows_in_group``) and
+    ``violated`` — true iff the group holds >=2 distinct dependent
+    values.
 
     min(dep) != max(dep) is an EXACT >=2-distinct test on any orderable
     type and keeps the aggregation buffer O(1) per group (countDistinct
@@ -630,42 +636,48 @@ def fd_violating_groups(df: DataFrame, c: Constraint) -> DataFrame:
     determinant per partition, never the corpus. NULL determinants form
     their own group (SQL GROUP BY semantics); NULL dependents are
     ignored (they carry no FD evidence)."""
-    dets = list(c.params["determinants"])
     dep = c.column
-    where = c.params.get("where")
-    if where:
-        # conditional FD: only in-scope rows carry evidence (the
-        # predicate pushes into the pruned scan)
-        df = df.filter(F.expr(where))
     return (
-        df.filter(F.col(dep).isNotNull())
-        .groupBy(*[F.col(d) for d in dets])
+        fd_scope(df, c)
+        .filter(F.col(dep).isNotNull())
+        .groupBy(*[F.col(d) for d in c.params["determinants"]])
         .agg(
-            F.min(dep).alias("_fd_lo"),
-            F.max(dep).alias("_fd_hi"),
             F.count(F.lit(1)).alias("n_rows_in_group"),
+            (F.min(dep) != F.max(dep)).alias("violated"),
         )
-        .filter(F.col("_fd_lo") != F.col("_fd_hi"))
-        .drop("_fd_lo", "_fd_hi")
+    )
+
+
+def fd_violating_groups(df: DataFrame, c: Constraint) -> DataFrame:
+    """The violating groups of fd_groups: determinant columns plus
+    ``n_rows_in_group``."""
+    return fd_groups(df, c).filter(F.col("violated")).drop("violated")
+
+
+def failed_rows(
+    df: DataFrame, flags: list[tuple[str, Column]], key: str = "doc_id"
+) -> DataFrame:
+    """(key, constraint_id) rows for every true flag, in a single scan:
+    ``flags`` pairs each constraint id with its boolean violation
+    Column; an array of failed ids per row is filtered and exploded."""
+    if not flags:
+        return df.sparkSession.createDataFrame([], f"{key} string, constraint_id string")
+    failed = F.array_compact(F.array(*[F.when(v, F.lit(cid)) for cid, v in flags]))
+    return (
+        df.select(F.col(key), failed.alias("_failed"))
+        .filter(F.size("_failed") > 0)
+        .select(key, F.explode("_failed").alias("constraint_id"))
     )
 
 
 def extract_violations(
     df: DataFrame, constraints: list[Constraint], key: str = "doc_id"
 ) -> DataFrame:
-    """(doc_id, constraint_id) rows for every row-level violation, in a
-    single scan: an array of failed ids per row, filtered and exploded.
-    Unique-constraint violations come from evaluate_uniqueness()."""
-    rcs = row_constraints(constraints)
-    if not rcs:
-        return df.sparkSession.createDataFrame([], f"{key} string, constraint_id string")
-    failed = F.array_compact(
-        F.array(*[F.when(violation_expr(c, df), F.lit(c.cid)) for c in rcs])
-    )
-    return (
-        df.select(F.col(key), failed.alias("_failed"))
-        .filter(F.size("_failed") > 0)
-        .select(key, F.explode("_failed").alias("constraint_id"))
+    """(doc_id, constraint_id) rows for every row-level violation
+    (failed_rows over violation_expr). Unique-constraint violations
+    come from evaluate_uniqueness()."""
+    return failed_rows(
+        df, [(c.cid, violation_expr(c, df)) for c in row_constraints(constraints)], key
     )
 
 
@@ -709,18 +721,32 @@ def cap_violations(
     )
 
 
+def duplicate_keys(
+    df: DataFrame, column: str, bucket_col: str = "bucket_id"
+) -> DataFrame:
+    """(bucket, column, count) for every non-null value of ``column``
+    that occurs more than once in its bucket. Exact across the table
+    only when the buckets hash ``column`` itself: then grouping is
+    bucket-local and the shuffle is the minimal exact-uniqueness
+    shuffle (map-side partial counts)."""
+    return (
+        df.filter(F.col(column).isNotNull())
+        .groupBy(bucket_col, column)
+        .count()
+        .filter(F.col("count") > 1)
+    )
+
+
 def evaluate_uniqueness(
     df: DataFrame, column: str, bucket_col: str = "bucket_id"
 ) -> tuple[DataFrame, DataFrame]:
-    """Exact duplicate detection. Returns (per_bucket_counts, violations).
+    """Exact duplicate detection over duplicate_keys. Returns
+    (per_bucket_counts, violations).
 
     per_bucket_counts: (bucket_id, dup_keys, dup_rows) — dup_keys is the
     number of distinct duplicated values, dup_rows the number of excess
-    rows. violations: one (key, cid) row per duplicated value. Buckets
-    hash on the same key, so grouping is bucket-local and the shuffle is
-    the minimal exact-uniqueness shuffle (map-side partial counts)."""
-    keyed = df.filter(F.col(column).isNotNull())
-    counts = keyed.groupBy(bucket_col, column).count().filter(F.col("count") > 1)
+    rows. violations: one (key, cid) row per duplicated value."""
+    counts = duplicate_keys(df, column, bucket_col)
     per_bucket = counts.groupBy(bucket_col).agg(
         F.count(F.lit(1)).alias("dup_keys"), F.sum(F.col("count") - 1).alias("dup_rows")
     )

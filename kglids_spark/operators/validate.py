@@ -37,7 +37,7 @@ import uuid
 from dataclasses import dataclass
 
 import numpy as np
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
@@ -80,6 +80,12 @@ class ValidationResult:
     group_drift: DataFrame | None = None
 
 
+def _flag(i: int) -> str:
+    """Slim-frame column holding the i-th row constraint's violation
+    flag."""
+    return f"_viol_{i}"
+
+
 def _stats_pass(
     df_b: DataFrame,
     row_cs: list[C.Constraint],
@@ -90,9 +96,11 @@ def _stats_pass(
     kll_col: str | None = None,
     metric_cols: list[str] = (),
 ) -> DataFrame:
-    """The main per-bucket aggregation (one scan) + the uniqueness
-    shuffle, joined into one sketch row per bucket. ``dup_counts`` is
-    the persisted (bucket, key, count>1) frame shared with violation
+    """The main per-bucket aggregation (one scan) over the slim frame,
+    which carries the i-th row constraint's violation flag as
+    ``_flag(i)``, plus the uniqueness shuffle, joined into one sketch
+    row per bucket. ``dup_counts`` is the persisted
+    ``C.duplicate_keys`` frame of the key, shared with violation
     extraction so the uniqueness shuffle runs exactly once.
 
     ``kll_col``: also attach min, max and a KLL quantile sketch
@@ -102,8 +110,7 @@ def _stats_pass(
     bytes ride the same bucket_stats row, so resume semantics are
     identical to the histogram and HLL sketches."""
     viol_sums = [
-        F.sum(C.violation_expr(c, df_b).cast("long")).alias(f"v_{i}")
-        for i, c in enumerate(row_cs)
+        F.sum(F.col(_flag(i)).cast("long")).alias(f"v_{i}") for i in range(len(row_cs))
     ]
     aggs = [F.count(F.lit(1)).alias("n_rows"), F.hll_sketch_agg(F.col(key)).alias("hll_key")]
     aggs += viol_sums
@@ -146,23 +153,16 @@ def _stats_pass(
     else:
         stats = stats.withColumn("viol_counts", F.create_map().cast("map<string,long>"))
 
-    for uc in unique_cs:
-        if dup_counts is not None and uc.column == key:
-            per_bucket = dup_counts.groupBy(BUCKET_COL).agg(
-                F.count(F.lit(1)).alias("dup_keys")
-            )
-        else:
-            per_bucket, _ = C.evaluate_uniqueness(df_b, uc.column, BUCKET_COL)
-        dup = per_bucket.select(
-            F.col(BUCKET_COL), F.col("dup_keys").alias(f"u_{uc.cid}")
-        )
+    if unique_cs:
+        dup = dup_counts.groupBy(BUCKET_COL).agg(F.count(F.lit(1)).alias("_dup_keys"))
+        n_dup = F.coalesce(F.col("_dup_keys"), F.lit(0))
         stats = stats.join(dup, BUCKET_COL, "left").withColumn(
             "viol_counts",
             F.map_concat(
                 "viol_counts",
-                F.create_map(F.lit(uc.cid), F.coalesce(F.col(f"u_{uc.cid}"), F.lit(0))),
+                F.create_map(*[x for uc in unique_cs for x in (F.lit(uc.cid), n_dup)]),
             ),
-        ).drop(f"u_{uc.cid}")
+        ).drop("_dup_keys")
     if drift_spec is None:
         stats = stats.withColumn("hist", F.lit(None).cast("array<long>"))
     if kll_col is None:
@@ -237,83 +237,19 @@ def _dedupe_earliest(stats: DataFrame) -> DataFrame:
 
 
 def _slim_projection(
-    df_b: DataFrame,
-    row_cs: list[C.Constraint],
-    key: str,
-    drift_spec: D.HistSpec | None,
-    unique_cols: list[str] = (),
-    metric_cols: list[str] = (),
-) -> tuple[DataFrame, list[C.Constraint]]:
-    """Project the bucketed frame down to exactly the columns the
-    constraint suite touches, materializing size(array) for
-    consistency constraints. The wide token arrays (the bulk of the
-    bytes at 10^12 rows) are decoded ONCE here; the slim frame then
-    feeds both the stats aggregation and the violation-row extraction,
-    halving input I/O when both passes run."""
-    cols: dict[str, None] = {key: None, BUCKET_COL: None}
-    extra: list = []
-    rewritten: list[C.Constraint] = []
-    for c in row_cs:
-        if c.kind == "tok_len_consistency":
-            size_col = f"__size_{c.params['array_col']}"
-            extra.append(F.size(F.col(c.params["array_col"])).alias(size_col))
-            rewritten.append(
-                C.Constraint(c.cid, "tok_len_precomputed", c.column, {"size_col": size_col})
-            )
-            cols[c.column] = None
-        elif c.kind == "element_range":
-            # materialize the exists-probe here so the wide token array
-            # never enters the slim frame — only a boolean rides along
-            # (cid-hashed name: two element_range constraints on the
-            # same column must not collide)
-            import hashlib
-
-            flag = f"__elemviol_{hashlib.md5(c.cid.encode()).hexdigest()[:8]}"
-            arr = F.col(c.column)
-            lo, hi = F.lit(c.params["lo"]), F.lit(c.params["hi"])
-            extra.append(
-                (
-                    arr.isNotNull()
-                    & F.exists(arr, lambda x: x.isNull() | (x < lo) | (x > hi))
-                ).alias(flag)
-            )
-            rewritten.append(
-                C.Constraint(c.cid, "element_precomputed", c.column, {"flag": flag})
-            )
-        elif c.kind == "vector_sanity":
-            # same discipline as element_range: the whole probe
-            # (finite / dim / norm) collapses to one boolean here, so
-            # the wide float-vector column never enters the slim frame
-            import hashlib
-
-            flag = f"__vecviol_{hashlib.md5(c.cid.encode()).hexdigest()[:8]}"
-            extra.append(C.vector_sanity_probe(c).alias(flag))
-            rewritten.append(
-                C.Constraint(c.cid, "element_precomputed", c.column, {"flag": flag})
-            )
-        else:
-            if c.column:
-                cols[c.column] = None
-            if c.kind == "referential_flag":
-                cols[c.params["flag"]] = None
-            if c.kind in ("expression", "compliance"):
-                if not c.params.get("columns"):
-                    raise ValueError(
-                        f"{c.cid}: {c.kind} constraints must declare the "
-                        "columns they read (constraints.expression/"
-                        "compliance(..., columns=[...])) so the slim scan "
-                        "stays slim"
-                    )
-                for x in c.params["columns"]:
-                    cols[x] = None
-            rewritten.append(c)
-    if drift_spec is not None:
-        cols[drift_spec.column] = None
-    for uc in unique_cols:
-        cols[uc] = None
-    for mc in metric_cols:
-        cols[mc] = None
-    return df_b.select(*[F.col(x) for x in cols], *extra), rewritten
+    df_b: DataFrame, violations: list[Column], key: str, sketch_cols: list[str]
+) -> DataFrame:
+    """Project the bucketed frame down to the key, the bucket, the
+    columns the sketches read, and one boolean per row constraint
+    (``_flag(i)``: true iff the row violates the i-th). The wide token
+    and vector arrays (the bulk of the bytes at 10^12 rows) are decoded
+    ONCE here and never enter the slim frame; it then feeds both the
+    stats aggregation and the violation-row extraction, halving input
+    I/O when both passes run."""
+    cols = dict.fromkeys([key, BUCKET_COL, *sketch_cols])
+    return df_b.select(
+        *[F.col(x) for x in cols], *[v.alias(_flag(i)) for i, v in enumerate(violations)]
+    )
 
 
 def validate(df: DataFrame, constraints: list[C.Constraint], **kwargs) -> ValidationResult:
@@ -380,6 +316,21 @@ def _validate_impl(
 
     row_cs = C.row_constraints(constraints)
     unique_cs = [c for c in constraints if c.kind == "unique"]
+    for c in row_cs:
+        if c.kind in ("expression", "compliance") and not c.params.get("columns"):
+            raise ValueError(
+                f"{c.cid}: {c.kind} constraints must declare the columns "
+                "they read (constraints.expression/compliance(..., "
+                "columns=[...]))"
+            )
+    for c in unique_cs:
+        if c.column != key:
+            # copies of a non-key value span buckets: bucket-local
+            # counts would undercount and move with n_buckets
+            raise ValueError(
+                f"{c.cid}: unique is checked on the bucketing key only; "
+                f"validate with key={c.column!r} to check {c.column!r}"
+            )
     drift_cs = [c for c in constraints if c.kind in ("drift_ks", "drift_psi")]
     schema_cs = [c for c in constraints if c.kind == "schema_type"]
     metric_cs = [c for c in constraints if c.kind == "metric"]
@@ -390,18 +341,19 @@ def _validate_impl(
         drift_spec = D.HistSpec(column=drift_cs[0].column)
     if drift_by is not None and not drift_cs:
         raise ValueError("drift_by requires a drift_ks/drift_psi constraint in the suite")
-    # two-column projection captured BEFORE the RI flag joins below
-    # mutate df — the grouped pass needs neither the flags nor the key
-    drift_by_df = (
-        df.select(F.col(drift_by), F.col(drift_spec.column))
-        if drift_by is not None
-        else None
-    )
+
+    def this_suite(ledger_rows: DataFrame) -> DataFrame:
+        """Ledger rows written under this suite and this bucketing."""
+        return ledger_rows.filter(
+            (F.col("constraint_hash") == chash) & (F.col("n_buckets") == n_buckets)
+        )
 
     # dim-table RI: pre-join a membership flag so the constraint stays a
     # row-level expression inside the single-pass aggregate. Catalyst
     # broadcasts small dims; big dims become a shuffle join feeding the
     # same single scan (never a second pass).
+    checked = df
+    violations: list[Column] = []
     for i, c in enumerate(row_cs):
         if c.kind == "referential" and c.params.get("valid_values") is None:
             dim_name = c.params.get("dim_table")
@@ -409,19 +361,19 @@ def _validate_impl(
                 raise ValueError(
                     f"{c.cid}: pass dims={{'{dim_name}': <DataFrame>}} or literal valid_values"
                 )
-            flag = f"__ri_ok_{i}"
-            dim = dims[dim_name].select(F.col(c.column)).distinct().withColumn(flag, F.lit(True))
-            df = df.join(dim, on=c.column, how="left")
-            row_cs[i] = C.Constraint(c.cid, "referential_flag", c.column, {"flag": flag})
+            ok = f"__ri_ok_{i}"
+            dim = dims[dim_name].select(F.col(c.column)).distinct().withColumn(ok, F.lit(True))
+            checked = checked.join(dim, on=c.column, how="left")
+            violations.append(F.col(c.column).isNotNull() & F.col(ok).isNull())
+        else:
+            violations.append(C.violation_expr(c, checked))
 
-    df_b = with_bucket(df, key, n_buckets)
+    df_b = with_bucket(checked, key, n_buckets)
 
     # ---- resume: skip completed buckets -------------------------------
     completed: set[int] = set()
     if ledger is not None and ledger.exists("bucket_stats"):
-        prior = ledger.read("bucket_stats").filter(
-            (F.col("constraint_hash") == chash) & (F.col("n_buckets") == n_buckets)
-        )
+        prior = this_suite(ledger.read("bucket_stats"))
         completed = {r.bucket_id for r in prior.select("bucket_id").distinct().collect()}
     remaining_df = df_b
     if completed:
@@ -434,27 +386,20 @@ def _validate_impl(
         kll_col = drift_spec.column if drift_spec is not None else None
 
     # ---- slim projection: decode wide arrays once ----------------------
-    # (size(tokens) is materialized here; stats + violation extraction
-    # both read the persisted slim frame, so the heavy parquet scan of
-    # the token arrays happens exactly once per run)
-    slim_df, row_cs = _slim_projection(
-        remaining_df, row_cs, key, drift_spec, [uc.column for uc in unique_cs],
-        metric_cols if kll_col is None else [*metric_cols, kll_col],
-    )
+    # (every row constraint collapses to its violation flag here; stats
+    # + violation extraction both read the persisted slim frame, so the
+    # heavy parquet scan of the token arrays happens exactly once per run)
+    sketch_cols = [drift_spec.column] if drift_spec is not None else []
+    sketch_cols += metric_cols if kll_col is None else [*metric_cols, kll_col]
+    slim_df = _slim_projection(remaining_df, violations, key, sketch_cols)
     if extract_violation_rows:
         slim_df = slim_df.persist()
 
     # ---- collect sketches for remaining buckets ------------------------
     # uniqueness shuffle: computed once, shared by stats and violations
     dup_counts = None
-    if unique_cs and any(uc.column == key for uc in unique_cs):
-        dup_counts = (
-            slim_df.filter(F.col(key).isNotNull())
-            .groupBy(BUCKET_COL, key)
-            .count()
-            .filter(F.col("count") > 1)
-            .persist()
-        )
+    if unique_cs:
+        dup_counts = C.duplicate_keys(slim_df, key, BUCKET_COL).persist()
     new_stats = _stats_pass(
         slim_df, row_cs, unique_cs, drift_spec, key, dup_counts, kll_col=kll_col,
         metric_cols=metric_cols,
@@ -469,9 +414,7 @@ def _validate_impl(
     stats_snapshot = None
     if ledger is not None:
         stats_snapshot = ledger.append("bucket_stats", new_stats)
-        all_stats = ledger.read("bucket_stats").filter(
-            (F.col("constraint_hash") == chash) & (F.col("n_buckets") == n_buckets)
-        )
+        all_stats = this_suite(ledger.read("bucket_stats"))
     else:
         all_stats = new_stats
 
@@ -528,9 +471,7 @@ def _validate_impl(
         # per-bucket histograms (colliding bucket_ids under different
         # bucketings) into the drift baseline
         prior = _dedupe_earliest(
-            src.read("bucket_stats", snapshot_id=baseline_snapshot_id).filter(
-                (F.col("constraint_hash") == chash) & (F.col("n_buckets") == n_buckets)
-            )
+            this_suite(src.read("bucket_stats", snapshot_id=baseline_snapshot_id))
         )
         n_cells = drift_spec.n_cells if drift_spec is not None else None
         hists = [
@@ -570,13 +511,7 @@ def _validate_impl(
 
     for c in compliance_cs:
         nv = compliance_totals[c.cid]
-        # exact integer arithmetic (unbounded Python ints): a dataset
-        # with exactly min_ratio compliant rows passes — the float
-        # form (1-r)*n flips at the boundary (constraints.
-        # compliance_fraction). Empty input fails: a ratio over
-        # nothing asserts nothing (the metric_range contract).
-        num, den = C.compliance_fraction(c)
-        ok = n_rows_total > 0 and (n_rows_total - nv) * den >= num * n_rows_total
+        ok = C.compliance_passed(c, n_rows_total, nv)
         verdict_rows.append((GLOBAL_BUCKET, c.cid, n_rows_total, nv, bool(ok)))
 
     sketch_metrics = {}
@@ -595,8 +530,6 @@ def _validate_impl(
 
     metric_values: dict = {}
     if metric_cs:
-        import math as _math
-
         for m in metric_cols:
             nn = sum(getattr(r, f"_m_nn_{m}", 0) or 0 for r in merged_rows)
             n = sum(getattr(r, f"_m_n_{m}", 0) or 0 for r in merged_rows)
@@ -611,7 +544,7 @@ def _validate_impl(
             metric_values[m] = {
                 "null_rate": 1.0 - (nn / n_rows_total) if n_rows_total else None,
                 "mean": mean,
-                "stddev": _math.sqrt(var) if var is not None else None,
+                "stddev": math.sqrt(var) if var is not None else None,
                 "min": min(lows) if lows else None,
                 "max": max(highs) if highs else None,
             }
@@ -629,37 +562,30 @@ def _validate_impl(
     # contradict a row validated in a prior run), so they re-evaluate
     # over the FULL input each run — like drift, unlike row-level kinds.
     # The scan reads only determinant + dependent columns (pruned); one
-    # map-side-combined groupBy shuffle per constraint; verdict counts
-    # come from a single 1-row action over the grouped frame.
+    # map-side-combined groupBy shuffle per constraint (C.fd_groups);
+    # verdict counts come from a single 1-row action over its groups.
     fd_metrics: dict = {}
     fd_viol_frames: list[DataFrame] = []
     fd_grouped_persisted: list[DataFrame] = []
     for c in fd_cs:
         dets = list(c.params["determinants"])
-        # conditional FD: the where predicate scopes BOTH the evidence
-        # groupBy and the violation semi-join below (an out-of-scope
-        # row must neither create a bad group nor be flagged by one)
-        fd_df = df
-        if c.params.get("where"):
-            fd_df = fd_df.filter(F.expr(c.params["where"]))
-        grouped = (
-            fd_df.filter(F.col(c.column).isNotNull())
-            .groupBy(*[F.col(d) for d in dets])
-            .agg((F.min(c.column) != F.max(c.column)).alias("_fd_bad"))
-        )
+        grouped = C.fd_groups(df, c)
         if extract_violation_rows:
             grouped = grouped.persist()
             fd_grouped_persisted.append(grouped)
         row = grouped.agg(
             F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("_fd_bad").cast("long")).alias("bad"),
+            F.sum(F.col("violated").cast("long")).alias("bad"),
         ).collect()[0]
         n_groups = int(row["n"] or 0)
         n_bad = int(row["bad"] or 0)
         verdict_rows.append((GLOBAL_BUCKET, c.cid, n_groups, n_bad, n_bad == 0))
         fd_metrics[c.cid] = n_bad
         if extract_violation_rows:
-            bad_groups = grouped.filter(F.col("_fd_bad")).select(
+            # a conditional FD's where predicate scopes the semi-join
+            # too: an out-of-scope row is never flagged by a bad group
+            fd_df = C.fd_scope(df, c)
+            bad_groups = grouped.filter(F.col("violated")).select(
                 *[F.col(d).alias(f"_fd_det_{j}") for j, d in enumerate(dets)]
             )
             # null-safe equality: a NULL determinant forms its own group
@@ -707,7 +633,7 @@ def _validate_impl(
     # same thresholds as the global verdict; stays a lazy DataFrame —
     # nothing per-group ever reaches the driver here
     group_drift = None
-    if drift_by_df is not None and drift_cs and merged_hist:
+    if drift_by is not None and drift_cs and merged_hist:
         ks_thr = next(
             (c.params["threshold"] for c in drift_cs if c.kind == "drift_ks"), 0.1
         )
@@ -715,7 +641,7 @@ def _validate_impl(
             (c.params["threshold"] for c in drift_cs if c.kind == "drift_psi"), 0.2
         )
         group_drift = D.grouped_drift(
-            drift_by_df,
+            df.select(F.col(drift_by), F.col(drift_spec.column)),
             drift_spec,
             baseline if baseline is not None else merged_hist,
             drift_by,
@@ -738,17 +664,13 @@ def _validate_impl(
     if extract_violation_rows:
         # slim_df covers exactly the remaining (unvalidated) buckets, so
         # a resumed run never re-extracts completed ones
-        viols_new = C.extract_violations(slim_df, row_cs, key=key)
+        viols_new = C.failed_rows(
+            slim_df, [(c.cid, F.col(_flag(i))) for i, c in enumerate(row_cs)], key
+        )
         for uc in unique_cs:
-            if dup_counts is not None and uc.column == key:
-                uviol = dup_counts.select(
-                    F.col(key), F.lit(uc.cid).alias("constraint_id")
-                )
-            else:
-                _, uviol = C.evaluate_uniqueness(slim_df, uc.column, BUCKET_COL)
-                if uc.column != key:
-                    uviol = uviol.withColumnRenamed(uc.column, key)
-            viols_new = viols_new.unionByName(uviol)
+            viols_new = viols_new.unionByName(
+                dup_counts.select(F.col(key), F.lit(uc.cid).alias("constraint_id"))
+            )
         # deterministic per-constraint cap (hash-minimum selection, the
         # verdict-identity discipline): verdict COUNTS are unaffected —
         # they come from the stats pass — only the materialized row
@@ -765,11 +687,7 @@ def _validate_impl(
                 .withColumn("n_buckets", F.lit(n_buckets))
                 .withColumn("run_id", F.lit(run_id)),
             )
-            viols = (
-                ledger.read("violations")
-                .filter((F.col("constraint_hash") == chash) & (F.col("n_buckets") == n_buckets))
-                .select(key, "constraint_id")
-            )
+            viols = this_suite(ledger.read("violations")).select(key, "constraint_id")
             # re-cap the MERGED read: each resumed run appends its own
             # <= cap rows per constraint, so the union can exceed the
             # cap — the returned set must honor it (deterministic:

@@ -657,7 +657,7 @@ def compliance_monitor_stream(
     overwrite keeps replays idempotent — a crashed epoch re-runs,
     re-reads the SAME prior rows, and replaces its own partition.
     The pass rule is the engine's exact integer boundary comparison
-    (constraints.compliance_fraction). ``files_per_trigger`` bounds
+    (constraints.compliance_passed). ``files_per_trigger`` bounds
     each micro-batch for testing multi-epoch behavior."""
     from kglids_spark.operators import constraints as C
 
@@ -667,7 +667,6 @@ def compliance_monitor_stream(
             "compliance_monitor_stream takes compliance constraints only "
             f"(got kinds {sorted({c.kind for c in constraints})})"
         )
-    fracs = {c.cid: C.compliance_fraction(c) for c in comp}
 
     reader = spark.readStream.schema(TOKENS_SCHEMA)
     if files_per_trigger is not None:
@@ -710,8 +709,7 @@ def compliance_monitor_stream(
             nv = int(row[f"_v{i}"] or 0)
             pn, pv = prior.get(c.cid, (0, 0))
             cum_n, cum_v = pn + n, pv + nv
-            num, den = fracs[c.cid]
-            ok = cum_n > 0 and (cum_n - cum_v) * den >= num * cum_n
+            ok = C.compliance_passed(c, cum_n, cum_v)
             out_rows.append(
                 (int(epoch_id), c.cid, n, nv, cum_n, cum_v, bool(ok))
             )

@@ -279,19 +279,19 @@ def test_emd_metric_properties(h1, h2):
     st.sampled_from([0.0, 0.2, 0.5, 0.8, 0.9, 0.95, 0.99, 0.999, 1.0]),
 )
 def test_compliance_fraction_matches_exact_rational(n, nv, ratio):
-    """The engine's integer pass rule equals exact rational arithmetic
-    against the DECIMAL reading of the ratio for every (n, nv) —
-    including the boundary cases the float form gets wrong."""
+    """The engine's compliance verdict (constraints.compliance_passed,
+    which validate() and the streaming monitor call) equals exact
+    rational arithmetic against the DECIMAL reading of the ratio for
+    every (n, nv) — including the boundary cases the float form gets
+    wrong."""
     from fractions import Fraction
 
     from kglids_spark.operators import constraints as C
 
     nv = min(nv, n)
     c = C.compliance("x", ratio, columns=["x"])
-    num, den = C.compliance_fraction(c)
-    engine = n > 0 and (n - nv) * den >= num * n
     exact = n > 0 and Fraction(n - nv, max(n, 1)) >= Fraction(str(ratio))
-    assert engine == exact
+    assert C.compliance_passed(c, n, nv) == exact
 
 
 @settings(max_examples=30, deadline=None)

@@ -302,6 +302,60 @@ def test_kll_col_all_null_or_non_numeric_gives_none(spark, monkeypatch):
     assert all("kll_sketch_agg" in p and "InPandas" not in p for p in plans)
 
 
+def test_slim_frame_holds_key_bucket_sketch_cols_and_flags(spark, tokens_df, monkeypatch):
+    """The persisted slim frame carries the key, the bucket, the
+    sketched column and one boolean violation flag per row constraint:
+    the token array, the source strings and the vector column never
+    enter it."""
+    import kglids_spark.operators.validate as V
+
+    df = tokens_df.withColumn("emb", F.array(F.lit(0.6), F.lit(0.8)))
+    suite = C.default_suite(SOURCES) + [
+        C.element_range("tokens", 0, 49000, cid="tok_vocab"),
+        C.vector_sanity("emb", dim=2, cid="emb_ok"),
+    ]
+    n_flags = len(C.row_constraints(suite))
+    seen = []
+    stats_pass = V._stats_pass
+
+    def spy(slim_df, *args, **kwargs):
+        seen.append(slim_df.schema)
+        return stats_pass(slim_df, *args, **kwargs)
+
+    monkeypatch.setattr(V, "_stats_pass", spy)
+    res = V.validate(df, suite, n_buckets=N_BUCKETS)
+    assert len(seen) == 1
+    flags = [V._flag(i) for i in range(n_flags)]
+    assert seen[0].names == ["doc_id", BUCKET_COL, "n_tok", *flags]
+    assert all(seen[0][f].dataType.simpleString() == "boolean" for f in flags)
+    assert not {"tokens", "source", "emb"} & set(seen[0].names)
+    totals = {
+        r.constraint_id: r.total
+        for r in res.verdicts.groupBy("constraint_id")
+        .agg(F.sum("n_violations").alias("total"))
+        .collect()
+    }
+    assert totals["tok_vocab"] > 0 and totals["emb_ok"] == 0
+
+
+def test_unique_on_non_key_column_is_rejected(spark):
+    """Bucket-local duplicate counts are exact only for the bucketing
+    key: unique on any other column raises and points at key=; with
+    key= set to that column the count is exact at every bucket count."""
+    rows = [(f"d{i}", f"u{i % 50}") for i in range(200)]  # each url 4 times
+    df = spark.createDataFrame(rows, "doc_id string, url string")
+    suite = [C.unique("url", cid="url_unique")]
+    with pytest.raises(ValueError, match="key='url'"):
+        validate(df, suite, n_buckets=16)
+    for n_buckets in (1, 16):
+        res = validate(df, suite, key="url", n_buckets=n_buckets, kll_col=None)
+        total = res.verdicts.agg(F.sum("n_violations")).collect()[0][0]
+        assert total == 50
+        viols = res.violations.collect()
+        assert {r.constraint_id for r in viols} == {"url_unique"}
+        assert {r.url for r in viols} == {f"u{i}" for i in range(50)}
+
+
 def test_pre_format_tag_ledger_is_not_resumed(spark, tokens_df, tmp_path, monkeypatch):
     """A ledger row written under the hash formula that predates the
     sketch-format tag (its KLL bytes are the numpy format) is never
@@ -497,6 +551,13 @@ def test_fd_violating_groups_exact(fd_df):
     # 'b' violated with 2 rows; the NULL determinant group violated too
     # (GROUP BY semantics); 'a' consistent; 'c' has no non-null deps
     assert got == {("b", 2), (None, 2)}
+    # fd_groups, which validate() counts and semi-joins, keeps every
+    # evidence group and flags the violated ones
+    groups = {
+        (r["det"], r["n_rows_in_group"], r["violated"])
+        for r in C.fd_groups(fd_df, c).collect()
+    }
+    assert groups == {("a", 2, False), ("b", 2, True), (None, 2, True)}
 
 
 def test_fd_verdict_and_violation_rows(fd_df):
@@ -773,8 +834,8 @@ def test_element_range_counts_match_duckdb(tokens_df, duck):
 
 def test_element_range_null_semantics(spark):
     """NULL element violates; NULL array does not (not_null's job);
-    empty array passes. Checked through BOTH compilation paths: the
-    raw violation_expr and validate's slim-projection rewrite."""
+    empty array passes. Checked on violation_expr directly and through
+    validate(), whose slim projection carries its flag."""
     df = spark.createDataFrame(
         [
             ("a", [1, 2, 3]),
@@ -814,9 +875,9 @@ def test_element_range_json_roundtrip_and_hash():
 
 def test_vector_sanity_semantics(spark):
     """The three vector failure modes each violate; a NULL array does
-    not (not_null's job); a clean unit vector passes. Checked through
-    BOTH compilation paths: raw violation_expr and validate's
-    slim-projection rewrite."""
+    not (not_null's job); a clean unit vector passes. Checked on
+    violation_expr directly and through validate(), whose slim
+    projection carries its flag."""
     nan, inf = float("nan"), float("inf")
     df = spark.createDataFrame(
         [
@@ -1026,11 +1087,15 @@ def test_cli_drift_by_section(tmp_path):
 
 def test_cli_outlier_fence_verdict(tmp_path):
     """--outlier-fence adds a Tukey-fence verdict: a clean lognormal
-    n_tok column passes at a loose rate, fails at rate 0, and a
-    malformed spec is a usage error before any Spark work."""
+    n_tok column passes at a loose rate and fails at rate 0; a second
+    spec for the same column, a malformed spec, and an all-NULL column
+    (nothing checked) fail."""
     import json as J
     import subprocess
     import sys
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
     def run(*extra):
         return subprocess.run(
@@ -1038,34 +1103,54 @@ def test_cli_outlier_fence_verdict(tmp_path):
             capture_output=True, text=True,
         )
 
+    def fence(inp, spec, *extra):
+        r = run(
+            "validate", "--input", inp, "--cpus", "4", "--no-violation-rows",
+            "--outlier-fence", spec, *extra,
+        )
+        assert r.returncode == 0, r.stdout[-500:] + r.stderr[-500:]
+        return J.loads(r.stdout.strip().splitlines()[-1])
+
     clean = str(tmp_path / "of_clean")
     assert (
         run("generate", "--rows", "5000", "--out", clean, "--no-violations").returncode
         == 0
     )
-    r = run(
-        "validate", "--input", clean, "--cpus", "4", "--no-violation-rows",
-        "--outlier-fence", "n_tok 1.5 0.5",
-        "--outlier-fence", "n_tok 1.5 0.0",
-    )
-    assert r.returncode == 0, r.stdout[-500:] + r.stderr[-500:]
-    out = J.loads(r.stdout.strip().splitlines()[-1])
-    # both specs target the same column; the second (rate 0) overwrites
-    # the verdict key only if it produced a stricter verdict — the key
-    # is per-column, so the LAST spec wins; a lognormal tail always has
-    # some outliers above the 1.5 fence
+    loose = fence(clean, "n_tok 1.5 0.5")["verdict_summary"]["outlier_fence(n_tok)"]
+    assert loose["passed"] is True
+    out = fence(clean, "n_tok 1.5 0.0")
+    # a lognormal tail always has some outliers above the 1.5 fence
     v = out["verdict_summary"]["outlier_fence(n_tok)"]
     assert v["violations"] > 0 and v["passed"] is False
+    assert v["violations"] == loose["violations"]
     assert out["metrics"]["outlier_rate(n_tok)"] > 0.0
     assert out["metrics"]["outlier_fence_hi(n_tok)"] > out["metrics"][
         "outlier_fence_lo(n_tok)"
     ]
-    r = run(
-        "validate", "--input", clean, "--cpus", "4", "--no-violation-rows",
-        "--outlier-fence", "n_tok nope 0.01",
+    for specs in (["n_tok 1.5 0.5", "n_tok 3 0.0"], ["n_tok nope 0.01"]):
+        r = run(
+            "validate", "--input", clean, "--cpus", "4", "--no-violation-rows",
+            *[x for spec in specs for x in ("--outlier-fence", spec)],
+        )
+        assert r.returncode != 0
+        assert "outlier-fence" in (r.stderr + r.stdout)
+
+    # an all-NULL column: the rate over nothing must not pass
+    null_dir = tmp_path / "of_null"
+    null_dir.mkdir()
+    pq.write_table(
+        pa.table({
+            "doc_id": [f"d{i}" for i in range(5)],
+            "x": pa.array([None] * 5, pa.float64()),
+        }),
+        str(null_dir / "part-0.parquet"),
     )
-    assert r.returncode != 0
-    assert "outlier-fence" in (r.stderr + r.stdout)
+    suite = tmp_path / "of_suite.json"
+    suite.write_text(C.suite_to_json([C.not_null("doc_id")]))
+    out = fence(str(null_dir), "x 1.5 0.5", "--suite", str(suite))
+    assert out["verdict_summary"]["outlier_fence(x)"] == {
+        "violations": 0, "passed": False
+    }
 
 
 def test_conditional_fd_scopes_evidence_and_violations(spark):
