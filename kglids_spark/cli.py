@@ -59,10 +59,13 @@ def _group_drift_summary(gd, group_col: str, cap: int, fields: list[str]) -> dic
     """Bounded JSON summary of a per-group drift frame, shared by
     validate --drift-by and token-drift --by: exact totals reduce
     in-plan to ONE row, only the ≤ cap worst failing groups (by PSI)
-    are ever collected, and the frame PERSISTS across the two actions
-    — without the persist each action re-runs the grouped explode/
-    aggregation against the raw input (review r5). ``fields`` names
-    the per-group row fields to surface; floats round to 6 dp."""
+    are ever collected — listed worst first, each carrying its group
+    value as ``"group"`` (null for the NULL group, so it never
+    collides with a real "None" group) — and the frame PERSISTS
+    across the two actions: without the persist each action re-runs
+    the grouped explode/aggregation against the raw input (review r5).
+    ``fields`` names the per-group row fields to surface; floats round
+    to 6 dp."""
     gd = gd.persist()
     try:
         tot = gd.agg(
@@ -83,14 +86,23 @@ def _group_drift_summary(gd, group_col: str, cap: int, fields: list[str]) -> dic
         "group_col": group_col,
         "groups_total": int(tot.n),
         "groups_failed": int(tot.failed or 0),
-        "failing": {
-            str(r[group_col]): {
-                f: (round(r[f], 6) if isinstance(r[f], float) else r[f])
-                for f in fields
+        "failing": [
+            {
+                "group": _json_value(r[group_col]),
+                **{
+                    f: (round(r[f], 6) if isinstance(r[f], float) else r[f])
+                    for f in fields
+                },
             }
             for r in worst
-        },
+        ],
     }
+
+
+def _json_value(v):
+    """A group value as JSON: scalars stay native (NULL → null), any
+    other type (dates, decimals, structs) becomes its string form."""
+    return v if v is None or isinstance(v, (bool, int, float, str)) else str(v)
 
 
 def main(argv: list[str] | None = None) -> int:

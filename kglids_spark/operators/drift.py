@@ -4,10 +4,13 @@ The reference has no drift operator (SURVEY.md §2.4 A14 — ours); the
 north_star pins KS + PSI on `n_tok` histograms vs a baseline snapshot.
 
 Design for 10^12 rows: the expensive part — counting — is a fixed-width
-histogram computed as sum-of-indicator aggregate expressions inside the
-main per-bucket pass (mergeable exact counts, map-side partials). The
-KS/PSI arithmetic runs driver-side on the merged ≤(nbins+2)-long count
-arrays, which is O(nbins) regardless of data size (SURVEY.md §4).
+histogram. Each row maps to one cell index (``cell_expr``, O(1) per row
+whatever nbins is) and ``histogram_df`` counts per (group, cell) with
+map-side partials, so the shuffle carries at most groups × n_cells rows
+of mergeable exact counts; validate's per-bucket pass, grouped_drift and
+the streaming monitor all share it. The KS/PSI arithmetic runs
+driver-side on the merged ≤(nbins+2)-long count arrays, which is
+O(nbins) regardless of data size (SURVEY.md §4).
 """
 
 from __future__ import annotations
@@ -26,6 +29,20 @@ class HistSpec:
     hi: float = 8192.0
     nbins: int = 64
 
+    def __post_init__(self) -> None:
+        # a zero or infinite width would fail (or bin nothing) only
+        # inside a Spark job; reject the spec here instead
+        if not (
+            self.nbins >= 1
+            and math.isfinite(self.lo)
+            and self.hi > self.lo
+            and 0 < self.width < math.inf
+        ):
+            raise ValueError(
+                f"HistSpec({self.column}): needs nbins >= 1 and finite lo < hi, "
+                f"got lo={self.lo}, hi={self.hi}, nbins={self.nbins}"
+            )
+
     @property
     def width(self) -> float:
         return (self.hi - self.lo) / self.nbins
@@ -36,34 +53,64 @@ class HistSpec:
         return self.nbins + 2
 
 
-def histogram_exprs(spec: HistSpec, prefix: str = "hist") -> list[Column]:
-    """One sum-of-indicator per cell; all cells evaluate in one scan."""
-    col = F.col(spec.column).cast("double")
-    cells = [
-        F.sum((col < F.lit(spec.lo)).cast("long")).alias(f"{prefix}_under"),
-    ]
-    for i in range(spec.nbins):
-        lo_i = spec.lo + i * spec.width
-        hi_i = spec.lo + (i + 1) * spec.width
-        cond = (col >= F.lit(lo_i)) & (col < F.lit(hi_i))
-        if i == spec.nbins - 1:  # close the last bin on the right
-            cond = (col >= F.lit(lo_i)) & (col <= F.lit(spec.hi))
-        cells.append(F.sum(cond.cast("long")).alias(f"{prefix}_{i}"))
-    cells.append(F.sum((col > F.lit(spec.hi)).cast("long")).alias(f"{prefix}_over"))
-    return cells
+def cell_expr(spec: HistSpec) -> Column:
+    """Histogram cell of ``spec.column`` as an int, NULL for a NULL
+    value: 0 below ``lo``, ``nbins + 1`` above ``hi`` (NaN included —
+    Spark orders NaN above +inf), else ``k + 1`` for bin ``k``, the
+    half-open ``[lo + k*width, lo + (k+1)*width)``, with the last bin
+    closed at ``hi``. ``floor((v - lo) / width)`` can round one bin off
+    near an edge, so ``k`` is corrected by one step against the edges,
+    computed as ``spec.lo + i * spec.width`` in the same double
+    arithmetic as every other consumer of the spec's bin edges."""
+    v = F.col(spec.column).cast("double")
+    lo, width, last = F.lit(spec.lo), F.lit(spec.width), spec.nbins - 1
 
+    def edge(i: Column) -> Column:
+        return lo + i.cast("double") * width
 
-def histogram_array_expr(spec: HistSpec) -> Column:
-    """The same histogram as a single array<long> column (for sketch
-    persistence in the checkpoint ledger)."""
-    return F.array(*histogram_exprs(spec, prefix="h")).cast("array<long>")
+    k = F.least(F.greatest(F.floor((v - lo) / width), F.lit(0)), F.lit(last))
+    k = (
+        F.when(v < edge(k), k - 1)
+        .when((k < last) & (v >= edge(k + 1)), k + 1)
+        .otherwise(k)
+    )
+    return (
+        F.when(v < lo, F.lit(0))
+        .when(v > F.lit(spec.hi), F.lit(spec.nbins + 1))
+        # not otherwise(): greatest/least skip NULLs, so k is 0 there
+        .when(v.isNotNull(), k + 1)
+        .cast("int")
+    )
 
 
 def histogram_df(df: DataFrame, spec: HistSpec, group_cols: list[str] | None = None) -> DataFrame:
-    agg = histogram_array_expr(spec).alias("hist")
-    if group_cols:
-        return df.groupBy(*group_cols).agg(agg)
-    return df.agg(agg)
+    """(*group_cols, hist: array<long>, n_rows): the exact histogram
+    of ``spec.column`` per group (one row overall without groups), and
+    the group's row count, NULL values included. Each row contributes
+    one ``cell_expr`` index; a map-side-combined (group, cell) count
+    moves at most groups × n_cells rows through the shuffle, and each
+    group's counts are zero-filled into one dense ``n_cells`` array. A
+    group whose values are all NULL gets a row of zeros, and the
+    global form returns one row even on empty input."""
+    keys = list(group_cols or [])
+    counts = df.groupBy(*keys, cell_expr(spec).alias("_cell")).count()
+    per_group = counts.groupBy(*keys).agg(
+        # collect_list skips the NULL-value cell's entry (a map key
+        # cannot be NULL); its rows still count in n_rows
+        F.map_from_entries(
+            F.collect_list(
+                F.when(F.col("_cell").isNotNull(), F.struct("_cell", "count"))
+            )
+        ).alias("_m"),
+        F.sum("count").alias("n_rows"),
+    )
+    dense = F.transform(
+        F.sequence(F.lit(0), F.lit(spec.n_cells - 1)),
+        lambda i: F.coalesce(F.element_at("_m", i), F.lit(0).cast("long")),
+    )
+    return per_group.select(
+        *keys, dense.alias("hist"), F.coalesce("n_rows", F.lit(0).cast("long")).alias("n_rows")
+    )
 
 
 def merge_histograms(hists: list[list[int]]) -> list[int]:
@@ -290,13 +337,14 @@ def grouped_drift(
     want this over). Returns (group, n_rows, ks, psi, ks_pass,
     psi_pass), one row per group, NULL groups included.
 
-    Scale shape: per-group histograms build in ONE map-side-combined
-    groupBy — the same sum-of-indicator cells as the global pass, no
-    explode; the baseline (nbins+2 longs, e.g. a ledger snapshot's
-    `histogram_array_expr` row) enters the plan as a literal; the KS
-    and PSI reductions are zero-shuffle higher-order ``F.aggregate``
-    folds over the zipped cell arrays, so results never leave the
-    executors — no per-group driver loop, fine at 10^6 groups.
+    Scale shape: per-group histograms are ``histogram_df`` — the same
+    cell index per row as the global pass, one map-side-combined
+    (group, cell) count, no explode; the baseline (nbins+2 longs, e.g.
+    a ledger snapshot's merged ``hist`` rows) enters the plan as a
+    literal; the KS and PSI reductions are zero-shuffle higher-order
+    ``F.aggregate`` folds over the zipped cell arrays, so results never
+    leave the executors — no per-group driver loop, fine at 10^6
+    groups.
     ``evaluate_drift`` stays the right tool for the single global
     verdict; this is its distributed many-groups sibling. Semantics
     match evaluate_drift cell-for-cell: a group with zero in-range
@@ -307,11 +355,8 @@ def grouped_drift(
             f"baseline has {len(baseline_hist)} cells, spec wants {spec.n_cells}"
         )
     h = histogram_df(df, spec, group_cols=[group_col])
-    # a group whose every value is NULL aggregates NULL cells (sum over
-    # an empty set) — coalesce to 0 so it reports n_rows=0, not NULL
-    cells = F.transform("hist", lambda x: F.coalesce(x.cast("double"), F.lit(0.0)))
     return _fold_drift_verdicts(
-        h.withColumn("__cells", cells),
+        h.withColumn("__cells", F.transform("hist", lambda x: x.cast("double"))),
         baseline_hist,
         group_col,
         "n_rows",

@@ -450,11 +450,11 @@ def truncation_stats(
     to a training window size.
 
     One map-side-combined aggregation computes every L's cells in a
-    single scan of the length column (the histogram_exprs discipline —
-    conditional sums, no explode, no shuffle beyond the 1-row
-    reduction); the per-L rows are then a driver-side unpivot of that
-    single row. NULL lengths are excluded everywhere (not_null's
-    job)."""
+    single scan of the length column (conditional sums, one per
+    candidate L — a handful, unlike a histogram's many cells, so no
+    explode and no shuffle beyond the 1-row reduction); the per-L rows
+    are then a driver-side unpivot of that single row. NULL lengths
+    are excluded everywhere (not_null's job)."""
     if not seq_lens:
         raise ValueError("seq_lens must name at least one candidate length")
     if any(int(s) <= 0 for s in seq_lens):

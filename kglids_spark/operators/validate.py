@@ -10,10 +10,14 @@ become transactional appends of mergeable sketch rows.
 Scale design (10^12 rows, 1000 executors):
 - ONE main scan per run computes, per logical bucket: row count, every
   row-level violation count, an HLL++ sketch of doc_id
-  (hll_sketch_agg — binary, mergeable), an exact fixed-width histogram
-  of the drift column, and a KLL quantile sketch with min/max of the
-  KLL column (kll_sketch_agg_double). All are JVM aggregates with
-  map-side partials; the shuffle moves only n_buckets small rows.
+  (hll_sketch_agg — binary, mergeable), and a KLL quantile sketch with
+  min/max of the KLL column (kll_sketch_agg_double). All are JVM
+  aggregates with map-side partials; the shuffle moves only n_buckets
+  small rows.
+- The exact fixed-width histogram of the drift column maps each row
+  to one cell index (drift.cell_expr) and counts per (bucket, cell),
+  map-side combined, over the same persisted slim frame; the shuffle
+  moves at most n_buckets × n_cells rows.
 - Uniqueness adds the one unavoidable key shuffle (groupBy doc_id),
   bucket-local because buckets hash the same key.
 - Resume: completed bucket ids are read from the ledger; on an Iceberg
@@ -101,7 +105,11 @@ def _stats_pass(
     ``_flag(i)``, plus the uniqueness shuffle, joined into one sketch
     row per bucket. ``dup_counts`` is the persisted
     ``C.duplicate_keys`` frame of the key, shared with violation
-    extraction so the uniqueness shuffle runs exactly once.
+    extraction so the uniqueness shuffle runs exactly once. The drift
+    histogram is ``D.histogram_df`` over the same slim frame, a
+    (bucket, cell) count joined on the bucket like the duplicate
+    counts: one cell index per row instead of a sum buffer per cell in
+    the main aggregate.
 
     ``kll_col``: also attach min, max and a KLL quantile sketch
     (Spark's native ``kll_sketch_agg_double``, k=200) of that column,
@@ -121,8 +129,6 @@ def _stats_pass(
             F.max(v).alias("v_max"),
             F.kll_sketch_agg_double(v).alias("kll"),
         ]
-    if drift_spec is not None:
-        aggs.append(D.histogram_array_expr(drift_spec).alias("hist"))
     # metric constraints: mergeable per-bucket sums — the cross-bucket
     # merge (driver side, n_buckets rows) reconstructs the EXACT global
     # stat, so metric verdicts share resume semantics with the sketches
@@ -163,7 +169,10 @@ def _stats_pass(
                 F.create_map(*[x for uc in unique_cs for x in (F.lit(uc.cid), n_dup)]),
             ),
         ).drop("_dup_keys")
-    if drift_spec is None:
+    if drift_spec is not None:
+        hist = D.histogram_df(df_b, drift_spec, [BUCKET_COL]).select(BUCKET_COL, "hist")
+        stats = stats.join(hist, BUCKET_COL, "left")
+    else:
         stats = stats.withColumn("hist", F.lit(None).cast("array<long>"))
     if kll_col is None:
         stats = (
@@ -490,7 +499,6 @@ def _validate_impl(
     verdict_rows: list[tuple] = []
     n_rows_total = 0
     baseline = baseline_hist
-    merged_hist: list[int] = []
     # compliance is counted per bucket (it rides the scan, checkpoints,
     # and resumes like every row constraint) but VERDICTED globally: a
     # per-bucket ratio would flip with bucket boundaries, so totals
@@ -506,9 +514,8 @@ def _validate_impl(
                 compliance_totals[c.cid] += nv
                 continue
             verdict_rows.append((int(r.bucket_id), c.cid, int(r.n_rows), nv, nv == 0))
-        if drift_spec is not None and r.hist is not None:
-            merged_hist = D.merge_histograms([merged_hist, list(r.hist)]) if merged_hist else list(r.hist)
 
+    merged_hist = D.merge_histograms([list(r.hist) for r in merged_rows if r.hist is not None])
     for c in compliance_cs:
         nv = compliance_totals[c.cid]
         ok = C.compliance_passed(c, n_rows_total, nv)

@@ -455,10 +455,11 @@ def drift_monitor_stream(
     group_col: str | None = None,
 ):
     """Per-micro-batch distribution-drift monitor: each batch's
-    histogram (one map-side indicator-sum aggregate, drift.py:39-60)
-    is compared against a FIXED baseline histogram (e.g. resolved from
-    a ledger snapshot, the batch path's "KS/PSI vs a baseline Iceberg
-    snapshot") and a one-row verdict (epoch, n_rows, ks, psi, passes)
+    histogram and row count (one ``drift.histogram_df`` action, a
+    map-side-combined count per cell index) is compared against a
+    FIXED baseline histogram (e.g. resolved from a ledger snapshot,
+    the batch path's "KS/PSI vs a baseline Iceberg snapshot") and a
+    one-row verdict (epoch, n_rows, ks, psi, passes)
     is appended to ``out_dir`` as parquet. The stream thereby flags
     WHICH ingestion batch drifted, which the batch validator — a
     whole-table statement — cannot localize.
@@ -472,8 +473,9 @@ def drift_monitor_stream(
     operator's tests).
 
     foreachBatch keeps the heavy work in the batch engine: the
-    histogram aggregate is the same O(n_cells)-row reduction as the
-    batch drift pass, so state never grows with the stream."""
+    histogram is the same ``histogram_df`` reduction to O(n_cells)
+    rows as the batch drift pass, so state never grows with the
+    stream."""
     from kglids_spark.operators import drift as D
 
     stream = spark.readStream.schema(TOKENS_SCHEMA).parquet(input_dir)
@@ -490,10 +492,7 @@ def drift_monitor_stream(
 
     def process(batch_df: DataFrame, epoch_id: int) -> None:
         sess = batch_df.sparkSession
-        row = batch_df.agg(
-            D.histogram_array_expr(spec).alias("hist"),
-            F.count(F.lit(1)).alias("n_rows"),
-        ).collect()[0]
+        row = D.histogram_df(batch_df, spec).collect()[0]
         verdict = D.evaluate_drift(
             list(row.hist), baseline_hist, ks_threshold, psi_threshold
         )

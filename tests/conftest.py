@@ -36,3 +36,33 @@ def duck(tokens_path):
         f"CREATE VIEW tokens AS SELECT * FROM read_parquet('{tokens_path}/*.parquet')"
     )
     return con
+
+
+def _indicator_histogram(values, spec) -> list[int]:
+    """Pure-Python reference of the equi-width histogram's cell
+    semantics: cell 0 counts v < lo; bin i (cell i+1) counts
+    lo + i*width <= v < lo + (i+1)*width, the last bin closed at hi;
+    the last cell counts v > hi and NaN (Spark orders NaN above
+    +inf); NULL (None) counts nowhere."""
+    w = spec.width
+    cells = [0] * spec.n_cells
+    for v in values:
+        if v is None:
+            continue
+        if v < spec.lo:
+            cells[0] += 1
+        if v > spec.hi or v != v:
+            cells[-1] += 1
+        for i in range(spec.nbins):
+            e = spec.lo + i * w
+            if i == spec.nbins - 1:
+                inside = e <= v <= spec.hi
+            else:
+                inside = e <= v < spec.lo + (i + 1) * w
+            cells[i + 1] += inside
+    return cells
+
+
+@pytest.fixture(scope="session")
+def indicator_histogram():
+    return _indicator_histogram

@@ -404,7 +404,8 @@ def test_cli_token_drift_by_feed(spark, tmp_path):
     out = J.loads(r.stdout.strip().splitlines()[-1])
     g = out["group"]
     assert g["groups_total"] == 2
-    assert "bad" in g["failing"] and "a" not in g["failing"]
+    failing = [f["group"] for f in g["failing"]]
+    assert "bad" in failing and "a" not in failing
     assert r.returncode == 2  # the failing feed trips the gate
 
 
@@ -511,3 +512,38 @@ def test_chi2_math():
     # empty-side convention
     assert D.chi2_statistic([0, 0], [5, 5]) == 0.0
     assert D.chi2_statistic([5, 5], [0, 0]) == 0.0
+
+
+def test_histspec_rejects_degenerate_range():
+    """A spec whose bins cannot partition a finite, non-empty range
+    fails at construction, not as a divide-by-zero inside a job."""
+    for kw in (
+        {"lo": 1.0, "hi": 1.0},
+        {"lo": 2.0, "hi": 1.0},
+        {"lo": 0.0, "hi": 10.0, "nbins": 0},
+        {"lo": float("-inf"), "hi": 1.0},
+        {"lo": 0.0, "hi": float("inf")},
+        {"lo": float("nan"), "hi": 1.0},
+    ):
+        with pytest.raises(ValueError, match="HistSpec"):
+            D.HistSpec("v", **kw)
+    assert D.HistSpec("v", lo=-1.0, hi=1.0, nbins=1).n_cells == 3
+
+
+def test_group_drift_summary_null_group_is_json_null(spark):
+    """Failing groups are a PSI-ordered list carrying each group value
+    JSON-native: the NULL group is null and stays distinct from a real
+    "None" group."""
+    from kglids_spark.cli import _group_drift_summary
+
+    gd = spark.createDataFrame(
+        [(None, 5, 0.5, 0.9, False, False), ("None", 5, 0.4, 0.3, False, False),
+         ("ok", 5, 0.0, 0.0, True, True)],
+        "source string, n_rows long, ks double, psi double, ks_pass boolean, psi_pass boolean",
+    )
+    out = json.loads(json.dumps(_group_drift_summary(gd, "source", 5, ["n_rows", "psi"])))
+    assert out["groups_total"] == 3 and out["groups_failed"] == 2
+    assert out["failing"] == [
+        {"group": None, "n_rows": 5, "psi": 0.9},
+        {"group": "None", "n_rows": 5, "psi": 0.3},
+    ]

@@ -400,3 +400,52 @@ def test_kll_union_is_order_free_and_rank_bounded(spark, n, n_buckets, seed, rnd
         lo = np.searchsorted(data, est, side="left")
         hi = np.searchsorted(data, est, side="right")
         assert lo - slack <= target <= hi + slack
+
+
+# ---------------------------------------------------------------------------
+# equi-width histogram: one cell index per row == the indicator semantics
+
+
+@settings(max_examples=12, deadline=None)
+@given(
+    st.floats(min_value=-1e6, max_value=1e6),
+    st.floats(min_value=1e-3, max_value=1e3),
+    st.integers(min_value=1, max_value=70),
+    st.lists(st.floats(min_value=-2.0, max_value=72.0), max_size=20),
+)
+def test_histogram_df_matches_indicator_reference(
+    spark, indicator_histogram, lo, width, nbins, offsets
+):
+    """histogram_df equals the pure-Python indicator reference cell
+    for cell on every edge and one ulp either side of it, NaN, ±inf,
+    NULL and a few interior values — globally and per group (with a
+    NULL group among them)."""
+    import math
+
+    from kglids_spark.operators import drift as D
+
+    spec = D.HistSpec("v", lo=lo, hi=lo + width * nbins, nbins=nbins)
+    edges = [spec.lo + i * spec.width for i in range(nbins)] + [spec.hi]
+    values = [None, math.nan, math.inf, -math.inf]
+    for e in edges:
+        values += [math.nextafter(e, -math.inf), e, math.nextafter(e, math.inf)]
+    values += [lo + o * spec.width for o in offsets]
+    groups = ["a", "b", None]
+    rows = [(groups[i % 3], v) for i, v in enumerate(values)]
+    df = spark.createDataFrame(rows, "g string, v double")
+
+    (glob,) = D.histogram_df(df, spec).collect()
+    assert list(glob.hist) == indicator_histogram(values, spec)
+    assert glob.n_rows == len(values)
+    per_group = {r.g: list(r.hist) for r in D.histogram_df(df, spec, ["g"]).collect()}
+    assert per_group == {
+        g: indicator_histogram([v for gg, v in rows if gg == g], spec) for g in groups
+    }
+
+
+def test_histogram_df_empty_input_is_one_zero_row(spark):
+    from kglids_spark.operators import drift as D
+
+    spec = D.HistSpec("v", lo=0.0, hi=1.0, nbins=4)
+    got = D.histogram_df(spark.createDataFrame([], "v double"), spec).collect()
+    assert [(list(r.hist), r.n_rows) for r in got] == [([0] * spec.n_cells, 0)]

@@ -155,9 +155,7 @@ def test_drift_monitor_stream_flags_shifted_batch(spark, tmp_path):
 
     spec = D.HistSpec(column="n_tok", lo=0.0, hi=2048.0, nbins=64)
     clean = generate_tokens(spark, 8000, seed=1, plant_violations=False)
-    baseline = list(
-        clean.agg(D.histogram_array_expr(spec).alias("h")).collect()[0].h
-    )
+    baseline = list(D.histogram_df(clean, spec).collect()[0].hist)
 
     src = str(tmp_path / "drift_in")
     # file 1: same distribution; file 2: shifted (n_tok doubled)
@@ -368,9 +366,7 @@ def test_drift_monitor_stream_grouped_localizes_feed(spark, tmp_path):
 
     spec = D.HistSpec(column="n_tok", lo=0.0, hi=2048.0, nbins=64)
     clean = generate_tokens(spark, 12000, seed=3, plant_violations=False)
-    baseline = list(
-        clean.agg(D.histogram_array_expr(spec).alias("h")).collect()[0].h
-    )
+    baseline = list(D.histogram_df(clean, spec).collect()[0].hist)
 
     batch = generate_tokens(spark, 12000, seed=4, plant_violations=False)
     dtype = batch.schema["n_tok"].dataType
