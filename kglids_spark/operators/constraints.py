@@ -26,6 +26,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from kglids_spark.session import local_frame
+
 
 @dataclass(frozen=True)
 class Constraint:
@@ -661,7 +663,7 @@ def failed_rows(
     ``flags`` pairs each constraint id with its boolean violation
     Column; an array of failed ids per row is filtered and exploded."""
     if not flags:
-        return df.sparkSession.createDataFrame([], f"{key} string, constraint_id string")
+        return local_frame(df.sparkSession, [], f"{key} string, constraint_id string")
     failed = F.array_compact(F.array(*[F.when(v, F.lit(cid)) for cid, v in flags]))
     return (
         df.select(F.col(key), failed.alias("_failed"))

@@ -20,11 +20,25 @@ Scale design (10^12 rows, 1000 executors):
   moves at most n_buckets × n_cells rows.
 - Uniqueness adds the one unavoidable key shuffle (groupBy doc_id),
   bucket-local because buckets hash the same key.
-- Resume: completed bucket ids are read from the ledger; on an Iceberg
-  table partitioned by bucket(N, doc_id) the NOT IN filter prunes file
-  scans, so a restarted job reads only unvalidated data. Sketch merges
-  are idempotent: dedupe on bucket_id (earliest run wins) before merge
-  (SURVEY.md §7.2 hard-parts 1-3).
+- Stats first: the per-bucket stats rows are collected ONCE (n_buckets
+  small rows) and merged on the driver with the prior rows the resume
+  read collected: per bucket the earliest (completed_at, run_id) wins,
+  so sketch merges are idempotent (SURVEY.md §7.2 hard-parts 1-3). The
+  distinct-key estimate is one hll_union_agg over the winners'
+  sketches. No single task aggregates all buckets, so nothing is tiered.
+- Resume: on an Iceberg table partitioned by bucket(N, doc_id) the
+  NOT IN filter on the completed buckets prunes file scans, so a
+  restarted job reads only unvalidated data.
+- Extraction only when needed: if no row or uniqueness count of this
+  run is non-zero, violation extraction is skipped; otherwise only the
+  failing constraints are extracted, over the dirty buckets.
+- Commit order: violations -> bucket_stats -> runs, the completion
+  marker last. Violation rows are read back only for runs that won at
+  least one bucket, so a run that died mid-commit neither loses nor
+  duplicates rows on resume.
+- Frames built from driver-side values (verdicts, lineage, bucket_stats
+  rows) are Arrow-backed local relations (session.local_frame), and no
+  cached frame outlives a call.
 - Verdicts are keyed on the logical bucket, never
   spark_partition_id(), so N- and 4N-executor runs produce identical
   pass/fail matrices (tested in tests/test_validate.py).
@@ -38,17 +52,19 @@ import math
 import struct
 import time
 import uuid
+import functools
+from contextlib import ExitStack
 from dataclasses import dataclass
 
 import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.window import Window
 
 from kglids_spark.operators import constraints as C
 from kglids_spark.operators import drift as D
 from kglids_spark.plans.buckets import BUCKET_COL, DEFAULT_BUCKETS, with_bucket
+from kglids_spark.session import WIDE_ARRAY_SCAN_CONF, local_frame, scoped_sql_conf
 from kglids_spark.sources.tables import TableStore
 
 VERDICT_SCHEMA = T.StructType(
@@ -62,13 +78,6 @@ VERDICT_SCHEMA = T.StructType(
 )
 
 GLOBAL_BUCKET = -1  # verdict rows for table-level constraints
-
-# Above this bucket count the merged-sketch collect switches from the
-# single-action global aggregate to a two-level aggregation, so no
-# single task ever materializes all buckets (VERDICT r2 "What's wrong
-# #2"). At or below it, one final task holding n_buckets × ~3 KB sketch
-# rows (≤ ~3 MB at 1024) is cheaper than an extra job.
-MERGE_COLLECT_MAX = 1024
 
 _KLL_FAMILY = 15  # DataSketches family id of a KLL sketch
 
@@ -235,14 +244,19 @@ def _kll_union_quantiles(blobs: list[bytes], qs: list[float]) -> list[float | No
     return [float(items[np.searchsorted(cum, math.ceil(q * cum[-1]))]) for q in qs]
 
 
-def _dedupe_earliest(stats: DataFrame) -> DataFrame:
-    """Idempotent-merge rule: earliest (completed_at, run_id) wins per
-    bucket, so re-validated buckets from resumed runs never double
-    count."""
-    w_first = F.row_number().over(
-        Window.partitionBy("bucket_id").orderBy("completed_at", "run_id")
-    )
-    return stats.withColumn("_rn", w_first).filter(F.col("_rn") == 1).drop("_rn")
+def _earliest_per_bucket(rows) -> list[dict]:
+    """Idempotent-merge rule over bucket_stats rows (dicts): per bucket,
+    the earliest (completed_at, run_id) wins, so buckets re-validated by
+    resumed or concurrent runs never double count. Returned in bucket
+    order, so the driver-side sums over them are deterministic."""
+    best: dict[int, dict] = {}
+    for r in rows:
+        b = r["bucket_id"]
+        if b not in best or (r["completed_at"], r["run_id"]) < (
+            best[b]["completed_at"], best[b]["run_id"]
+        ):
+            best[b] = r
+    return [best[b] for b in sorted(best)]
 
 
 def _slim_projection(
@@ -267,15 +281,14 @@ def validate(df: DataFrame, constraints: list[C.Constraint], **kwargs) -> Valida
     (session.WIDE_ARRAY_SCAN_CONF): the token scans that dominate this
     pass want small column vectors, while the session default stays
     tuned for narrow scans (bench_ab.py A/B, BENCH.md round 3)."""
-    from kglids_spark.session import WIDE_ARRAY_SCAN_CONF, scoped_sql_conf
-
-    with scoped_sql_conf(df.sparkSession, WIDE_ARRAY_SCAN_CONF):
-        return _validate_impl(df, constraints, **kwargs)
+    with scoped_sql_conf(df.sparkSession, WIDE_ARRAY_SCAN_CONF), ExitStack() as release:
+        return _validate_impl(df, constraints, release, **kwargs)
 
 
 def _validate_impl(
     df: DataFrame,
     constraints: list[C.Constraint],
+    release: ExitStack,
     *,
     key: str = "doc_id",
     n_buckets: int = DEFAULT_BUCKETS,
@@ -291,7 +304,10 @@ def _validate_impl(
     kll_col: str | None = "auto",
     drift_by: str | None = None,
 ) -> ValidationResult:
-    """``dims`` maps a referential constraint's dim_table name to its
+    """``release`` unpersists every frame this call caches when
+    ``validate`` returns or raises.
+
+    ``dims`` maps a referential constraint's dim_table name to its
     DataFrame for dim-table RI (vs a literal valid_values vocabulary).
 
     ``drift_by`` localizes the drift verdict to a grouping column
@@ -380,14 +396,16 @@ def _validate_impl(
     df_b = with_bucket(checked, key, n_buckets)
 
     # ---- resume: skip completed buckets -------------------------------
-    completed: set[int] = set()
+    # the prior rows are collected whole: the merge below runs on the
+    # driver over prior + new rows
+    prior_rows: list[dict] = []
     if ledger is not None and ledger.exists("bucket_stats"):
-        prior = this_suite(ledger.read("bucket_stats"))
-        completed = {r.bucket_id for r in prior.select("bucket_id").distinct().collect()}
+        prior_rows = [r.asDict() for r in this_suite(ledger.read("bucket_stats")).collect()]
+    completed = {r["bucket_id"] for r in prior_rows}
     remaining_df = df_b
     if completed:
         # On Iceberg: bucket partition pruning turns this into file skips.
-        remaining_df = df_b.filter(~F.col(BUCKET_COL).isin(list(completed)))
+        remaining_df = df_b.filter(~F.col(BUCKET_COL).isin(sorted(completed)))
 
     if kll_col == "auto":
         # default: sketch the drift column (n_tok in the north-star
@@ -403,12 +421,14 @@ def _validate_impl(
     slim_df = _slim_projection(remaining_df, violations, key, sketch_cols)
     if extract_violation_rows:
         slim_df = slim_df.persist()
+        release.callback(slim_df.unpersist)
 
     # ---- collect sketches for remaining buckets ------------------------
     # uniqueness shuffle: computed once, shared by stats and violations
     dup_counts = None
     if unique_cs:
         dup_counts = C.duplicate_keys(slim_df, key, BUCKET_COL).persist()
+        release.callback(dup_counts.unpersist)
     new_stats = _stats_pass(
         slim_df, row_cs, unique_cs, drift_spec, key, dup_counts, kll_col=kll_col,
         metric_cols=metric_cols,
@@ -419,55 +439,22 @@ def _validate_impl(
         .withColumn("n_buckets", F.lit(n_buckets))
         .withColumn("completed_at", F.lit(time.time()))
     )
-
-    stats_snapshot = None
-    if ledger is not None:
-        stats_snapshot = ledger.append("bucket_stats", new_stats)
-        all_stats = this_suite(ledger.read("bucket_stats"))
-    else:
-        all_stats = new_stats
-
-    # ---- idempotent merge: earliest run wins per bucket ----------------
-    # ONE action returns both the per-bucket sketch rows and the
-    # cross-bucket HLL union estimate (collect_list + hll_union_agg in
-    # the same aggregate): a separate estimate job would re-run the
-    # whole input scan (or force a persist) and add ~1s of fixed
-    # per-pass job overhead that the N-vs-4N efficiency pays at 4N.
-    # Past MERGE_COLLECT_MAX buckets the global collect_list would
-    # funnel every sketch row through ONE final task (a straggler at
-    # 10^4-10^5 buckets on a real cluster), so the merge tiers: level 1
-    # groups ~sqrt(n_buckets) buckets per task (collect_list + partial
-    # HLL union), the driver assembles the G small groups, and a tiny
-    # local-list job finishes the HLL union over G sketches.
-    merged = _dedupe_earliest(all_stats)
-    if n_buckets <= MERGE_COLLECT_MAX:
-        agg_row = merged.groupBy().agg(
-            F.collect_list(F.struct(*merged.columns)).alias("rows"),
-            F.hll_sketch_estimate(F.hll_union_agg("hll_key")).alias("est"),
-        ).collect()[0]
-        merged_rows = list(agg_row.rows)
-        est = int(agg_row.est) if agg_row.est is not None else 0
-    else:
-        n_groups = max(int(math.isqrt(n_buckets)), 1)
-        lvl1 = (
-            merged.groupBy(F.pmod(F.col("bucket_id"), F.lit(n_groups)).alias("_g"))
-            .agg(
-                F.collect_list(F.struct(*merged.columns)).alias("rows"),
-                F.hll_union_agg("hll_key").alias("hll_group"),
-            )
-            .collect()
+    # ONE action: n_buckets small rows reach the driver, which merges
+    # them with the prior rows, derives every verdict from them, and
+    # later commits the same rows to the ledger (never a recompute)
+    stats_schema = new_stats.schema
+    new_raw = new_stats.collect()
+    new_rows = [r.asDict() for r in new_raw]
+    merged_rows = _earliest_per_bucket(prior_rows + new_rows)
+    sketches = [(bytes(r["hll_key"]),) for r in merged_rows if r["hll_key"] is not None]
+    est = 0
+    if sketches:
+        est_val = (
+            local_frame(spark, sketches, "hll binary")
+            .agg(F.hll_sketch_estimate(F.hll_union_agg("hll")))
+            .collect()[0][0]
         )
-        merged_rows = [r for grp in lvl1 for r in grp.rows]
-        group_sketches = [
-            (bytes(grp.hll_group),) for grp in lvl1 if grp.hll_group is not None
-        ]
-        est = 0
-        if group_sketches:
-            est_df = spark.createDataFrame(group_sketches, "hll binary")
-            est_val = est_df.agg(
-                F.hll_sketch_estimate(F.hll_union_agg("hll"))
-            ).collect()[0][0]
-            est = int(est_val) if est_val is not None else 0
+        est = int(est_val) if est_val is not None else 0
 
     # ---- baseline from a ledger snapshot (time travel) -----------------
     if baseline_hist is None and baseline_snapshot_id is not None:
@@ -479,14 +466,15 @@ def _validate_impl(
         # hash or bucket count would otherwise silently mix incompatible
         # per-bucket histograms (colliding bucket_ids under different
         # bucketings) into the drift baseline
-        prior = _dedupe_earliest(
-            this_suite(src.read("bucket_stats", snapshot_id=baseline_snapshot_id))
+        snap = this_suite(src.read("bucket_stats", snapshot_id=baseline_snapshot_id))
+        prior = _earliest_per_bucket(
+            r.asDict() for r in snap.select("bucket_id", "run_id", "completed_at", "hist").collect()
         )
         n_cells = drift_spec.n_cells if drift_spec is not None else None
         hists = [
-            list(r.hist)
-            for r in prior.select("hist").collect()
-            if r.hist is not None and (n_cells is None or len(r.hist) == n_cells)
+            list(r["hist"])
+            for r in prior
+            if r["hist"] is not None and (n_cells is None or len(r["hist"]) == n_cells)
         ]
         if not hists:
             raise ValueError(
@@ -506,16 +494,16 @@ def _validate_impl(
     compliance_cs = [c for c in row_cs if c.kind == "compliance"]
     compliance_totals = {c.cid: 0 for c in compliance_cs}
     for r in merged_rows:
-        n_rows_total += r.n_rows
-        vc = r.viol_counts or {}
+        n_rows_total += r["n_rows"]
+        vc = r["viol_counts"] or {}
         for c in row_cs + unique_cs:
             nv = int(vc.get(c.cid, 0))
             if c.kind == "compliance":
                 compliance_totals[c.cid] += nv
                 continue
-            verdict_rows.append((int(r.bucket_id), c.cid, int(r.n_rows), nv, nv == 0))
+            verdict_rows.append((int(r["bucket_id"]), c.cid, int(r["n_rows"]), nv, nv == 0))
 
-    merged_hist = D.merge_histograms([list(r.hist) for r in merged_rows if r.hist is not None])
+    merged_hist = D.merge_histograms([list(r["hist"]) for r in merged_rows if r["hist"] is not None])
     for c in compliance_cs:
         nv = compliance_totals[c.cid]
         ok = C.compliance_passed(c, n_rows_total, nv)
@@ -524,10 +512,10 @@ def _validate_impl(
     sketch_metrics = {}
     if kll_col is not None:
         q25, q50, q75 = _kll_union_quantiles(
-            [bytes(r.kll) for r in merged_rows if r.kll is not None], [0.25, 0.5, 0.75]
+            [bytes(r["kll"]) for r in merged_rows if r["kll"] is not None], [0.25, 0.5, 0.75]
         )
-        mins = [r.v_min for r in merged_rows if r.v_min is not None]
-        maxs = [r.v_max for r in merged_rows if r.v_max is not None]
+        mins = [r["v_min"] for r in merged_rows if r["v_min"] is not None]
+        maxs = [r["v_max"] for r in merged_rows if r["v_max"] is not None]
         sketch_metrics = {
             f"{kll_col}_min": min(mins) if mins else None,
             f"{kll_col}_max": max(maxs) if maxs else None,
@@ -538,12 +526,12 @@ def _validate_impl(
     metric_values: dict = {}
     if metric_cs:
         for m in metric_cols:
-            nn = sum(getattr(r, f"_m_nn_{m}", 0) or 0 for r in merged_rows)
-            n = sum(getattr(r, f"_m_n_{m}", 0) or 0 for r in merged_rows)
-            s = sum(getattr(r, f"_m_s_{m}", 0.0) or 0.0 for r in merged_rows)
-            q = sum(getattr(r, f"_m_q_{m}", 0.0) or 0.0 for r in merged_rows)
-            lows = [getattr(r, f"_m_lo_{m}", None) for r in merged_rows]
-            highs = [getattr(r, f"_m_hi_{m}", None) for r in merged_rows]
+            nn = sum(r.get(f"_m_nn_{m}") or 0 for r in merged_rows)
+            n = sum(r.get(f"_m_n_{m}") or 0 for r in merged_rows)
+            s = sum(r.get(f"_m_s_{m}") or 0.0 for r in merged_rows)
+            q = sum(r.get(f"_m_q_{m}") or 0.0 for r in merged_rows)
+            lows = [r.get(f"_m_lo_{m}") for r in merged_rows]
+            highs = [r.get(f"_m_hi_{m}") for r in merged_rows]
             lows = [v for v in lows if v is not None]
             highs = [v for v in highs if v is not None]
             mean = s / n if n else None
@@ -573,13 +561,12 @@ def _validate_impl(
     # verdict counts come from a single 1-row action over its groups.
     fd_metrics: dict = {}
     fd_viol_frames: list[DataFrame] = []
-    fd_grouped_persisted: list[DataFrame] = []
     for c in fd_cs:
         dets = list(c.params["determinants"])
         grouped = C.fd_groups(df, c)
         if extract_violation_rows:
             grouped = grouped.persist()
-            fd_grouped_persisted.append(grouped)
+            release.callback(grouped.unpersist)
         row = grouped.agg(
             F.count(F.lit(1)).alias("n"),
             F.sum(F.col("violated").cast("long")).alias("bad"),
@@ -662,73 +649,91 @@ def _validate_impl(
         ok = schema_fields.get(c.column) == c.params["expected"]
         verdict_rows.append((GLOBAL_BUCKET, c.cid, 1, int(not ok), ok))
 
-    verdicts = spark.createDataFrame(verdict_rows, VERDICT_SCHEMA)
+    verdicts = local_frame(spark, verdict_rows, VERDICT_SCHEMA)
 
     # ---- violation rows --------------------------------------------------
-    # Incremental when a ledger is present: extract only for buckets not
-    # already validated, append to the ledger, and return the merged set
-    # — a resumed run never re-extracts completed buckets.
+    # This run's counts decide whether extraction runs at all: a clean
+    # run (every row and uniqueness count of its buckets is 0) skips
+    # it; otherwise only the failing constraints are extracted, over
+    # the dirty buckets of the persisted slim frame, which covers only
+    # unvalidated buckets, so a resumed run never re-extracts completed
+    # ones.
+    viols_new = None
     if extract_violation_rows:
-        # slim_df covers exactly the remaining (unvalidated) buckets, so
-        # a resumed run never re-extracts completed ones
-        viols_new = C.failed_rows(
-            slim_df, [(c.cid, F.col(_flag(i))) for i, c in enumerate(row_cs)], key
-        )
-        for uc in unique_cs:
-            viols_new = viols_new.unionByName(
+        failing = {cid for r in new_rows for cid, n in (r["viol_counts"] or {}).items() if n}
+        dirty = [r["bucket_id"] for r in new_rows if any((r["viol_counts"] or {}).values())]
+        if failing:
+            src = slim_df
+            if len(dirty) < len(new_rows):
+                src = slim_df.filter(F.col(BUCKET_COL).isin(dirty))
+            flags = [(c.cid, F.col(_flag(i))) for i, c in enumerate(row_cs) if c.cid in failing]
+            parts = [C.failed_rows(src, flags, key)] if flags else []
+            parts += [
                 dup_counts.select(F.col(key), F.lit(uc.cid).alias("constraint_id"))
-            )
-        # deterministic per-constraint cap (hash-minimum selection, the
-        # verdict-identity discipline): verdict COUNTS are unaffected —
-        # they come from the stats pass — only the materialized row
-        # sample is bounded. Applied before the ledger append, so the
-        # ledger stores <= cap rows per constraint per run.
-        if max_violations_per_constraint is not None:
-            viols_new = C.cap_violations(
-                viols_new, max_violations_per_constraint, key=key
-            )
-        if ledger is not None:
+                for uc in unique_cs
+                if uc.cid in failing
+            ]
+            viols_new = functools.reduce(DataFrame.unionByName, parts)
+            # deterministic per-constraint cap (hash-minimum selection,
+            # the verdict-identity discipline): verdict COUNTS are
+            # unaffected — they come from the stats pass — only the
+            # materialized row sample is bounded. Applied before the
+            # ledger append, so the ledger stores <= cap rows per
+            # constraint per run.
+            if max_violations_per_constraint is not None:
+                viols_new = C.cap_violations(viols_new, max_violations_per_constraint, key=key)
+
+    # ---- commit: violations -> bucket_stats -> runs ----------------------
+    # bucket_stats is the completion record of a bucket and runs the
+    # run's marker, so both go last. A run that dies before its
+    # bucket_stats commit owns no bucket: the read-back below drops its
+    # violation rows, and the resume re-extracts those buckets.
+    empty_viols = T.StructType(
+        [slim_df.schema[key], T.StructField("constraint_id", T.StringType())]
+    )
+    stats_snapshot = None
+    if ledger is not None:
+        if viols_new is not None:
             ledger.append(
                 "violations",
                 viols_new.withColumn("constraint_hash", F.lit(chash))
                 .withColumn("n_buckets", F.lit(n_buckets))
                 .withColumn("run_id", F.lit(run_id)),
             )
-            viols = this_suite(ledger.read("violations")).select(key, "constraint_id")
-            # re-cap the MERGED read: each resumed run appends its own
-            # <= cap rows per constraint, so the union can exceed the
-            # cap — the returned set must honor it (deterministic:
-            # hash-minimum over the merged rows)
-            if max_violations_per_constraint is not None:
-                viols = C.cap_violations(
-                    viols, max_violations_per_constraint, key=key
-                )
-        else:
-            # materialize now, while the slim frame is still cached —
-            # otherwise the lazy violations frame would re-scan the
-            # input after slim_df is unpersisted below
-            viols = viols_new.persist()
-            viols.count()
-        # FD violation rows are recomputed per run (global property) and
-        # unioned into the RESULT only — never appended to the ledger,
-        # which would duplicate them across resumed runs. Materialized
-        # eagerly so the persisted grouped frames can be released.
-        for fv in fd_viol_frames:
-            if max_violations_per_constraint is not None:
-                fv = C.cap_violations(fv, max_violations_per_constraint, key=key)
-            fv = fv.persist()
-            fv.count()
-            viols = viols.unionByName(fv)
-        for g in fd_grouped_persisted:
-            g.unpersist()
+        stats_snapshot = ledger.append(
+            "bucket_stats", local_frame(spark, [tuple(r) for r in new_raw], stats_schema)
+        )
+    if not extract_violation_rows:
+        viols = local_frame(spark, [], empty_viols)
+    elif ledger is not None and ledger.exists("violations"):
+        winners = sorted({r["run_id"] for r in merged_rows})
+        viols = (
+            this_suite(ledger.read("violations"))
+            .filter(F.col("run_id").isin(winners))
+            .select(key, "constraint_id")
+        )
+        # re-cap the MERGED read: each resumed run appends its own
+        # <= cap rows per constraint, so the union can exceed the
+        # cap — the returned set must honor it (deterministic:
+        # hash-minimum over the merged rows)
+        if max_violations_per_constraint is not None:
+            viols = C.cap_violations(viols, max_violations_per_constraint, key=key)
+    elif viols_new is not None:  # no ledger
+        # materialize while the slim frame is still cached, without a
+        # cache entry that would outlive this call
+        viols = viols_new.localCheckpoint()
     else:
-        viols = spark.createDataFrame([], f"{key} string, constraint_id string")
+        viols = local_frame(spark, [], empty_viols)
+    # FD violation rows are recomputed per run (global property) and
+    # unioned into the RESULT only — never appended to the ledger, which
+    # would duplicate them across resumed runs. Materialized eagerly so
+    # the persisted grouped frames can be released.
+    for fv in fd_viol_frames:
+        if max_violations_per_constraint is not None:
+            fv = C.cap_violations(fv, max_violations_per_constraint, key=key)
+        viols = viols.unionByName(fv.localCheckpoint())
 
     # ---- lineage metrics -------------------------------------------------
-    if extract_violation_rows:
-        slim_df.unpersist()
-    if dup_counts is not None:
-        dup_counts.unpersist()
     elapsed = time.time() - t_start
     # executor metrics ride the lineage row (north_star: "lineage
     # (snapshot id, constraint-set hash, executor metrics)"); guarded —
@@ -766,7 +771,8 @@ def _validate_impl(
         },
     }
     if ledger is not None:
-        lineage = spark.createDataFrame(
+        lineage = local_frame(
+            spark,
             # json, not repr: the cli history surface promises
             # machine-readable lines, and a repr string forces
             # consumers into ast.literal_eval

@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from kglids_spark.operators import constraints as C
 from kglids_spark.operators.validate import validate
+from kglids_spark.session import local_frame
 from kglids_spark.sources.tables import TableStore
 from kglids_spark.sources.tokens import TOKENS_SCHEMA
 
@@ -287,7 +288,8 @@ def quality_filter_stream(
             ).alias("n_kept"),
             F.avg("quality_prob").alias("mean_prob"),
         ).collect()[0]
-        sess.createDataFrame(
+        local_frame(
+            sess,
             [
                 (
                     int(epoch_id),
@@ -500,7 +502,8 @@ def drift_monitor_stream(
         # write overwrites only THIS epoch's partition, so a batch
         # re-run after a crash-before-checkpoint replaces its verdict
         # row instead of appending a duplicate
-        sess.createDataFrame(
+        local_frame(
+            sess,
             [
                 (
                     int(epoch_id),
@@ -602,7 +605,8 @@ def token_drift_monitor_stream(
             ks_threshold=ks_threshold,
             psi_threshold=psi_threshold,
         )
-        sess.createDataFrame(
+        local_frame(
+            sess,
             [
                 (
                     int(epoch_id),
@@ -712,7 +716,8 @@ def compliance_monitor_stream(
             out_rows.append(
                 (int(epoch_id), c.cid, n, nv, cum_n, cum_v, bool(ok))
             )
-        sess.createDataFrame(
+        local_frame(
+            sess,
             out_rows,
             "epoch long, constraint_id string, n_rows long, n_violations long, "
             "cum_rows long, cum_violations long, passed boolean",
