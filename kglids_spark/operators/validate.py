@@ -413,15 +413,14 @@ def _validate_impl(
         kll_col = drift_spec.column if drift_spec is not None else None
 
     # ---- slim projection: decode wide arrays once ----------------------
-    # (every row constraint collapses to its violation flag here; stats
-    # + violation extraction both read the persisted slim frame, so the
+    # (every row constraint collapses to its violation flag here; the
+    # stats aggregate, the uniqueness shuffle, the histogram and the
+    # violation extraction all read the persisted slim frame, so the
     # heavy parquet scan of the token arrays happens exactly once per run)
     sketch_cols = [drift_spec.column] if drift_spec is not None else []
     sketch_cols += metric_cols if kll_col is None else [*metric_cols, kll_col]
-    slim_df = _slim_projection(remaining_df, violations, key, sketch_cols)
-    if extract_violation_rows:
-        slim_df = slim_df.persist()
-        release.callback(slim_df.unpersist)
+    slim_df = _slim_projection(remaining_df, violations, key, sketch_cols).persist()
+    release.callback(slim_df.unpersist)
 
     # ---- collect sketches for remaining buckets ------------------------
     # uniqueness shuffle: computed once, shared by stats and violations
@@ -700,9 +699,14 @@ def _validate_impl(
                 .withColumn("n_buckets", F.lit(n_buckets))
                 .withColumn("run_id", F.lit(run_id)),
             )
-        stats_snapshot = ledger.append(
-            "bucket_stats", local_frame(spark, [tuple(r) for r in new_raw], stats_schema)
-        )
+        # a full resume has no new rows: it reports the snapshot that
+        # already holds every bucket instead of appending an empty one
+        if new_raw:
+            stats_snapshot = ledger.append(
+                "bucket_stats", local_frame(spark, [tuple(r) for r in new_raw], stats_schema)
+            )
+        else:
+            stats_snapshot = ledger.snapshot_id("bucket_stats")
     if not extract_violation_rows:
         viols = local_frame(spark, [], empty_viols)
     elif ledger is not None and ledger.exists("violations"):

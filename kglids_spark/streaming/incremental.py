@@ -8,15 +8,26 @@ training table is appended continuously in practice:
 
 - validate_stream: file-source stream over a tokens directory →
   foreachBatch(validate) → each micro-batch appends verdicts to the
-  same resumable ledger as batch runs (exactly-once per bucket via the
-  idempotent sketch merge; the stream checkpoint gives at-least-once
-  batch delivery, and the ledger dedupe makes the merge idempotent).
+  same resumable ledger as batch runs. Known defect: the ledger's
+  resume is keyed on (suite, bucket) only, so once an epoch has
+  completed every bucket, the rows of later epochs that fall in those
+  buckets are NOT validated (ROADMAP direction 2; epoch 1's rows are
+  skipped with ``buckets_this_run=0``).
 - windowed_event_counts: watermarked tumbling-window aggregation, the
   canonical late-data pattern, used by tests as a streaming smoke.
 - stateful_sessionize: custom stateful operator via
   applyInPandasWithState — per-user session counting with an explicit
   cross-batch state struct (the batch twin is entry_queries
   sessionize_events, lag + gap-flag cumsum).
+
+Every foreachBatch monitor shares one epoch discipline: the query
+starts in ``_start_stream`` (file-source read, stream checkpoint,
+drain-and-stop when ``trigger_once``); each output is written by
+``_write_epoch``, a dynamic overwrite of the epoch's own partition,
+so an at-least-once replay of a batch replaces its output instead of
+duplicating it; and earlier epochs' output is read back only through
+``_read_epochs``, which treats a missing or still-empty output folder
+as "no earlier epoch" and raises on anything else.
 """
 
 from __future__ import annotations
@@ -32,6 +43,56 @@ from kglids_spark.sources.tables import TableStore
 from kglids_spark.sources.tokens import TOKENS_SCHEMA
 
 
+def _start_stream(
+    spark: SparkSession,
+    input_dir: str,
+    schema,
+    process,
+    checkpoint_dir: str,
+    trigger_once: bool,
+    max_files_per_trigger: int | None = None,
+):
+    """Start ``foreachBatch(process)`` over new parquet files in
+    ``input_dir``; returns the StreamingQuery (caller stops it)."""
+    reader = spark.readStream.schema(schema)
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", int(max_files_per_trigger))
+    writer = (
+        reader.parquet(input_dir)
+        .writeStream.foreachBatch(process)
+        .option("checkpointLocation", checkpoint_dir)
+        .outputMode("update")
+    )
+    if trigger_once:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
+def _write_epoch(frame: DataFrame, epoch_id: int, path: str) -> None:
+    """Write ``frame`` as the ``epoch=epoch_id`` partition of ``path``,
+    replacing only that partition: a replayed batch overwrites its own
+    output and leaves every other epoch's untouched."""
+    frame.withColumn("epoch", F.lit(int(epoch_id)).cast("long")).write.mode(
+        "overwrite"
+    ).option("partitionOverwriteMode", "dynamic").partitionBy("epoch").parquet(path)
+
+
+def _read_epochs(spark: SparkSession, path: str) -> DataFrame | None:
+    """Earlier epochs' output at ``path``, or None before the first
+    epoch has written any: the folder is missing, or holds no data file
+    yet (a crash inside epoch 0's first write). Any other failure — a
+    torn footer, a listing error — raises: reading it as "no earlier
+    epoch" would silently reset the state derived from it."""
+    try:
+        return spark.read.parquet(path)
+    except AnalysisException as ex:
+        # getCondition is Spark 4's name (getErrorClass its deprecated
+        # alias); message text changes between versions
+        if ex.getCondition() in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
+            return None
+        raise
+
+
 def validate_stream(
     spark: SparkSession,
     input_dir: str,
@@ -43,7 +104,6 @@ def validate_stream(
 ):
     """Stream new parquet files from ``input_dir`` through the batch
     validator. Returns the StreamingQuery (caller stops it)."""
-    stream = spark.readStream.schema(TOKENS_SCHEMA).parquet(input_dir)
 
     def process(batch_df: DataFrame, epoch_id: int) -> None:
         ledger = TableStore(batch_df.sparkSession, ledger_root)
@@ -56,14 +116,9 @@ def validate_stream(
             extract_violation_rows=False,
         )
 
-    writer = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
+    return _start_stream(
+        spark, input_dir, TOKENS_SCHEMA, process, checkpoint_dir, trigger_once
     )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def stateful_sessionize(
@@ -253,14 +308,9 @@ def quality_filter_stream(
     scorer (a whole-table statement) cannot do.
 
     foreachBatch keeps the scoring in the batch engine (the per-doc
-    aggregation is map-side-combined; no streaming state grows), and
-    both writes use dynamic epoch-partition overwrite so an
-    at-least-once batch replay replaces its own output instead of
-    duplicating it (the drift_monitor_stream discipline)."""
+    aggregation is map-side-combined; no streaming state grows); both
+    outputs are epoch-partitioned (module docstring)."""
     from kglids_spark.operators.quality_classifier import score_quality_lr
-
-    schema = spark.read.parquet(input_dir).schema
-    stream = spark.readStream.schema(schema).parquet(input_dir)
 
     def process(batch_df: DataFrame, epoch_id: int) -> None:
         sess = batch_df.sparkSession
@@ -275,12 +325,8 @@ def quality_filter_stream(
             md5_width=md5_width,
         )
         joined = batch_df.join(scored, id_col)
-        kept = joined.filter(F.col("quality_prob") >= threshold).withColumn(
-            "epoch", F.lit(int(epoch_id))
-        )
-        kept.write.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        ).partitionBy("epoch").parquet(f"{out_dir}/docs")
+        kept = joined.filter(F.col("quality_prob") >= threshold)
+        _write_epoch(kept, epoch_id, f"{out_dir}/docs")
         row = joined.agg(
             F.count(F.lit(1)).alias("n_docs"),
             F.sum(
@@ -288,29 +334,21 @@ def quality_filter_stream(
             ).alias("n_kept"),
             F.avg("quality_prob").alias("mean_prob"),
         ).collect()[0]
-        local_frame(
+        verdict = local_frame(
             sess,
             [
                 (
-                    int(epoch_id),
                     int(row.n_docs),
                     int(row.n_kept or 0),
                     float(row.mean_prob) if row.mean_prob is not None else None,
                 )
             ],
-            "epoch long, n_docs long, n_kept long, mean_prob double",
-        ).write.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        ).partitionBy("epoch").parquet(f"{out_dir}/verdicts")
+            "n_docs long, n_kept long, mean_prob double",
+        )
+        _write_epoch(verdict, epoch_id, f"{out_dir}/verdicts")
 
-    writer = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    schema = spark.read.parquet(input_dir).schema
+    return _start_stream(spark, input_dir, schema, process, checkpoint_dir, trigger_once)
 
 
 def near_dup_filter_stream(
@@ -345,18 +383,15 @@ def near_dup_filter_stream(
     State is the ledger, not the stream engine: foreachBatch keeps
     every join in the batch engine (the ledger is scanned map-side
     against the broadcast batch buckets — see incremental_dedup_minhash
-    for the 10^12-row plan), and both writes are epoch-partitioned
-    with dynamic overwrite so an at-least-once batch replay replaces
-    its own output and its own ledger shard instead of duplicating
-    either (the quality_filter_stream discipline). A replayed batch
-    re-reads a ledger that may already contain its own epoch's
-    signatures — harmless: self-pairs estimate Jaccard 1.0 only for
-    docs already shipped BY that epoch, which the overwrite replaces
-    wholesale. The (num_perm, bands, shingle_n, seed, threshold)
-    tuple is the ledger's contract; changing it against an existing
-    ledger produces incomparable signatures (minhash_dedup_ledger
-    docstring), so it is pinned in a params.json the stream refuses
-    to contradict."""
+    for the 10^12-row plan); the docs and the ledger are both
+    epoch-partitioned (module docstring), so a replayed batch replaces
+    its own ledger shard, and it screens against every OTHER epoch's
+    shard only. A ledger that cannot be read fails the batch rather
+    than admitting it unscreened. The (num_perm, bands, shingle_n,
+    seed, threshold) tuple is the ledger's contract; changing it
+    against an existing ledger produces incomparable signatures
+    (minhash_dedup_ledger docstring), so it is pinned in a params.json
+    the stream refuses to contradict."""
     import json
     import os
 
@@ -385,63 +420,38 @@ def near_dup_filter_stream(
         with open(params_path, "w") as f:
             json.dump(params, f)
 
-    schema = spark.read.parquet(input_dir).schema
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        # bounds per-epoch work (and, with availableNow, drains the
-        # backlog as a SEQUENCE of micro-batches instead of one big one
-        # — each later file then really screens against the earlier
-        # files' ledger)
-        reader = reader.option("maxFilesPerTrigger", int(max_files_per_trigger))
-    stream = reader.parquet(input_dir)
     ledger_dir = f"{out_dir}/sig_ledger"
     docs_dir = f"{out_dir}/docs"
+    kw = dict(
+        text_col=text_col, id_col=id_col, num_perm=num_perm, shingle_n=shingle_n, seed=seed
+    )
 
     def process(batch_df: DataFrame, epoch_id: int) -> None:
         sess = batch_df.sparkSession
-        kw = dict(
-            text_col=text_col,
-            id_col=id_col,
-            num_perm=num_perm,
-            shingle_n=shingle_n,
-            seed=seed,
-        )
-        try:
-            ledger = sess.read.parquet(ledger_dir).where(
-                F.col("epoch") != int(epoch_id)
-            ).select("id", "sig")
-        except Exception:
-            ledger = None  # first batch: no ledger yet
-        batch = DD.fuzzy_dedup_survivors(
-            batch_df, bands=bands, threshold=threshold, **kw
-        )
+        ledger = _read_epochs(sess, ledger_dir)  # None: first batch
+        if ledger is not None:
+            ledger = ledger.where(F.col("epoch") != int(epoch_id)).select("id", "sig")
+        batch = DD.fuzzy_dedup_survivors(batch_df, bands=bands, threshold=threshold, **kw)
         kept = DD.incremental_dedup_minhash(
             batch, ledger, bands=bands, threshold=threshold, **kw
         )
-        kept.withColumn("epoch", F.lit(int(epoch_id))).write.mode(
-            "overwrite"
-        ).option("partitionOverwriteMode", "dynamic").partitionBy(
-            "epoch"
-        ).parquet(docs_dir)
+        _write_epoch(kept, epoch_id, docs_dir)
         # survivors' signatures extend the ledger (epoch-partitioned:
         # a replay overwrites its own shard). Read back from the docs
         # shard just written so the signature pass scans the small
         # survivor set, not the raw batch.
         shipped = sess.read.parquet(docs_dir).where(F.col("epoch") == int(epoch_id))
-        DD.minhash_dedup_ledger(shipped, **kw).withColumn(
-            "epoch", F.lit(int(epoch_id))
-        ).write.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        ).partitionBy("epoch").parquet(ledger_dir)
+        _write_epoch(DD.minhash_dedup_ledger(shipped, **kw), epoch_id, ledger_dir)
 
-    writer = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
+    # max_files_per_trigger bounds per-epoch work (and, with
+    # trigger_once, drains the backlog as a SEQUENCE of micro-batches
+    # instead of one big one — each later file then really screens
+    # against the earlier files' ledger)
+    schema = spark.read.parquet(input_dir).schema
+    return _start_stream(
+        spark, input_dir, schema, process, checkpoint_dir, trigger_once,
+        max_files_per_trigger,
     )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def drift_monitor_stream(
@@ -480,33 +490,21 @@ def drift_monitor_stream(
     stream."""
     from kglids_spark.operators import drift as D
 
-    stream = spark.readStream.schema(TOKENS_SCHEMA).parquet(input_dir)
-
     def process_grouped(batch_df: DataFrame, epoch_id: int) -> None:
         g = D.grouped_drift(
             batch_df, spec, baseline_hist, group_col, ks_threshold, psi_threshold
-        ).withColumn("epoch", F.lit(int(epoch_id)).cast("long"))
-        # same idempotent replay discipline as the global path: the
-        # dynamic overwrite replaces exactly this epoch's partition
-        g.write.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        ).partitionBy("epoch").parquet(out_dir)
+        )
+        _write_epoch(g, epoch_id, out_dir)
 
     def process(batch_df: DataFrame, epoch_id: int) -> None:
-        sess = batch_df.sparkSession
         row = D.histogram_df(batch_df, spec).collect()[0]
         verdict = D.evaluate_drift(
             list(row.hist), baseline_hist, ks_threshold, psi_threshold
         )
-        # idempotent under foreachBatch's at-least-once replay: the
-        # write overwrites only THIS epoch's partition, so a batch
-        # re-run after a crash-before-checkpoint replaces its verdict
-        # row instead of appending a duplicate
-        local_frame(
-            sess,
+        frame = local_frame(
+            batch_df.sparkSession,
             [
                 (
-                    int(epoch_id),
                     int(row.n_rows),
                     float(verdict["ks"]),
                     float(verdict["psi"]),
@@ -514,21 +512,15 @@ def drift_monitor_stream(
                     bool(verdict["psi_pass"]),
                 )
             ],
-            "epoch long, n_rows long, ks double, psi double, ks_pass boolean, psi_pass boolean",
-        ).write.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        ).partitionBy("epoch").parquet(out_dir)
-
-    writer = (
-        stream.writeStream.foreachBatch(
-            process if group_col is None else process_grouped
+            "n_rows long, ks double, psi double, ks_pass boolean, psi_pass boolean",
         )
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
+        _write_epoch(frame, epoch_id, out_dir)
+
+    return _start_stream(
+        spark, input_dir, TOKENS_SCHEMA,
+        process if group_col is None else process_grouped,
+        checkpoint_dir, trigger_once,
     )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def token_drift_monitor_stream(
@@ -559,9 +551,7 @@ def token_drift_monitor_stream(
     Statistics and cell layout are shared verbatim with the batch
     operator (token_distribution_drift calls the same ks_statistic /
     psi over the same bucketing), so the stream's verdicts are pinned
-    to the batch twin's on identical rows. Idempotent under
-    foreachBatch's at-least-once replay: the per-epoch dynamic
-    overwrite replaces exactly this epoch's verdict partition.
+    to the batch twin's on identical rows.
 
     ``group_col`` sharpens the localization one level further — WHICH
     FEED inside the batch swapped tokenizers: verdict rows become one
@@ -576,8 +566,6 @@ def token_drift_monitor_stream(
             f"baseline has {len(baseline_cells)} cells, expected <= {nbins + 2}"
         )
 
-    stream = spark.readStream.schema(TOKENS_SCHEMA).parquet(input_dir)
-
     def process_grouped(batch_df: DataFrame, epoch_id: int) -> None:
         g = D.grouped_token_drift(
             batch_df,
@@ -588,13 +576,10 @@ def token_drift_monitor_stream(
             nbins=nbins,
             ks_threshold=ks_threshold,
             psi_threshold=psi_threshold,
-        ).withColumn("epoch", F.lit(int(epoch_id)).cast("long"))
-        g.write.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        ).partitionBy("epoch").parquet(out_dir)
+        )
+        _write_epoch(g, epoch_id, out_dir)
 
     def process(batch_df: DataFrame, epoch_id: int) -> None:
-        sess = batch_df.sparkSession
         n_docs = batch_df.count()
         verdict = D.token_distribution_drift(
             batch_df,
@@ -605,11 +590,10 @@ def token_drift_monitor_stream(
             ks_threshold=ks_threshold,
             psi_threshold=psi_threshold,
         )
-        local_frame(
-            sess,
+        frame = local_frame(
+            batch_df.sparkSession,
             [
                 (
-                    int(epoch_id),
                     int(n_docs),
                     int(sum(verdict["cells"])),
                     float(verdict["ks"]),
@@ -618,22 +602,16 @@ def token_drift_monitor_stream(
                     bool(verdict["psi_pass"]),
                 )
             ],
-            "epoch long, n_docs long, n_tokens long, ks double, psi double, "
+            "n_docs long, n_tokens long, ks double, psi double, "
             "ks_pass boolean, psi_pass boolean",
-        ).write.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        ).partitionBy("epoch").parquet(out_dir)
-
-    writer = (
-        stream.writeStream.foreachBatch(
-            process if group_col is None else process_grouped
         )
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
+        _write_epoch(frame, epoch_id, out_dir)
+
+    return _start_stream(
+        spark, input_dir, TOKENS_SCHEMA,
+        process if group_col is None else process_grouped,
+        checkpoint_dir, trigger_once,
     )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def compliance_monitor_stream(
@@ -656,9 +634,8 @@ def compliance_monitor_stream(
 
     State lives in the output table itself: the cumulative totals
     re-derive from prior epochs' rows (epoch < current), so the
-    foreachBatch needs no state store and the per-epoch dynamic
-    overwrite keeps replays idempotent — a crashed epoch re-runs,
-    re-reads the SAME prior rows, and replaces its own partition.
+    foreachBatch needs no state store, and a replayed epoch re-reads
+    the SAME prior rows and replaces its own partition.
     The pass rule is the engine's exact integer boundary comparison
     (constraints.compliance_passed). ``files_per_trigger`` bounds
     each micro-batch for testing multi-epoch behavior."""
@@ -671,11 +648,6 @@ def compliance_monitor_stream(
             f"(got kinds {sorted({c.kind for c in constraints})})"
         )
 
-    reader = spark.readStream.schema(TOKENS_SCHEMA)
-    if files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", int(files_per_trigger))
-    stream = reader.parquet(input_dir)
-
     def process(batch_df: DataFrame, epoch_id: int) -> None:
         sess = batch_df.sparkSession
         aggs = [F.count(F.lit(1)).alias("_n")] + [
@@ -684,12 +656,12 @@ def compliance_monitor_stream(
         ]
         row = batch_df.agg(*aggs).collect()[0]
         prior = {c.cid: (0, 0) for c in comp}
-        try:
+        earlier = _read_epochs(sess, out_dir)  # None: first epoch
+        if earlier is not None:
             # epoch < current: replays re-read the same prior rows and
             # replace their own partition — idempotent by construction
             for r in (
-                sess.read.parquet(out_dir)
-                .filter(F.col("epoch") < int(epoch_id))
+                earlier.filter(F.col("epoch") < int(epoch_id))
                 .groupBy("constraint_id")
                 .agg(
                     F.sum("n_rows").alias("n"), F.sum("n_violations").alias("v")
@@ -697,15 +669,6 @@ def compliance_monitor_stream(
                 .collect()
             ):
                 prior[r.constraint_id] = (int(r.n or 0), int(r.v or 0))
-        except AnalysisException as ex:
-            # ONLY the first epoch's missing output table is benign; a
-            # torn footer / listing failure must raise — swallowing it
-            # would silently reset the cumulative totals and let a
-            # failing stream report passed=True. getCondition is Spark 4's
-            # name (getErrorClass its deprecated alias); matching message
-            # text would break on any rewording between versions.
-            if ex.getCondition() != "PATH_NOT_FOUND":
-                raise
         out_rows = []
         n = int(row["_n"] or 0)
         for i, c in enumerate(comp):
@@ -713,23 +676,16 @@ def compliance_monitor_stream(
             pn, pv = prior.get(c.cid, (0, 0))
             cum_n, cum_v = pn + n, pv + nv
             ok = C.compliance_passed(c, cum_n, cum_v)
-            out_rows.append(
-                (int(epoch_id), c.cid, n, nv, cum_n, cum_v, bool(ok))
-            )
-        local_frame(
+            out_rows.append((c.cid, n, nv, cum_n, cum_v, bool(ok)))
+        frame = local_frame(
             sess,
             out_rows,
-            "epoch long, constraint_id string, n_rows long, n_violations long, "
+            "constraint_id string, n_rows long, n_violations long, "
             "cum_rows long, cum_violations long, passed boolean",
-        ).write.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        ).partitionBy("epoch").parquet(out_dir)
+        )
+        _write_epoch(frame, epoch_id, out_dir)
 
-    writer = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
+    return _start_stream(
+        spark, input_dir, TOKENS_SCHEMA, process, checkpoint_dir, trigger_once,
+        files_per_trigger,
     )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -160,9 +160,10 @@ def test_tiered_merge_matches_single_level(spark, tokens_df, tmp_path):
 
 
 def test_merge_at_4096_buckets_bounded(spark):
-    """4096 buckets (above MERGE_COLLECT_MAX): the tiered path engages
-    — ~sqrt(n) groups, no single all-buckets task — and completes in
-    bounded time on a small frame."""
+    """4096 buckets: the per-bucket stats rows are collected once and
+    merged on the driver (no all-buckets task), and the run completes
+    in bounded time on a small frame with one verdict row per non-empty
+    bucket and constraint."""
     import time
 
     from kglids_spark.sources.tokens import generate_tokens

@@ -149,12 +149,14 @@ def _cached_entries(spark) -> int:
 
 
 @pytest.mark.parametrize(
-    "case", ["clean_no_ledger", "dirty_no_ledger", "fd_no_ledger"]
+    "case", ["clean_no_ledger", "dirty_no_ledger", "fd_no_ledger", "dirty_no_extract"]
 )
-def test_validate_leaves_no_cached_frame(spark, dirty_df, case):
+def test_validate_leaves_no_cached_frame(spark, dirty_df, case, monkeypatch):
     """Every frame validate() caches is released before it returns —
     a leftover entry would serve later identical calls stale data —
-    while the returned violations stay materialized and correct."""
+    while the returned violations stay materialized and correct. The
+    stats pass reads the cached slim frame with or without extraction,
+    so the input is decoded once either way."""
     if case == "clean_no_ledger":
         df = generate_tokens(spark, 20000, partitions=4, plant_violations=False)
         suite = SUITE
@@ -162,11 +164,24 @@ def test_validate_leaves_no_cached_frame(spark, dirty_df, case):
         df = dirty_df
         suite = SUITE + ([C.functional_dependency(["doc_id"], "source")]
                          if case == "fd_no_ledger" else [])
+    extract = case != "dirty_no_extract"
+    stats_pass = V._stats_pass
+    slim_cached = []
+
+    def spy(slim_df, *args, **kwargs):
+        slim_cached.append(slim_df.is_cached)
+        return stats_pass(slim_df, *args, **kwargs)
+
+    monkeypatch.setattr(V, "_stats_pass", spy)
     before = _cached_entries(spark)
     # 8 buckets: a plan no other test in this module caches
-    r = validate(df, suite, n_buckets=8)
+    r = validate(df, suite, n_buckets=8, extract_violation_rows=extract)
     assert _cached_entries(spark) == before
+    assert slim_cached == [True]
     rows = Counter(v.constraint_id for v in r.violations.collect())
+    if not extract:
+        assert not rows and any(v.n_violations for v in r.verdicts.collect())
+        return
     assert (sum(rows.values()) == 0) == (case == "clean_no_ledger")
     counts = Counter()
     for v in r.verdicts.collect():
@@ -174,6 +189,24 @@ def test_validate_leaves_no_cached_frame(spark, dirty_df, case):
     for cid, n in counts.items():
         if not cid.startswith(("drift", "fd")):
             assert rows[cid] == n, cid
+
+
+def test_full_resume_appends_no_bucket_stats_snapshot(spark, dirty_df, tmp_path):
+    """A repeat run over a fully validated ledger has no new bucket
+    rows: it appends no bucket_stats snapshot, reports the one that
+    already holds every bucket, and returns the same verdicts."""
+    store = TableStore(spark, str(tmp_path / "ledger"))
+    first = validate(dirty_df, SUITE, n_buckets=N_BUCKETS, ledger=store,
+                     extract_violation_rows=False)
+    again = validate(dirty_df, SUITE, n_buckets=N_BUCKETS, ledger=store,
+                     extract_violation_rows=False)
+    assert again.metrics["buckets_completed_prior"] == N_BUCKETS
+    manifest = json.loads((tmp_path / "ledger" / "bucket_stats" / "manifest.json").read_text())
+    assert len(manifest["snapshots"]) == 1
+    assert again.metrics["stats_snapshot"] == first.metrics["stats_snapshot"] is not None
+    assert sorted(map(tuple, again.verdicts.collect())) == sorted(
+        map(tuple, first.verdicts.collect())
+    )
 
 
 LOCAL_SCHEMA = T.StructType([
