@@ -5,12 +5,14 @@ north_star pins KS + PSI on `n_tok` histograms vs a baseline snapshot.
 
 Design for 10^12 rows: the expensive part — counting — is a fixed-width
 histogram. Each row maps to one cell index (``cell_expr``, O(1) per row
-whatever nbins is) and ``histogram_df`` counts per (group, cell) with
+whatever nbins is) and ``cell_counts`` counts per (group, cell) with
 map-side partials, so the shuffle carries at most groups × n_cells rows
-of mergeable exact counts; validate's per-bucket pass, grouped_drift and
-the streaming monitor all share it. The KS/PSI arithmetic runs
-driver-side on the merged ≤(nbins+2)-long count arrays, which is
-O(nbins) regardless of data size (SURVEY.md §4).
+of mergeable exact counts. It is the one cell counter: validate collects
+it per bucket and zero-fills each bucket's array on the driver, and
+``histogram_df`` (grouped_drift, the streaming monitor) assembles dense
+arrays from it in-plan. The KS/PSI arithmetic runs driver-side on the
+merged ≤(nbins+2)-long count arrays, which is O(nbins) regardless of
+data size (SURVEY.md §4).
 """
 
 from __future__ import annotations
@@ -83,18 +85,25 @@ def cell_expr(spec: HistSpec) -> Column:
     )
 
 
+def cell_counts(df: DataFrame, spec: HistSpec, group_cols: list[str] | None = None) -> DataFrame:
+    """(*group_cols, _cell, count): the number of rows per group and
+    ``cell_expr`` cell of ``spec.column``, empty cells absent. A NULL
+    value counts in the NULL ``_cell``. One map-side-combined groupBy,
+    so the shuffle moves at most groups × n_cells rows, whatever the
+    row count."""
+    return df.groupBy(*(group_cols or []), cell_expr(spec).alias("_cell")).count()
+
+
 def histogram_df(df: DataFrame, spec: HistSpec, group_cols: list[str] | None = None) -> DataFrame:
     """(*group_cols, hist: array<long>, n_rows): the exact histogram
     of ``spec.column`` per group (one row overall without groups), and
-    the group's row count, NULL values included. Each row contributes
-    one ``cell_expr`` index; a map-side-combined (group, cell) count
-    moves at most groups × n_cells rows through the shuffle, and each
-    group's counts are zero-filled into one dense ``n_cells`` array. A
-    group whose values are all NULL gets a row of zeros, and the
-    global form returns one row even on empty input."""
+    the group's row count, NULL values included. Each group's
+    ``cell_counts`` are zero-filled into one dense ``n_cells`` array by
+    a second, groups-sized aggregate. A group whose values are all NULL
+    gets a row of zeros, and the global form returns one row even on
+    empty input."""
     keys = list(group_cols or [])
-    counts = df.groupBy(*keys, cell_expr(spec).alias("_cell")).count()
-    per_group = counts.groupBy(*keys).agg(
+    per_group = cell_counts(df, spec, keys).groupBy(*keys).agg(
         # collect_list skips the NULL-value cell's entry (a map key
         # cannot be NULL); its rows still count in n_rows
         F.map_from_entries(
@@ -338,13 +347,12 @@ def grouped_drift(
     psi_pass), one row per group, NULL groups included.
 
     Scale shape: per-group histograms are ``histogram_df`` — the same
-    cell index per row as the global pass, one map-side-combined
-    (group, cell) count, no explode; the baseline (nbins+2 longs, e.g.
-    a ledger snapshot's merged ``hist`` rows) enters the plan as a
-    literal; the KS and PSI reductions are zero-shuffle higher-order
-    ``F.aggregate`` folds over the zipped cell arrays, so results never
-    leave the executors — no per-group driver loop, fine at 10^6
-    groups.
+    ``cell_counts`` as validate's per-bucket pass, no explode; the
+    baseline (nbins+2 longs, e.g. a ledger snapshot's merged ``hist``
+    rows) enters the plan as a literal; the KS and PSI reductions are
+    zero-shuffle higher-order ``F.aggregate`` folds over the zipped
+    cell arrays, so results never leave the executors — no per-group
+    driver loop, fine at 10^6 groups.
     ``evaluate_drift`` stays the right tool for the single global
     verdict; this is its distributed many-groups sibling. Semantics
     match evaluate_drift cell-for-cell: a group with zero in-range

@@ -15,13 +15,19 @@ Scale design (10^12 rows, 1000 executors):
   aggregates with map-side partials; the shuffle moves only n_buckets
   small rows.
 - The exact fixed-width histogram of the drift column maps each row
-  to one cell index (drift.cell_expr) and counts per (bucket, cell),
-  map-side combined, over the same persisted slim frame; the shuffle
-  moves at most n_buckets × n_cells rows.
+  to one cell index (drift.cell_expr) and drift.cell_counts counts per
+  (bucket, cell), map-side combined, over the same persisted slim
+  frame; at most n_buckets × n_cells rows reach the driver, which
+  zero-fills one array per bucket.
 - Uniqueness adds the one unavoidable key shuffle (groupBy doc_id),
-  bucket-local because buckets hash the same key.
-- Stats first: the per-bucket stats rows are collected ONCE (n_buckets
-  small rows) and merged on the driver with the prior rows the resume
+  bucket-local because buckets hash the same key; only the number of
+  duplicated keys per bucket is collected. The stats pass persists
+  nothing but the slim frame: when a unique constraint fails,
+  extraction runs the key shuffle again over the dirty buckets only.
+- Stats first: the aggregate, the duplicate-key counts and the cell
+  counts are collected ONCE each, with no join in Spark; the driver
+  builds one bucket_stats row per bucket from them
+  (_bucket_stats_rows) and merges those with the prior rows the resume
   read collected: per bucket the earliest (completed_at, run_id) wins,
   so sketch merges are idempotent (SURVEY.md §7.2 hard-parts 1-3). The
   distinct-key estimate is one hll_union_agg over the winners'
@@ -100,25 +106,18 @@ def _flag(i: int) -> str:
 
 
 def _stats_pass(
-    df_b: DataFrame,
-    row_cs: list[C.Constraint],
-    unique_cs: list[C.Constraint],
-    drift_spec: D.HistSpec | None,
+    slim_df: DataFrame,
+    n_flags: int,
     key: str,
-    dup_counts: DataFrame | None = None,
     kll_col: str | None = None,
     metric_cols: list[str] = (),
 ) -> DataFrame:
-    """The main per-bucket aggregation (one scan) over the slim frame,
+    """The main per-bucket aggregate (one scan) over the slim frame,
     which carries the i-th row constraint's violation flag as
-    ``_flag(i)``, plus the uniqueness shuffle, joined into one sketch
-    row per bucket. ``dup_counts`` is the persisted
-    ``C.duplicate_keys`` frame of the key, shared with violation
-    extraction so the uniqueness shuffle runs exactly once. The drift
-    histogram is ``D.histogram_df`` over the same slim frame, a
-    (bucket, cell) count joined on the bucket like the duplicate
-    counts: one cell index per row instead of a sum buffer per cell in
-    the main aggregate.
+    ``_flag(i)``: one row per bucket with the row count, an HLL sketch
+    of the key and the flag sums (each under its flag's name). The
+    duplicate-key counts and the drift histogram are separate small
+    results; ``_bucket_stats_rows`` joins them on the driver.
 
     ``kll_col``: also attach min, max and a KLL quantile sketch
     (Spark's native ``kll_sketch_agg_double``, k=200) of that column,
@@ -126,11 +125,7 @@ def _stats_pass(
     aggregates of the same groupBy as the HLL sketch, and the sketch
     bytes ride the same bucket_stats row, so resume semantics are
     identical to the histogram and HLL sketches."""
-    viol_sums = [
-        F.sum(F.col(_flag(i)).cast("long")).alias(f"v_{i}") for i in range(len(row_cs))
-    ]
     aggs = [F.count(F.lit(1)).alias("n_rows"), F.hll_sketch_agg(F.col(key)).alias("hll_key")]
-    aggs += viol_sums
     if kll_col is not None:
         v = F.col(kll_col).try_cast("double")
         aggs += [
@@ -155,41 +150,69 @@ def _stats_pass(
             F.min(c).alias(f"_m_lo_{m}"),
             F.max(c).alias(f"_m_hi_{m}"),
         ]
-    stats = df_b.groupBy(BUCKET_COL).agg(*aggs)
+    aggs += [F.sum(F.col(_flag(i)).cast("long")).alias(_flag(i)) for i in range(n_flags)]
+    return slim_df.groupBy(BUCKET_COL).agg(*aggs)
 
-    if row_cs:
-        stats = stats.withColumn(
-            "viol_counts",
-            F.map_from_arrays(
-                F.array(*[F.lit(c.cid) for c in row_cs]),
-                F.array(*[F.coalesce(F.col(f"v_{i}"), F.lit(0)) for i in range(len(row_cs))]),
-            ),
-        ).drop(*[f"v_{i}" for i in range(len(row_cs))])
-    else:
-        stats = stats.withColumn("viol_counts", F.create_map().cast("map<string,long>"))
 
-    if unique_cs:
-        dup = dup_counts.groupBy(BUCKET_COL).agg(F.count(F.lit(1)).alias("_dup_keys"))
-        n_dup = F.coalesce(F.col("_dup_keys"), F.lit(0))
-        stats = stats.join(dup, BUCKET_COL, "left").withColumn(
-            "viol_counts",
-            F.map_concat(
-                "viol_counts",
-                F.create_map(*[x for uc in unique_cs for x in (F.lit(uc.cid), n_dup)]),
-            ),
-        ).drop("_dup_keys")
-    if drift_spec is not None:
-        hist = D.histogram_df(df_b, drift_spec, [BUCKET_COL]).select(BUCKET_COL, "hist")
-        stats = stats.join(hist, BUCKET_COL, "left")
-    else:
-        stats = stats.withColumn("hist", F.lit(None).cast("array<long>"))
-    if kll_col is None:
-        stats = (
-            stats.withColumn("v_min", F.lit(None).cast("double"))
-            .withColumn("v_max", F.lit(None).cast("double"))
-            .withColumn("kll", F.lit(None).cast("binary"))
-        )
-    return stats
+def _bucket_stats_rows(
+    stats: DataFrame,
+    dup_keys: DataFrame | None,
+    cells: DataFrame | None,
+    row_cs: list[C.Constraint],
+    unique_cs: list[C.Constraint],
+    drift_spec: D.HistSpec | None,
+    lineage: dict,
+) -> tuple[list[dict], T.StructType]:
+    """Collect the three small results of the stats pass (the
+    ``_stats_pass`` aggregate, ``dup_keys``: the number of duplicated
+    keys per bucket, ``cells``: the drift column's (bucket, cell)
+    counts) and build one bucket_stats row per bucket on the driver,
+    with its schema. ``viol_counts`` maps each row constraint to its
+    flag sum and each unique constraint to the bucket's duplicate-key
+    count; ``hist`` is the bucket's zero-filled cell array (the
+    NULL-value cell is skipped, so an all-NULL bucket stores zeros);
+    ``lineage`` (run_id, constraint_hash, n_buckets, completed_at) ends
+    every row. Without a KLL column, v_min, v_max and kll are NULL."""
+    flags = {_flag(i) for i in range(len(row_cs))}
+    # the aggregate's own fields keep their Spark types and metadata
+    # (bucket_id's records the bucket count for the ledger manifest)
+    fields = [f for f in stats.schema.fields if f.name not in flags]
+    rows = [r.asDict() for r in stats.collect()]
+    n_dup = {} if dup_keys is None else dict(dup_keys.collect())
+    hists: dict[int, list[int]] = {}
+    for b, cell, n in [] if cells is None else cells.collect():
+        hist = hists.setdefault(b, [0] * drift_spec.n_cells)
+        if cell is not None:
+            hist[cell] = n
+    no_kll = "kll" not in stats.columns
+    for r in rows:
+        b = r[BUCKET_COL]
+        viol = {c.cid: r.pop(_flag(i)) or 0 for i, c in enumerate(row_cs)}
+        viol.update({c.cid: n_dup.get(b, 0) for c in unique_cs})
+        r["viol_counts"] = viol
+        r["hist"] = None if drift_spec is None else hists[b]
+        if no_kll:
+            r.update(v_min=None, v_max=None, kll=None)
+        r.update(lineage)
+    # nullability as the earlier Spark-assembled rows declared it, so
+    # every snapshot of the ledger has one parquet schema
+    fields += [
+        T.StructField("viol_counts", T.MapType(T.StringType(), T.LongType(), not row_cs), False),
+        T.StructField("hist", T.ArrayType(T.LongType(), drift_spec is None)),
+    ]
+    if no_kll:
+        fields += [
+            T.StructField("v_min", T.DoubleType()),
+            T.StructField("v_max", T.DoubleType()),
+            T.StructField("kll", T.BinaryType()),
+        ]
+    fields += [
+        T.StructField("run_id", T.StringType(), False),
+        T.StructField("constraint_hash", T.StringType(), False),
+        T.StructField("n_buckets", T.IntegerType(), False),
+        T.StructField("completed_at", T.DoubleType(), False),
+    ]
+    return rows, T.StructType(fields)
 
 
 def _kll_items(blob: bytes) -> tuple[np.ndarray, np.ndarray]:
@@ -415,7 +438,7 @@ def _validate_impl(
     # ---- slim projection: decode wide arrays once ----------------------
     # (every row constraint collapses to its violation flag here; the
     # stats aggregate, the uniqueness shuffle, the histogram and the
-    # violation extraction all read the persisted slim frame, so the
+    # violation extraction all read this one persisted frame, so the
     # heavy parquet scan of the token arrays happens exactly once per run)
     sketch_cols = [drift_spec.column] if drift_spec is not None else []
     sketch_cols += metric_cols if kll_col is None else [*metric_cols, kll_col]
@@ -423,27 +446,26 @@ def _validate_impl(
     release.callback(slim_df.unpersist)
 
     # ---- collect sketches for remaining buckets ------------------------
-    # uniqueness shuffle: computed once, shared by stats and violations
-    dup_counts = None
-    if unique_cs:
-        dup_counts = C.duplicate_keys(slim_df, key, BUCKET_COL).persist()
-        release.callback(dup_counts.unpersist)
-    new_stats = _stats_pass(
-        slim_df, row_cs, unique_cs, drift_spec, key, dup_counts, kll_col=kll_col,
-        metric_cols=metric_cols,
+    # three small results, joined per bucket on the driver: the
+    # aggregate (n_buckets rows), the duplicate-key count per bucket
+    # (the one key shuffle) and the drift column's (bucket, cell)
+    # counts (n_buckets × n_cells rows). The driver merges these rows
+    # with the prior rows, derives every verdict from them, and later
+    # commits the same rows to the ledger (never a recompute).
+    new_rows, stats_schema = _bucket_stats_rows(
+        _stats_pass(slim_df, len(row_cs), key, kll_col=kll_col, metric_cols=metric_cols),
+        (
+            C.duplicate_keys(slim_df, key, BUCKET_COL).groupBy(BUCKET_COL).count()
+            if unique_cs
+            else None
+        ),
+        None if drift_spec is None else D.cell_counts(slim_df, drift_spec, [BUCKET_COL]),
+        row_cs,
+        unique_cs,
+        drift_spec,
+        {"run_id": run_id, "constraint_hash": chash, "n_buckets": n_buckets,
+         "completed_at": time.time()},
     )
-    new_stats = (
-        new_stats.withColumn("run_id", F.lit(run_id))
-        .withColumn("constraint_hash", F.lit(chash))
-        .withColumn("n_buckets", F.lit(n_buckets))
-        .withColumn("completed_at", F.lit(time.time()))
-    )
-    # ONE action: n_buckets small rows reach the driver, which merges
-    # them with the prior rows, derives every verdict from them, and
-    # later commits the same rows to the ledger (never a recompute)
-    stats_schema = new_stats.schema
-    new_raw = new_stats.collect()
-    new_rows = [r.asDict() for r in new_raw]
     merged_rows = _earliest_per_bucket(prior_rows + new_rows)
     sketches = [(bytes(r["hll_key"]),) for r in merged_rows if r["hll_key"] is not None]
     est = 0
@@ -659,19 +681,22 @@ def _validate_impl(
     # ones.
     viols_new = None
     if extract_violation_rows:
-        failing = {cid for r in new_rows for cid, n in (r["viol_counts"] or {}).items() if n}
-        dirty = [r["bucket_id"] for r in new_rows if any((r["viol_counts"] or {}).values())]
+        failing = {cid for r in new_rows for cid, n in r["viol_counts"].items() if n}
+        dirty = [r["bucket_id"] for r in new_rows if any(r["viol_counts"].values())]
         if failing:
             src = slim_df
             if len(dirty) < len(new_rows):
                 src = slim_df.filter(F.col(BUCKET_COL).isin(dirty))
             flags = [(c.cid, F.col(_flag(i))) for i, c in enumerate(row_cs) if c.cid in failing]
             parts = [C.failed_rows(src, flags, key)] if flags else []
-            parts += [
-                dup_counts.select(F.col(key), F.lit(uc.cid).alias("constraint_id"))
-                for uc in unique_cs
-                if uc.cid in failing
-            ]
+            if any(uc.cid in failing for uc in unique_cs):
+                # the key shuffle again, over the dirty buckets only
+                dups = C.duplicate_keys(src, key, BUCKET_COL)
+                parts += [
+                    dups.select(F.col(key), F.lit(uc.cid).alias("constraint_id"))
+                    for uc in unique_cs
+                    if uc.cid in failing
+                ]
             viols_new = functools.reduce(DataFrame.unionByName, parts)
             # deterministic per-constraint cap (hash-minimum selection,
             # the verdict-identity discipline): verdict COUNTS are
@@ -701,9 +726,12 @@ def _validate_impl(
             )
         # a full resume has no new rows: it reports the snapshot that
         # already holds every bucket instead of appending an empty one
-        if new_raw:
+        if new_rows:
             stats_snapshot = ledger.append(
-                "bucket_stats", local_frame(spark, [tuple(r) for r in new_raw], stats_schema)
+                "bucket_stats",
+                local_frame(
+                    spark, [tuple(r[f] for f in stats_schema.names) for r in new_rows], stats_schema
+                ),
             )
         else:
             stats_snapshot = ledger.snapshot_id("bucket_stats")

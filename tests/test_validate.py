@@ -1421,30 +1421,35 @@ def _null_bucket_frame(spark, n_buckets=4, null_bucket=0):
 
 def test_stats_aggregate_does_not_grow_with_nbins(spark, monkeypatch):
     """The histogram is one cell index per row, not one aggregate per
-    cell: the optimized stats plan holds the same number of aggregate
-    functions at nbins=8 and nbins=512."""
+    cell: the optimized plans of the stats aggregate and of the
+    (bucket, cell) count validate collects each hold the same number
+    of aggregate functions at nbins=8 and nbins=512."""
     import re
 
     import kglids_spark.operators.validate as V
     from kglids_spark.operators import drift as D
 
     df = _null_bucket_frame(spark)
-    plans = []
-    stats_pass = V._stats_pass
+    plans = {"stats": [], "cells": []}
 
-    def spy(*args, **kwargs):
-        out = stats_pass(*args, **kwargs)
-        plans.append(out._jdf.queryExecution().optimizedPlan().toString())
-        return out
+    def spy(name, fn):
+        def wrapped(*args, **kwargs):
+            out = fn(*args, **kwargs)
+            plans[name].append(out._jdf.queryExecution().optimizedPlan().toString())
+            return out
 
-    monkeypatch.setattr(V, "_stats_pass", spy)
+        return wrapped
+
+    monkeypatch.setattr(V, "_stats_pass", spy("stats", V._stats_pass))
+    monkeypatch.setattr(D, "cell_counts", spy("cells", D.cell_counts))
     for nbins in (8, 512):
         spec = D.HistSpec("n_tok", lo=0.0, hi=100.0, nbins=nbins)
         V.validate(df, [C.drift_ks("n_tok")], n_buckets=4, drift_spec=spec,
                    extract_violation_rows=False)
     agg_fn = re.compile(r"\b(sum|count|min|max|\w+_agg\w*|collect_list)\(")
-    n8, n512 = (len(agg_fn.findall(p)) for p in plans)
-    assert n8 == n512 and n8 > 0
+    for name, found in plans.items():
+        n8, n512 = (len(agg_fn.findall(p)) for p in found)
+        assert n8 == n512 and n8 > 0, name
 
 
 def test_bucket_stats_hist_matches_reference_with_all_null_bucket(

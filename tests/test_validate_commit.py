@@ -1,20 +1,26 @@
 """validate()'s commit protocol and frame lifetimes: crash-safe resume
 after a failure at any step (violations -> bucket_stats -> runs), a
 ledger written in the earlier bucket_stats-first order, orphan violation
-rows, no cached frame outliving a call, and Arrow-backed local frames."""
+rows, no cached frame outliving a call, a join-free stats pass whose
+driver-built bucket_stats rows keep the ledger schema, and Arrow-backed
+local frames."""
 
 import json
+import re
 import shutil
 from collections import Counter
 from pathlib import Path
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 import kglids_spark.operators.validate as V
 from kglids_spark.operators import constraints as C
+from kglids_spark.operators import drift as D
 from kglids_spark.operators.validate import validate
+from kglids_spark.plans.buckets import BUCKET_COL, with_bucket
 from kglids_spark.session import local_frame
 from kglids_spark.sources.tables import TableStore
 from kglids_spark.sources.tokens import SOURCES, generate_tokens
@@ -207,6 +213,86 @@ def test_full_resume_appends_no_bucket_stats_snapshot(spark, dirty_df, tmp_path)
     assert sorted(map(tuple, again.verdicts.collect())) == sorted(
         map(tuple, first.verdicts.collect())
     )
+
+
+def _parquet_schema(table_dir: Path):
+    return pq.read_schema(next(table_dir.glob("data/*/*.parquet"))).remove_metadata()
+
+
+def test_bucket_stats_schema_matches_legacy_fixture(spark, dirty_df, tmp_path):
+    """bucket_stats rows are built on the driver, yet a fresh run writes
+    the parquet schema the fixture ledger holds, field nullability and
+    map/list element nullability included."""
+    validate(dirty_df, SUITE, n_buckets=N_BUCKETS, extract_violation_rows=False,
+             ledger=TableStore(spark, str(tmp_path / "ledger")))
+    got = _parquet_schema(tmp_path / "ledger" / "bucket_stats")
+    assert got.equals(_parquet_schema(LEGACY_LEDGER / "bucket_stats")), got
+
+
+def test_stats_pass_has_no_join_and_one_cached_frame(spark, dirty_df, monkeypatch):
+    """The stats aggregate and the (bucket, cell) count reach the driver
+    as separate small results: neither executed plan holds a join or a
+    broadcast, and the slim frame is the one frame cached when the
+    stats pass is planned (no persisted duplicate-key frame)."""
+    before = _cached_entries(spark)
+    plans, cached = [], []
+
+    def spy(fn, record_cache):
+        def wrapped(*args, **kwargs):
+            if record_cache:
+                cached.append(_cached_entries(spark))
+            out = fn(*args, **kwargs)
+            plans.append(out._jdf.queryExecution().executedPlan().toString())
+            return out
+
+        return wrapped
+
+    monkeypatch.setattr(V, "_stats_pass", spy(V._stats_pass, True))
+    monkeypatch.setattr(D, "cell_counts", spy(D.cell_counts, False))
+    validate(dirty_df, SUITE, n_buckets=N_BUCKETS, extract_violation_rows=False)
+    assert len(plans) == 2 and cached == [before + 1]
+    for plan in plans:
+        assert "Join" not in plan and "BroadcastExchange" not in plan, plan
+
+
+@pytest.mark.parametrize(
+    "with_ledger, cap", [(False, None), (True, None), (True, 2)],
+    ids=["no_ledger", "ledger", "ledger_capped"],
+)
+def test_unique_extraction_reads_dirty_buckets_only(spark, tmp_path, monkeypatch, with_ledger, cap):
+    """A clean input with 3 duplicated keys over 16 buckets returns
+    exactly those keys as unique violations (at most ``cap`` of them
+    when capped), and the extraction's duplicate-key shuffle reads
+    only the buckets that hold them."""
+    clean = generate_tokens(spark, 5000, partitions=4, plant_violations=False)
+    keys = sorted(r.doc_id for r in clean.select("doc_id").orderBy("doc_id").limit(3).collect())
+    df = clean.unionByName(clean.filter(F.col("doc_id").isin(keys)))
+    dirty = {
+        r[BUCKET_COL]
+        for r in with_bucket(df.filter(F.col("doc_id").isin(keys)), "doc_id", N_BUCKETS)
+        .select(BUCKET_COL).collect()
+    }
+    seen = []
+    duplicate_keys = C.duplicate_keys
+
+    def spy(frame, *args, **kwargs):
+        seen.append(frame._jdf.queryExecution().optimizedPlan().toString())
+        return duplicate_keys(frame, *args, **kwargs)
+
+    monkeypatch.setattr(C, "duplicate_keys", spy)
+    ledger = TableStore(spark, str(tmp_path / "ledger")) if with_ledger else None
+    r = validate(df, SUITE, n_buckets=N_BUCKETS, ledger=ledger, max_violations_per_constraint=cap)
+    got = Counter(map(tuple, r.violations.collect()))
+    assert set(got.values()) == {1} and {cid for _, cid in got} == {"unique(doc_id)"}
+    if cap is None:
+        assert sorted(k for k, _ in got) == keys
+    else:
+        assert len(got) == cap and {k for k, _ in got} < set(keys)
+    # the stats pass counts over every bucket, extraction over the dirty ones
+    assert len(seen) == 2
+    assert not re.search(rf"{BUCKET_COL}#\d+ IN \(", seen[0])
+    (in_list,) = re.findall(rf"{BUCKET_COL}#\d+ IN \(([^)]*)\)", seen[1])
+    assert {int(b) for b in in_list.split(",")} == dirty
 
 
 LOCAL_SCHEMA = T.StructType([
