@@ -1072,17 +1072,15 @@ def main(argv: list[str] | None = None) -> int:
         return 0
 
     if args.cmd == "token-drift":
-        from kglids_spark.operators import drift as D
-
-        n_cells = args.nbins + 2
-        base_cells = [0] * n_cells
-        for r in D.token_histogram_df(
-            spark.read.parquet(args.baseline),
-            array_col=args.array_col,
-            vocab_size=args.vocab_size,
-            nbins=args.nbins,
-        ).collect():
-            base_cells[int(r["cell"])] = int(r["n"])
+        base_cells = D.dense_cells(
+            D.token_histogram_df(
+                spark.read.parquet(args.baseline),
+                array_col=args.array_col,
+                vocab_size=args.vocab_size,
+                nbins=args.nbins,
+            ).collect(),
+            args.nbins + 2,
+        )
         out = D.token_distribution_drift(
             spark.read.parquet(args.input),
             base_cells,
@@ -1411,28 +1409,13 @@ def main(argv: list[str] | None = None) -> int:
             import hashlib
             import os
 
-            lp = {
-                "num_perm": 64,
-                "bands": 16,
-                "shingle_n": 3,
-                "seed": 42,
-                "threshold": args.minhash_threshold,
-            }
-            lp_path = os.path.join(args.dedup_ledger, "params.json")
-            if os.path.exists(lp_path):
-                with open(lp_path) as f:
-                    lp_prior = json.load(f)
-                if lp_prior != lp:
-                    raise SystemExit(
-                        f"--dedup-ledger {args.dedup_ledger!r} was built "
-                        f"with {lp_prior}, got {lp} — signatures are "
-                        "incomparable across parameter changes; use a "
-                        "fresh directory or the ledger's parameters"
-                    )
-            else:
-                os.makedirs(args.dedup_ledger, exist_ok=True)
-                with open(lp_path, "w") as f:
-                    json.dump(lp, f)
+            try:
+                DD.pin_ledger_params(
+                    args.dedup_ledger, num_perm=64, bands=16, shingle_n=3, seed=42,
+                    threshold=args.minhash_threshold,
+                )
+            except ValueError as e:
+                raise SystemExit(f"--dedup-ledger: {e}")
             ledger_sig_dir = os.path.join(args.dedup_ledger, "sigs")
             # deterministic shard tag: a re-run of the same input+config
             # overwrites its own shard (idempotent) and is excluded from
@@ -1450,14 +1433,13 @@ def main(argv: list[str] | None = None) -> int:
                     sort_keys=True,
                 ).encode()
             ).hexdigest()[:12]
-            try:
-                prior_sigs = (
-                    spark.read.parquet(ledger_sig_dir)
-                    .filter(F.col("run") != ledger_run_tag)
-                    .select("id", "sig")
-                )
-            except Exception:
-                prior_sigs = None  # first run: no ledger shards yet
+            from kglids_spark.streaming.incremental import _read_epochs
+
+            # None before the first run's shard; any other read failure
+            # raises rather than screening against no prior signatures
+            prior_sigs = _read_epochs(spark, ledger_sig_dir)
+            if prior_sigs is not None:
+                prior_sigs = prior_sigs.filter(F.col("run") != ledger_run_tag).select("id", "sig")
             cur = _stage(
                 "ledger",
                 lambda d: DD.incremental_dedup_minhash(
@@ -1753,7 +1735,7 @@ def main(argv: list[str] | None = None) -> int:
         return 0
 
     if args.cmd == "leakage":
-        from kglids_spark.operators import dedup as D
+        from kglids_spark.operators import dedup as DD
 
         try:
             splits = {
@@ -1771,7 +1753,7 @@ def main(argv: list[str] | None = None) -> int:
             raise SystemExit(
                 f"--num-perm {args.num_perm} must be a positive multiple of --bands {args.bands}"
             )
-        pairs = D.split_leakage_pairs(
+        pairs = DD.split_leakage_pairs(
             spark.read.parquet(args.input),
             text_col=args.text_col,
             id_col=args.id_col,

@@ -1012,6 +1012,30 @@ def minhash_dedup_ledger(
     return minhash_signatures(df, text_col, id_col, num_perm, shingle_n, seed)
 
 
+def pin_ledger_params(root: str, **params) -> None:
+    """Pin a MinHash signature ledger's parameters (num_perm, bands,
+    shingle_n, seed, threshold) in ``root``/params.json on first use;
+    raise ValueError when ``params`` contradict the pinned ones, since
+    signatures hashed under other parameters are incomparable."""
+    import json
+    import os
+
+    path = os.path.join(root, "params.json")
+    if not os.path.exists(path):
+        os.makedirs(root, exist_ok=True)
+        with open(path, "w") as f:
+            json.dump(params, f)
+        return
+    with open(path) as f:
+        prior = json.load(f)
+    if prior != params:
+        raise ValueError(
+            f"MinHash ledger at {root!r} was built with {prior}, got {params} — "
+            "signatures are incomparable across parameter changes; use a fresh "
+            "directory or the ledger's parameters"
+        )
+
+
 def incremental_dedup_minhash(
     new_docs: DataFrame,
     prior_sigs: DataFrame | None,

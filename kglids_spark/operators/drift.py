@@ -3,16 +3,16 @@
 The reference has no drift operator (SURVEY.md §2.4 A14 — ours); the
 north_star pins KS + PSI on `n_tok` histograms vs a baseline snapshot.
 
-Design for 10^12 rows: the expensive part — counting — is a fixed-width
-histogram. Each row maps to one cell index (``cell_expr``, O(1) per row
-whatever nbins is) and ``cell_counts`` counts per (group, cell) with
-map-side partials, so the shuffle carries at most groups × n_cells rows
-of mergeable exact counts. It is the one cell counter: validate collects
-it per bucket and zero-fills each bucket's array on the driver, and
-``histogram_df`` (grouped_drift, the streaming monitor) assembles dense
-arrays from it in-plan. The KS/PSI arithmetic runs driver-side on the
-merged ≤(nbins+2)-long count arrays, which is O(nbins) regardless of
-data size (SURVEY.md §4).
+Design for 10^12 rows: every histogram layout maps a row to one small
+cell code (equi-width ``cell_expr``, token-ID ``token_bucket_expr``,
+the equi-depth bin index), and ``cell_counts`` is the one counter: a
+map-side-combined groupBy per (group, cell), so the shuffle carries at
+most groups × n_cells rows of mergeable exact counts. ``_densify``
+zero-fills each group's counts into a dense array in-plan (grouped
+verdicts, streaming monitors); ``dense_cells`` zero-fills collected
+counts on the driver (global verdicts, the CLI baseline). The KS/PSI
+arithmetic runs on the ≤(nbins+2)-long count arrays, O(nbins)
+regardless of data size (SURVEY.md §4).
 """
 
 from __future__ import annotations
@@ -85,27 +85,23 @@ def cell_expr(spec: HistSpec) -> Column:
     )
 
 
-def cell_counts(df: DataFrame, spec: HistSpec, group_cols: list[str] | None = None) -> DataFrame:
+def cell_counts(df: DataFrame, cell: Column, group_cols: list[str] | None = None) -> DataFrame:
     """(*group_cols, _cell, count): the number of rows per group and
-    ``cell_expr`` cell of ``spec.column``, empty cells absent. A NULL
-    value counts in the NULL ``_cell``. One map-side-combined groupBy,
-    so the shuffle moves at most groups × n_cells rows, whatever the
-    row count."""
-    return df.groupBy(*(group_cols or []), cell_expr(spec).alias("_cell")).count()
+    ``cell`` value (e.g. ``cell_expr(spec)``), empty cells absent. A
+    NULL cell counts in the NULL ``_cell``. One map-side-combined
+    groupBy, so the shuffle moves at most groups × n_cells rows,
+    whatever the row count."""
+    return df.groupBy(*(group_cols or []), cell.alias("_cell")).count()
 
 
-def histogram_df(df: DataFrame, spec: HistSpec, group_cols: list[str] | None = None) -> DataFrame:
-    """(*group_cols, hist: array<long>, n_rows): the exact histogram
-    of ``spec.column`` per group (one row overall without groups), and
-    the group's row count, NULL values included. Each group's
-    ``cell_counts`` are zero-filled into one dense ``n_cells`` array by
-    a second, groups-sized aggregate. A group whose values are all NULL
-    gets a row of zeros, and the global form returns one row even on
-    empty input."""
-    keys = list(group_cols or [])
-    per_group = cell_counts(df, spec, keys).groupBy(*keys).agg(
-        # collect_list skips the NULL-value cell's entry (a map key
-        # cannot be NULL); its rows still count in n_rows
+def _densify(counts: DataFrame, n_cells: int, keys: list[str]) -> DataFrame:
+    """(*keys, hist: array<long>, n_rows) from ``cell_counts`` rows:
+    each group's counts zero-filled into one dense ``n_cells`` array by
+    a second, groups-sized aggregate. The NULL cell is left out of
+    ``hist`` (a map key cannot be NULL) but its rows count in
+    ``n_rows``; the global form (no keys) returns one row even on empty
+    input."""
+    per_group = counts.groupBy(*keys).agg(
         F.map_from_entries(
             F.collect_list(
                 F.when(F.col("_cell").isNotNull(), F.struct("_cell", "count"))
@@ -114,12 +110,32 @@ def histogram_df(df: DataFrame, spec: HistSpec, group_cols: list[str] | None = N
         F.sum("count").alias("n_rows"),
     )
     dense = F.transform(
-        F.sequence(F.lit(0), F.lit(spec.n_cells - 1)),
+        F.sequence(F.lit(0), F.lit(n_cells - 1)),
         lambda i: F.coalesce(F.element_at("_m", i), F.lit(0).cast("long")),
     )
     return per_group.select(
         *keys, dense.alias("hist"), F.coalesce("n_rows", F.lit(0).cast("long")).alias("n_rows")
     )
+
+
+def dense_cells(rows, n_cells: int) -> list[int]:
+    """Driver-side zero-fill: collected ``(cell, count)`` rows into one
+    ``n_cells``-long count list, skipping the NULL cell."""
+    out = [0] * n_cells
+    for cell, n in rows:
+        if cell is not None:
+            out[int(cell)] = int(n)
+    return out
+
+
+def histogram_df(df: DataFrame, spec: HistSpec, group_cols: list[str] | None = None) -> DataFrame:
+    """(*group_cols, hist: array<long>, n_rows): the exact histogram
+    of ``spec.column`` per group (one row overall without groups), and
+    the group's row count, NULL values included. A group whose values
+    are all NULL gets a row of zeros, and the global form returns one
+    row even on empty input."""
+    keys = list(group_cols or [])
+    return _densify(cell_counts(df, cell_expr(spec), keys), spec.n_cells, keys)
 
 
 def merge_histograms(hists: list[list[int]]) -> list[int]:
@@ -272,6 +288,37 @@ def token_bucket_expr(
     )
 
 
+def _token_cell_counts(
+    df: DataFrame,
+    array_col: str,
+    vocab_size: int,
+    nbins: int,
+    group_cols: list[str] | None = None,
+) -> DataFrame:
+    """``cell_counts`` of every non-NULL token id in ``array_col``
+    under ``token_bucket_expr``. NULL arrays and NULL elements
+    contribute nothing; the counts combine map-side into ≤ nbins+2
+    rows per group, so the one Exchange carries a dictionary, never
+    the corpus."""
+    keys = list(group_cols or [])
+    toks = df.select(*keys, F.explode(array_col).alias("_tok")).where(
+        F.col("_tok").isNotNull()
+    )
+    return cell_counts(toks, token_bucket_expr("_tok", vocab_size, nbins), keys)
+
+
+def padded_token_baseline(baseline_cells: list[int], nbins: int) -> list[int]:
+    """A token baseline's cells zero-padded to ``nbins + 2``; longer raises."""
+    n_cells = nbins + 2
+    if len(baseline_cells) > n_cells:
+        raise ValueError(
+            f"baseline has {len(baseline_cells)} cells, expected <= {n_cells} "
+            f"(nbins={nbins} + under/overflow) — nbins/vocab_size must match "
+            "the baseline's"
+        )
+    return list(baseline_cells) + [0] * (n_cells - len(baseline_cells))
+
+
 def token_histogram_df(
     df: DataFrame,
     array_col: str = "tokens",
@@ -282,21 +329,10 @@ def token_histogram_df(
     sequence in the corpus — the vocabulary-usage distribution, which
     the scalar n_tok histogram cannot see (a tokenizer swap, a vocab
     remap, or a corrupted shard shifts WHICH ids occur long before it
-    shifts sequence lengths).
-
-    Plan: explode the token arrays (NULL arrays/elements contribute
-    nothing), bucket each id with integer arithmetic, and count per
-    cell — the per-partition partial aggregation combines map-side
-    into ≤ nbins+2 rows, so the one Exchange carries a dictionary,
-    never the corpus. Empty cells are absent (the driver-side
-    consumers zero-fill)."""
-    tok = F.explode(array_col).alias("_tok")
-    return (
-        df.select(tok)
-        .where(F.col("_tok").isNotNull())
-        .select(token_bucket_expr("_tok", vocab_size, nbins).alias("cell"))
-        .groupBy("cell")
-        .agg(F.count(F.lit(1)).alias("n"))
+    shifts sequence lengths). Empty cells are absent (the driver-side
+    consumers zero-fill with ``dense_cells``)."""
+    return _token_cell_counts(df, array_col, vocab_size, nbins).select(
+        F.col("_cell").alias("cell"), F.col("count").alias("n")
     )
 
 
@@ -314,17 +350,8 @@ def token_distribution_drift(
     or not — missing trailing cells are zero). One dictionary-sized
     aggregation; the statistics are O(nbins) driver math shared with
     the oracled scalar drift path (ks_statistic / psi)."""
-    n_cells = nbins + 2
-    if len(baseline_cells) > n_cells:
-        raise ValueError(
-            f"baseline has {len(baseline_cells)} cells, expected <= {n_cells} "
-            f"(nbins={nbins} + under/overflow) — nbins/vocab_size must match "
-            "the baseline's"
-        )
-    base = list(baseline_cells) + [0] * (n_cells - len(baseline_cells))
-    cur = [0] * n_cells
-    for r in token_histogram_df(df, array_col, vocab_size, nbins).collect():
-        cur[int(r["cell"])] = int(r["n"])
+    base = padded_token_baseline(baseline_cells, nbins)
+    cur = dense_cells(token_histogram_df(df, array_col, vocab_size, nbins).collect(), len(base))
     out = evaluate_drift(cur, base, ks_threshold, psi_threshold)
     out["cells"] = cur
     return out
@@ -362,9 +389,8 @@ def grouped_drift(
         raise ValueError(
             f"baseline has {len(baseline_hist)} cells, spec wants {spec.n_cells}"
         )
-    h = histogram_df(df, spec, group_cols=[group_col])
     return _fold_drift_verdicts(
-        h.withColumn("__cells", F.transform("hist", lambda x: x.cast("double"))),
+        histogram_df(df, spec, group_cols=[group_col]),
         baseline_hist,
         group_col,
         "n_rows",
@@ -384,7 +410,7 @@ def _fold_drift_verdicts(
     eps: float,
 ) -> DataFrame:
     """Shared tail of the grouped drift operators: given a frame with
-    (group_col, __cells: array<double>) and a baseline cell list, emit
+    (group_col, hist: array<long>) and a baseline cell list, emit
     one (group, n, ks, psi, ks_pass, psi_pass) row per group with the
     KS and PSI reductions as zero-shuffle higher-order ``F.aggregate``
     folds over the zipped cell arrays — results never leave the
@@ -395,9 +421,8 @@ def _fold_drift_verdicts(
     if n2 <= 0:
         raise ValueError("baseline histogram is empty")
     base = F.array(*[F.lit(float(v)) for v in baseline_hist])
-    h = h.withColumn(
-        "__n1", F.aggregate("__cells", F.lit(0.0), lambda a, x: a + x)
-    )
+    h = h.withColumn("__cells", F.transform("hist", lambda x: x.cast("double")))
+    h = h.withColumn("__n1", F.aggregate("__cells", F.lit(0.0), lambda a, x: a + x))
     n1 = F.col("__n1")
     pairs = F.zip_with(
         F.col("__cells"),
@@ -456,45 +481,20 @@ def grouped_token_drift(
     token_distribution_drift (a whole-table statement) cannot give and
     the scalar grouped_drift (n_tok histograms) cannot see.
 
-    Plan: one explode into a map-side-combined (group, cell) groupBy —
-    the Exchange carries groups × ≤ nbins+2 rows, never the corpus —
-    then each group's dense cell array assembles zero-shuffle
-    (map_from_entries + a sequence lookup; collect_list per group is
-    bounded by the cell count) and the shared KS/PSI folds reduce
-    in-plan. Cell layout and statistics match the global operator
-    bucket-for-bucket; a group with only NULL arrays never appears in
-    the exploded stream (explode of NULL yields nothing), so absent
-    groups mean no token evidence."""
-    n_cells = nbins + 2
-    if len(baseline_cells) > n_cells:
-        raise ValueError(
-            f"baseline has {len(baseline_cells)} cells, expected <= {n_cells} "
-            f"(nbins={nbins} + under/overflow) — nbins/vocab_size must match "
-            "the baseline's"
-        )
-    base = list(baseline_cells) + [0] * (n_cells - len(baseline_cells))
-    tok = F.explode(array_col).alias("_tok")
-    counts = (
-        df.select(F.col(group_col), tok)
-        .where(F.col("_tok").isNotNull())
-        .select(
-            group_col, token_bucket_expr("_tok", vocab_size, nbins).alias("cell")
-        )
-        .groupBy(group_col, "cell")
-        .agg(F.count(F.lit(1)).alias("n"))
+    Plan: the token cells counted per (group, cell) by ``cell_counts``
+    — the Exchange carries groups × ≤ nbins+2 rows, never the corpus —
+    then each group's dense cell array assembles in-plan (``_densify``)
+    and the shared KS/PSI folds reduce in-plan. Cell layout and
+    statistics match the global operator bucket-for-bucket; a group
+    with only NULL arrays never appears in the exploded stream
+    (explode of NULL yields nothing), so absent groups mean no token
+    evidence."""
+    base = padded_token_baseline(baseline_cells, nbins)
+    h = _densify(
+        _token_cell_counts(df, array_col, vocab_size, nbins, [group_col]),
+        len(base),
+        [group_col],
     )
-    per_group = counts.groupBy(group_col).agg(
-        F.map_from_entries(
-            F.collect_list(F.struct(F.col("cell"), F.col("n")))
-        ).alias("_m")
-    )
-    dense = F.transform(
-        F.sequence(F.lit(0), F.lit(n_cells - 1)),
-        lambda i: F.coalesce(
-            F.element_at("_m", i.cast("long")).cast("double"), F.lit(0.0)
-        ),
-    )
-    h = per_group.withColumn("__cells", dense).drop("_m")
     return _fold_drift_verdicts(
         h, base, group_col, "n_tokens", ks_threshold, psi_threshold, eps
     )
@@ -550,21 +550,15 @@ def equidepth_histogram(df: DataFrame, column: str, edges: list[float]) -> list[
     """Counts per equi-depth bin under ``edges`` (interior edges from
     :func:`equidepth_edges`): bin index = #edges ≤ value, giving
     len(edges)+1 cells with no under/overflow (the outer bins are
-    open). One map-side-combined groupBy over the bin index — the
-    Exchange carries ≤ nbins rows; NULLs are excluded."""
+    open). The bin index is counted by ``cell_counts``, so the
+    Exchange carries ≤ nbins rows; NULLs get a NULL bin and are
+    excluded."""
     col = F.col(column).cast("double")
     idx = sum(
-        ((col >= F.lit(float(e))).cast("int") for e in edges), F.lit(0)
-    ).alias("bin")
-    counts = {
-        int(r["bin"]): int(r["n"])
-        for r in df.where(col.isNotNull())
-        .select(idx)
-        .groupBy("bin")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-    return [counts.get(i, 0) for i in range(len(edges) + 1)]
+        ((col >= F.lit(float(e))).cast("int") for e in edges),
+        F.when(col.isNotNull(), F.lit(0)),
+    )
+    return dense_cells(cell_counts(df, idx).collect(), len(edges) + 1)
 
 
 def equidepth_drift(

@@ -459,7 +459,7 @@ def _validate_impl(
             if unique_cs
             else None
         ),
-        None if drift_spec is None else D.cell_counts(slim_df, drift_spec, [BUCKET_COL]),
+        None if drift_spec is None else D.cell_counts(slim_df, D.cell_expr(drift_spec), [BUCKET_COL]),
         row_cs,
         unique_cs,
         drift_spec,

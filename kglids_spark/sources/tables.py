@@ -108,13 +108,32 @@ class TableStore:
         in the scan node), which is what makes resume-time
         completed-bucket exclusion skip I/O instead of rows
         (tested in tests/test_validate.py::test_partition_pruning)."""
+        return self._commit(table, df, op, partition_by, keep_prior=True)
+
+    def overwrite(
+        self, table: str, df: DataFrame, partition_by: list[str] | None = None
+    ) -> str:
+        # new snapshot replaces all prior ones (readers use the manifest)
+        return self._commit(table, df, "overwrite", partition_by, keep_prior=False)
+
+    def _commit(
+        self,
+        table: str,
+        df: DataFrame,
+        op: str,
+        partition_by: list[str] | None,
+        keep_prior: bool,
+    ) -> str:
+        """Write ``df`` as a new snapshot dir, then swap in a manifest
+        listing the prior snapshots (``keep_prior``) plus the new one
+        with one atomic ``os.replace``."""
         snap_id = uuid.uuid4().hex[:16]
         data_dir = os.path.join(self._tdir(table), "data", snap_id)
         w = df.write.mode("overwrite")
         if partition_by:
             w = w.partitionBy(*partition_by)
         w.parquet(data_dir)
-        manifest = self._load_manifest(table)
+        manifest = self._load_manifest(table) if keep_prior else {"snapshots": []}
         manifest["snapshots"].append(
             {"id": snap_id, "ts": time.time(), "op": op, "path": data_dir,
              **({"partition_by": partition_by} if partition_by else {}),
@@ -122,26 +141,6 @@ class TableStore:
         )
         os.makedirs(self._tdir(table), exist_ok=True)
         tmp = self._manifest_path(table) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f)
-        os.replace(tmp, self._manifest_path(table))
-        return snap_id
-
-    def overwrite(
-        self, table: str, df: DataFrame, partition_by: list[str] | None = None
-    ) -> str:
-        # new snapshot replaces all prior ones (readers use the manifest)
-        snap_id = uuid.uuid4().hex[:16]
-        data_dir = os.path.join(self._tdir(table), "data", snap_id)
-        w = df.write.mode("overwrite")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(data_dir)
-        manifest = {"snapshots": [{"id": snap_id, "ts": time.time(), "op": "overwrite", "path": data_dir,
-                                   **({"partition_by": partition_by} if partition_by else {}),
-                                   **_bucketing_props(df)}]}
-        tmp = self._manifest_path(table) + ".tmp"
-        os.makedirs(self._tdir(table), exist_ok=True)
         with open(tmp, "w") as f:
             json.dump(manifest, f)
         os.replace(tmp, self._manifest_path(table))

@@ -78,7 +78,8 @@ def _write_epoch(frame: DataFrame, epoch_id: int, path: str) -> None:
 
 
 def _read_epochs(spark: SparkSession, path: str) -> DataFrame | None:
-    """Earlier epochs' output at ``path``, or None before the first
+    """Earlier epochs' output at ``path`` (also ``prepare
+    --dedup-ledger``'s run shards), or None before the first
     epoch has written any: the folder is missing, or holds no data file
     yet (a crash inside epoch 0's first write). Any other failure — a
     torn footer, a listing error — raises: reading it as "no earlier
@@ -392,33 +393,12 @@ def near_dup_filter_stream(
     against an existing ledger produces incomparable signatures
     (minhash_dedup_ledger docstring), so it is pinned in a params.json
     the stream refuses to contradict."""
-    import json
-    import os
-
     from kglids_spark.operators import dedup as DD
 
-    params = {
-        "num_perm": num_perm,
-        "bands": bands,
-        "shingle_n": shingle_n,
-        "seed": seed,
-        "threshold": threshold,
-    }
-    params_path = os.path.join(out_dir, "params.json")
-    if os.path.exists(params_path):
-        with open(params_path) as f:
-            prior = json.load(f)
-        if prior != params:
-            raise ValueError(
-                f"near_dup_filter_stream: ledger at {out_dir} was built "
-                f"with {prior}, got {params} — signatures are "
-                "incomparable across parameter changes; use a fresh "
-                "out_dir or the ledger's parameters"
-            )
-    else:
-        os.makedirs(out_dir, exist_ok=True)
-        with open(params_path, "w") as f:
-            json.dump(params, f)
+    DD.pin_ledger_params(
+        out_dir, num_perm=num_perm, bands=bands, shingle_n=shingle_n, seed=seed,
+        threshold=threshold,
+    )
 
     ledger_dir = f"{out_dir}/sig_ledger"
     docs_dir = f"{out_dir}/docs"
@@ -561,10 +541,7 @@ def token_drift_monitor_stream(
     the driver)."""
     from kglids_spark.operators import drift as D
 
-    if len(baseline_cells) > nbins + 2:
-        raise ValueError(
-            f"baseline has {len(baseline_cells)} cells, expected <= {nbins + 2}"
-        )
+    baseline_cells = D.padded_token_baseline(baseline_cells, nbins)
 
     def process_grouped(batch_df: DataFrame, epoch_id: int) -> None:
         g = D.grouped_token_drift(

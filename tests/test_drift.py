@@ -370,13 +370,11 @@ def test_grouped_token_drift_validation_and_nulls(spark):
     assert "b" not in got and got["a"].n_tokens == 2
 
 
-def test_cli_token_drift_by_feed(spark, tmp_path):
+def test_cli_token_drift_by_feed(spark, tmp_path, capsys):
     """token-drift --by source: the remapped feed appears in the
     failing map, clean feeds do not, and the gate trips on any
     failing feed."""
-    import json as J
-    import subprocess
-    import sys
+    from kglids_spark.cli import main
 
     base = spark.createDataFrame(
         [(i, "a", [int((i * 37 + j) % 50257) for j in range(8)]) for i in range(1500)],
@@ -395,18 +393,14 @@ def test_cli_token_drift_by_feed(spark, tmp_path):
     base.write.mode("overwrite").parquet(bdir)
     cur.write.mode("overwrite").parquet(cdir)
 
-    r = subprocess.run(
-        [sys.executable, "-m", "kglids_spark.cli", "token-drift",
-         "--input", cdir, "--baseline", bdir, "--by", "source",
-         "--fail-on-drift", "--cpus", "4"],
-        capture_output=True, text=True,
-    )
-    out = J.loads(r.stdout.strip().splitlines()[-1])
+    rc = main(["token-drift", "--input", cdir, "--baseline", bdir, "--by", "source",
+               "--fail-on-drift", "--cpus", "4"])
+    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     g = out["group"]
     assert g["groups_total"] == 2
     failing = [f["group"] for f in g["failing"]]
     assert "bad" in failing and "a" not in failing
-    assert r.returncode == 2  # the failing feed trips the gate
+    assert rc == 2  # the failing feed trips the gate
 
 
 def test_token_drift_monitor_stream_grouped(spark, tmp_path):

@@ -229,25 +229,17 @@ def test_top_collocations_deterministic_and_validated(spark):
         FR.top_collocations(df, k=0)
 
 
-def test_cli_token_info(tmp_path):
+def test_cli_token_info(spark, tmp_path, capsys):
     import json as J
-    import subprocess
-    import sys
 
-    def run(*extra):
-        return subprocess.run(
-            [sys.executable, "-m", "kglids_spark.cli", *extra],
-            capture_output=True, text=True,
-        )
+    from kglids_spark.cli import main
 
     toks = str(tmp_path / "ti_tokens")
-    assert (
-        run("generate", "--rows", "3000", "--out", toks, "--no-violations").returncode
-        == 0
-    )
-    r = run("token-info", "--input", toks, "--cpus", "4", "--seq-lens", "64,256")
-    assert r.returncode == 0, r.stdout[-500:] + r.stderr[-500:]
-    out = J.loads(r.stdout.strip().splitlines()[-1])
+    assert main(["generate", "--rows", "3000", "--out", toks, "--no-violations"]) == 0
+    capsys.readouterr()
+    rc = main(["token-info", "--input", toks, "--cpus", "4", "--seq-lens", "64,256"])
+    out = J.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert rc == 0, out
     assert out["n_docs"] == 3000
     # quantiles ordered; KL nonnegative (Gibbs)
     e = out["entropy_p10_p50_p90"]
@@ -259,5 +251,5 @@ def test_cli_token_info(tmp_path):
     assert curve[256]["tokens_kept_truncate"] >= curve[64]["tokens_kept_truncate"]
     assert curve[256]["n_chunks"] <= curve[64]["n_chunks"]
     # malformed lengths are usage errors
-    r = run("token-info", "--input", toks, "--seq-lens", "64,x")
-    assert r.returncode != 0 and "seq-lens" in (r.stderr + r.stdout)
+    with pytest.raises(SystemExit, match="seq-lens"):
+        main(["token-info", "--input", toks, "--seq-lens", "64,x"])

@@ -95,23 +95,21 @@ def test_partition_invariance(pair):
     assert a == b
 
 
-def test_cli_diff_and_element_range(tmp_path, spark):
+def test_cli_diff_and_element_range(tmp_path, spark, capsys):
     """spark-submit surfaces: `diff` exits 2 on --fail-on-diff with
     perturbations and 0 on identical tables; --element-range rides the
     validate suite and flags the tightened vocabulary bound."""
     import json as J
-    import subprocess
-    import sys
 
-    def run(*extra):
-        return subprocess.run(
-            [sys.executable, "-m", "kglids_spark.cli", *extra],
-            capture_output=True, text=True,
-        )
+    from kglids_spark.cli import main
+
+    def run(*argv):
+        rc = main(list(argv))
+        return rc, J.loads(capsys.readouterr().out.strip().splitlines()[-1])
 
     a = str(tmp_path / "tA")
     assert run("generate", "--rows", "5000", "--out", a,
-               "--no-violations").returncode == 0
+               "--no-violations")[0] == 0
 
     b = str(tmp_path / "tB")
     df = spark.read.parquet(a)
@@ -125,10 +123,9 @@ def test_cli_diff_and_element_range(tmp_path, spark):
     ).write.mode("overwrite").parquet(b)
 
     out_dir = str(tmp_path / "dd")
-    r = run("diff", "--left", a, "--right", b, "--out", out_dir,
-            "--fail-on-diff", "--cpus", "4")
-    assert r.returncode == 2, r.stdout[-500:] + r.stderr[-500:]
-    res = J.loads(r.stdout.strip().splitlines()[-1])
+    rc, res = run("diff", "--left", a, "--right", b, "--out", out_dir,
+                  "--fail-on-diff", "--cpus", "4")
+    assert rc == 2, res
     assert res["verdicts"]["mismatch"] > 0
     assert res["verdicts"]["match"] + res["verdicts"]["mismatch"] == 5000
     import duckdb
@@ -138,16 +135,16 @@ def test_cli_diff_and_element_range(tmp_path, spark):
     ).fetchone()[0]
     assert n == res["n_non_match"]
 
-    r = run("diff", "--left", a, "--right", a, "--fail-on-diff", "--cpus", "4")
-    assert r.returncode == 0
-    assert J.loads(r.stdout.strip().splitlines()[-1])["verdicts"] == {"match": 5000}
+    rc, res = run("diff", "--left", a, "--right", a, "--fail-on-diff", "--cpus", "4")
+    assert rc == 0
+    assert res["verdicts"] == {"match": 5000}
 
-    r = run("validate", "--input", a, "--cpus", "4", "--no-violation-rows",
-            "--element-range", "tokens 0 49000")
-    assert r.returncode == 0
-    verd = J.loads(r.stdout.strip().splitlines()[-1])["verdict_summary"]
+    rc, res = run("validate", "--input", a, "--cpus", "4", "--no-violation-rows",
+                  "--element-range", "tokens 0 49000")
+    assert rc == 0
+    verd = res["verdict_summary"]
     assert verd["element_range(tokens)"]["passed"] is False
 
-    r = run("validate", "--input", a, "--cpus", "4", "--no-violation-rows",
-            "--element-range", "tokens zero 49000")
-    assert r.returncode != 0 and "--element-range" in (r.stderr + r.stdout)
+    with pytest.raises(SystemExit, match="--element-range"):
+        main(["validate", "--input", a, "--cpus", "4", "--no-violation-rows",
+              "--element-range", "tokens zero 49000"])

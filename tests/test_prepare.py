@@ -273,6 +273,24 @@ def test_prepare_dedup_ledger_across_runs(spark, docs_path, tmp_path, capsys):
         )
 
 
+def test_prepare_dedup_ledger_corrupt_shard_fails(spark, docs_path, tmp_path, capsys):
+    """An unreadable signature shard fails the run: the ledger is never
+    read as empty (which would ship near-dups of earlier runs), and the
+    failed run adds no shard of its own."""
+    ledger = tmp_path / "ledger"
+    _run(docs_path, tmp_path / "r1", capsys, "--dedup-ledger", str(ledger),
+         "--skip", "tokenize,pack")
+    (shard,) = (ledger / "sigs").iterdir()
+    for f in shard.iterdir():
+        f.unlink()
+    (shard / "part-0.parquet").write_bytes(b"not a parquet file")
+    # another gopher setting gives the second run its own shard tag
+    with pytest.raises(Exception, match="(?i)not a parquet file"):
+        _run(docs_path, tmp_path / "r2", capsys, "--dedup-ledger", str(ledger),
+             "--skip", "tokenize,pack", "--gopher-threshold", "min_words=2")
+    assert list((ledger / "sigs").iterdir()) == [shard]
+
+
 def test_prepare_strip_html_stage(spark, tmp_path, capsys):
     """--strip-html extracts text before any other stage reads it:
     markup-wrapped docs pass gopher (tags would otherwise sink the

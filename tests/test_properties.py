@@ -449,3 +449,86 @@ def test_histogram_df_empty_input_is_one_zero_row(spark):
     spec = D.HistSpec("v", lo=0.0, hi=1.0, nbins=4)
     got = D.histogram_df(spark.createDataFrame([], "v double"), spec).collect()
     assert [(list(r.hist), r.n_rows) for r in got] == [([0] * spec.n_cells, 0)]
+
+
+# ---------------------------------------------------------------------------
+# token-ID and equi-depth cells: the cell_counts layouts against references
+
+
+def _token_cell(i: int, vocab_size: int, nbins: int) -> int:
+    if i < 0:
+        return 0
+    if i >= vocab_size:
+        return nbins + 1
+    return i * nbins // vocab_size + 1
+
+
+_token_arrays = st.lists(
+    st.one_of(
+        st.none(),
+        st.lists(st.one_of(st.none(), st.integers(min_value=-3, max_value=1100)), max_size=6),
+    ),
+    max_size=12,
+)
+
+
+@settings(max_examples=10, deadline=None)
+@given(st.integers(min_value=1, max_value=1000), st.integers(min_value=1, max_value=70), _token_arrays)
+def test_token_cells_match_integer_reference(spark, vocab_size, nbins, arrays):
+    """token_histogram_df and grouped_token_drift count every non-NULL
+    id in cell floor(id*nbins/vocab)+1 (0 below, nbins+1 at or above
+    vocab_size); NULL arrays and NULL elements count nowhere, and a
+    group without any id has no verdict row."""
+    from kglids_spark.operators import drift as D
+
+    groups = ["a", "b", None]
+    rows = [(groups[i % 3], arr) for i, arr in enumerate(arrays)]
+    df = spark.createDataFrame(rows, "g string, tokens array<long>")
+
+    def ref(arrs):
+        cells = [0] * (nbins + 2)
+        for arr in arrs:
+            for t in arr or []:
+                if t is not None:
+                    cells[_token_cell(t, vocab_size, nbins)] += 1
+        return cells
+
+    glob = ref(arrays)
+    got = {r.cell: r.n for r in D.token_histogram_df(df, vocab_size=vocab_size, nbins=nbins).collect()}
+    assert got == {c: n for c, n in enumerate(glob) if n}
+
+    base = [n + 1 for n in glob]
+    per_group = {
+        r.g: r
+        for r in D.grouped_token_drift(df, base, "g", vocab_size=vocab_size, nbins=nbins).collect()
+    }
+    want = {g: ref([a for gg, a in rows if gg == g]) for g in groups}
+    assert set(per_group) == {g for g, cells in want.items() if sum(cells)}
+    for g, r in per_group.items():
+        v = D.evaluate_drift(want[g], base)
+        assert r.n_tokens == sum(want[g])
+        assert r.ks == pytest.approx(v["ks"], abs=1e-12)
+        assert r.psi == pytest.approx(v["psi"], abs=1e-9)
+
+
+@settings(max_examples=10, deadline=None)
+@given(
+    st.lists(st.floats(min_value=-100, max_value=100), max_size=6),
+    st.lists(st.one_of(st.none(), st.floats(min_value=-120, max_value=120)), max_size=20),
+)
+def test_equidepth_histogram_matches_bisect_reference(spark, edges, values):
+    """equidepth_histogram's bin is bisect_right(edges, v) — the count
+    of edges <= v, so a value on an edge goes up — and NULLs count in
+    no bin."""
+    import bisect
+
+    from kglids_spark.operators import drift as D
+
+    edges = sorted(edges)
+    values += [e for e in edges[:2]]
+    want = [0] * (len(edges) + 1)
+    for v in values:
+        if v is not None:
+            want[bisect.bisect_right(edges, v)] += 1
+    df = spark.createDataFrame([(v,) for v in values], "v double")
+    assert D.equidepth_histogram(df, "v", edges) == want

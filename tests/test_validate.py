@@ -739,28 +739,25 @@ def test_suite_json_roundtrip_preserves_hash():
     assert open_ref[0].params["valid_values"] is None
 
 
-def test_cli_quarantine_and_exit_code(tmp_path):
+def test_cli_quarantine_and_exit_code(spark, tmp_path, capsys):
     """CI surface: --fail-on-violation exits 2 on planted violations,
     0 on clean data; --quarantine writes the full offending records."""
     import json as J
-    import subprocess
-    import sys
 
-    def run(*extra):
-        return subprocess.run(
-            [sys.executable, "-m", "kglids_spark.cli", *extra],
-            capture_output=True, text=True,
-        )
+    from kglids_spark.cli import main
+
+    def run(*argv):
+        rc = main(list(argv))
+        return rc, J.loads(capsys.readouterr().out.strip().splitlines()[-1])
 
     gen = str(tmp_path / "q_tokens")
-    r = run("generate", "--rows", "20000", "--out", gen)
-    assert r.returncode == 0
+    rc, _ = run("generate", "--rows", "20000", "--out", gen)
+    assert rc == 0
     qdir = str(tmp_path / "quarantine")
-    r = run("validate", "--input", gen, "--cpus", "4",
-            "--max-violations", "5", "--quarantine", qdir,
-            "--fail-on-violation")
-    assert r.returncode == 2, r.stdout[-500:] + r.stderr[-500:]
-    out = J.loads(r.stdout.strip().splitlines()[-1])
+    rc, out = run("validate", "--input", gen, "--cpus", "4",
+                  "--max-violations", "5", "--quarantine", qdir,
+                  "--fail-on-violation")
+    assert rc == 2, out
     assert any(not v["passed"] for v in out["verdict_summary"].values())
     import duckdb
 
@@ -768,10 +765,10 @@ def test_cli_quarantine_and_exit_code(tmp_path):
     assert 0 < n <= 5 * len(out["verdict_summary"])
 
     clean = str(tmp_path / "q_clean")
-    assert run("generate", "--rows", "5000", "--out", clean, "--no-violations").returncode == 0
-    r = run("validate", "--input", clean, "--cpus", "4",
-            "--no-violation-rows", "--fail-on-violation")
-    assert r.returncode == 0, r.stdout[-500:] + r.stderr[-500:]
+    assert run("generate", "--rows", "5000", "--out", clean, "--no-violations")[0] == 0
+    rc, out = run("validate", "--input", clean, "--cpus", "4",
+                  "--no-violation-rows", "--fail-on-violation")
+    assert rc == 0, out
 
 
 def test_suite_from_json_rejects_unknown_kind():
@@ -1049,28 +1046,20 @@ def test_drift_by_absent_by_default(tokens_df):
     assert res.group_drift is None
 
 
-def test_cli_drift_by_section(tmp_path):
+def test_cli_drift_by_section(spark, tmp_path, capsys):
     """--drift-by adds a bounded group_drift section: exact totals,
     failing groups capped; self-baseline run passes every feed."""
     import json as J
-    import subprocess
-    import sys
+
+    from kglids_spark.cli import main
 
     gen = str(tmp_path / "gd_tokens")
-    r = subprocess.run(
-        [sys.executable, "-m", "kglids_spark.cli", "generate",
-         "--rows", "20000", "--out", gen, "--no-violations"],
-        capture_output=True, text=True,
-    )
-    assert r.returncode == 0
-    r = subprocess.run(
-        [sys.executable, "-m", "kglids_spark.cli", "validate",
-         "--input", gen, "--cpus", "4", "--no-violation-rows",
-         "--drift-by", "source", "--drift-by-cap", "3"],
-        capture_output=True, text=True,
-    )
-    assert r.returncode == 0, r.stdout[-500:] + r.stderr[-500:]
-    out = J.loads(r.stdout.strip().splitlines()[-1])
+    assert main(["generate", "--rows", "20000", "--out", gen, "--no-violations"]) == 0
+    capsys.readouterr()
+    rc = main(["validate", "--input", gen, "--cpus", "4", "--no-violation-rows",
+               "--drift-by", "source", "--drift-by-cap", "3"])
+    out = J.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert rc == 0, out
     gd = out["group_drift"]
     assert gd["group_col"] == "source"
     assert gd["groups_total"] == len(SOURCES)
@@ -1085,37 +1074,29 @@ def test_cli_drift_by_section(tmp_path):
     assert out["verdict_summary"]["drift_psi(n_tok)"]["passed"]
 
 
-def test_cli_outlier_fence_verdict(tmp_path):
+def test_cli_outlier_fence_verdict(spark, tmp_path, capsys):
     """--outlier-fence adds a Tukey-fence verdict: a clean lognormal
     n_tok column passes at a loose rate and fails at rate 0; a second
     spec for the same column, a malformed spec, and an all-NULL column
     (nothing checked) fail."""
     import json as J
-    import subprocess
-    import sys
 
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    def run(*extra):
-        return subprocess.run(
-            [sys.executable, "-m", "kglids_spark.cli", *extra],
-            capture_output=True, text=True,
-        )
+    from kglids_spark.cli import main
 
     def fence(inp, spec, *extra):
-        r = run(
+        rc = main([
             "validate", "--input", inp, "--cpus", "4", "--no-violation-rows",
             "--outlier-fence", spec, *extra,
-        )
-        assert r.returncode == 0, r.stdout[-500:] + r.stderr[-500:]
-        return J.loads(r.stdout.strip().splitlines()[-1])
+        ])
+        out = J.loads(capsys.readouterr().out.strip().splitlines()[-1])
+        assert rc == 0, out
+        return out
 
     clean = str(tmp_path / "of_clean")
-    assert (
-        run("generate", "--rows", "5000", "--out", clean, "--no-violations").returncode
-        == 0
-    )
+    assert main(["generate", "--rows", "5000", "--out", clean, "--no-violations"]) == 0
     loose = fence(clean, "n_tok 1.5 0.5")["verdict_summary"]["outlier_fence(n_tok)"]
     assert loose["passed"] is True
     out = fence(clean, "n_tok 1.5 0.0")
@@ -1128,12 +1109,11 @@ def test_cli_outlier_fence_verdict(tmp_path):
         "outlier_fence_lo(n_tok)"
     ]
     for specs in (["n_tok 1.5 0.5", "n_tok 3 0.0"], ["n_tok nope 0.01"]):
-        r = run(
-            "validate", "--input", clean, "--cpus", "4", "--no-violation-rows",
-            *[x for spec in specs for x in ("--outlier-fence", spec)],
-        )
-        assert r.returncode != 0
-        assert "outlier-fence" in (r.stderr + r.stdout)
+        with pytest.raises(SystemExit, match="outlier-fence"):
+            main([
+                "validate", "--input", clean, "--cpus", "4", "--no-violation-rows",
+                *[x for spec in specs for x in ("--outlier-fence", spec)],
+            ])
 
     # an all-NULL column: the rate over nothing must not pass
     null_dir = tmp_path / "of_null"
@@ -1204,36 +1184,28 @@ def test_conditional_fd_json_roundtrip_and_cid():
         C.functional_dependency(["a"], "c", where="   ")
 
 
-def test_cli_conditional_fd_spec(tmp_path):
+def test_cli_conditional_fd_spec(spark, tmp_path, capsys):
     import json as J
-    import subprocess
-    import sys
 
-    def run(*extra):
-        return subprocess.run(
-            [sys.executable, "-m", "kglids_spark.cli", *extra],
-            capture_output=True, text=True,
-        )
+    from kglids_spark.cli import main
 
     clean = str(tmp_path / "cfd_clean")
-    assert (
-        run("generate", "--rows", "5000", "--out", clean, "--no-violations").returncode
-        == 0
-    )
-    r = run(
+    assert main(["generate", "--rows", "5000", "--out", clean, "--no-violations"]) == 0
+    capsys.readouterr()
+    rc = main([
         "validate", "--input", clean, "--cpus", "4", "--no-violation-rows",
         "--fd", "doc_id -> source @@ n_tok % 2 = 0",
-    )
-    assert r.returncode == 0, r.stdout[-500:] + r.stderr[-500:]
-    out = J.loads(r.stdout.strip().splitlines()[-1])
+    ])
+    out = J.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert rc == 0, out
     v = out["verdict_summary"]["fd(doc_id -> source | n_tok % 2 = 0)"]
     assert v["passed"] is True
     # empty predicate after @@ is a usage error
-    r = run(
-        "validate", "--input", clean, "--cpus", "4", "--no-violation-rows",
-        "--fd", "doc_id -> source @@  ",
-    )
-    assert r.returncode != 0 and "empty predicate" in (r.stderr + r.stdout)
+    with pytest.raises(SystemExit, match="empty predicate"):
+        main([
+            "validate", "--input", clean, "--cpus", "4", "--no-violation-rows",
+            "--fd", "doc_id -> source @@  ",
+        ])
 
 
 def test_compliance_ratio_verdict_and_resume(spark, tmp_path):
@@ -1321,37 +1293,29 @@ def test_compliance_grouped_verdicts_ratio(spark):
     assert got[("bad", "not_null(doc_id)")].passed
 
 
-def test_cli_compliance_spec(tmp_path):
+def test_cli_compliance_spec(spark, tmp_path, capsys):
     import json as J
-    import subprocess
-    import sys
 
-    def run(*extra):
-        return subprocess.run(
-            [sys.executable, "-m", "kglids_spark.cli", *extra],
-            capture_output=True, text=True,
-        )
+    from kglids_spark.cli import main
 
     clean = str(tmp_path / "comp_clean")
-    assert (
-        run("generate", "--rows", "5000", "--out", clean, "--no-violations").returncode
-        == 0
-    )
-    r = run(
+    assert main(["generate", "--rows", "5000", "--out", clean, "--no-violations"]) == 0
+    capsys.readouterr()
+    rc = main([
         "validate", "--input", clean, "--cpus", "4", "--no-violation-rows",
         "--compliance", "n_tok > 0 @@ n_tok @@ 0.5",
         "--compliance", "n_tok > 100000 @@ n_tok @@ 0.99",
-    )
-    assert r.returncode == 0, r.stdout[-500:] + r.stderr[-500:]
-    out = J.loads(r.stdout.strip().splitlines()[-1])
+    ])
+    out = J.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert rc == 0, out
     vs = out["verdict_summary"]
     assert vs["compliance(n_tok > 0>=0.5)"]["passed"] is True
     assert vs["compliance(n_tok > 100000>=0.99)"]["passed"] is False
-    r = run(
-        "validate", "--input", clean, "--cpus", "4", "--no-violation-rows",
-        "--compliance", "n_tok > 0 @@ n_tok @@ nope",
-    )
-    assert r.returncode != 0 and "MIN_RATIO" in (r.stderr + r.stdout)
+    with pytest.raises(SystemExit, match="MIN_RATIO"):
+        main([
+            "validate", "--input", clean, "--cpus", "4", "--no-violation-rows",
+            "--compliance", "n_tok > 0 @@ n_tok @@ nope",
+        ])
 
 
 def test_compliance_exact_boundary_passes(spark):
